@@ -7,9 +7,9 @@
 
 `trending` runs the flagship batch query and writes the reference's
 {items, datetime} result document once. `stream` replays the events
-table through the 15-min/10-s sliding-window pipeline with the
-foreachBatch top-k file sink — the full R1–R11 loop. `query` runs any
-registered operator and prints rows.
+table through the 15-min/10-s windowed pipeline (10-s panes, summed
+by the foreachBatch top-k file sink) — the full R1–R11 loop. `query`
+runs any registered operator and prints rows.
 """
 
 from __future__ import annotations
@@ -113,6 +113,13 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     args = p.parse_args(argv)
+    if args.cmd == "stream":
+        from .streaming.pipeline import check_window
+
+        try:
+            check_window(args.window, args.slide)
+        except ValueError as e:
+            p.error(str(e))
 
     from .queries import QUERIES
     from .session import get_spark
@@ -160,7 +167,7 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         from .sources import load_events_stream
-        from .streaming.pipeline import top_k_per_window, windowed_counts
+        from .streaming.pipeline import windowed_counts
         from .streaming.sink import make_topk_file_sink
 
         events = load_events_stream(spark, args.sf_dir).select(
@@ -174,9 +181,9 @@ def main(argv: list[str] | None = None) -> int:
             from .streaming import telemetry
 
             rec = telemetry.attach(spark)
-        # The sink itself selects the latest window and takes the
+        # The sink sums the trailing window's panes and takes the
         # top-5 (≙ foreachRDD(save), SparkApplication.scala:92-95).
-        emit = make_topk_file_sink(args.out, k=5)
+        emit = make_topk_file_sink(args.out, k=5, window=args.window)
         query = (
             counts.writeStream.outputMode("update")
             .foreachBatch(emit)

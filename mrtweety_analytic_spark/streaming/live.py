@@ -47,8 +47,9 @@ def start_live_topk(
     checkpoint: str | None = None,
 ) -> StreamingQuery:
     """Start (and return, NOT await) the live R1-R10 chain:
-    tweet-JSON stream -> parse/explode -> blacklist -> sliding
-    case-folded count -> per-trigger top-k file document.
+    tweet-JSON stream -> parse/explode -> blacklist -> case-folded
+    pane count -> per-trigger top-k file document over the trailing
+    window.
 
     The caller owns the lifecycle: `q.awaitTermination()` for the
     reference's run-forever mode, or await with a timeout + `q.stop()`
@@ -70,7 +71,7 @@ def start_live_topk(
     )
     writer = (
         counts.writeStream.outputMode("update")
-        .foreachBatch(make_topk_file_sink(out_path, k=k))
+        .foreachBatch(make_topk_file_sink(out_path, k=k, window=window))
         .trigger(processingTime=trigger)
     )
     if checkpoint is not None:

@@ -7,8 +7,10 @@ and atomically overwrite ONE result file
 web/analytic.json: at most 5 items, counts descending, datetime is the
 batch wall-clock as an ISO-8601 offset string).
 
-Driver-side by design: the payload is ≤ k rows — the only part of the
-pipeline that is *supposed* to collect.
+Driver-side by design: the sink collects each trigger's update-mode
+pane rows (the (pane, key) counts that changed — a few hundred per
+trigger on the flagship replay) and keeps the trailing window's panes
+to sum them; the written payload is ≤ k rows.
 """
 
 from __future__ import annotations
@@ -16,10 +18,11 @@ from __future__ import annotations
 import json
 import os
 import tempfile
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .pipeline import WINDOW_DURATION, duration_seconds
 
 
 def render_document(rows, now: datetime | None = None) -> str:
@@ -60,110 +63,77 @@ def write_result_file(path: str, payload: str) -> None:
 
 
 class TopKFileSink:
-    """foreachBatch hook writing the trailing full-window top-k.
+    """foreachBatch hook writing the top-k of the trailing window.
 
-    Two correctness requirements drive the design (both found in the
-    round-1 review):
+    Input: `windowed_counts` pane rows (w, key, count, hashtag) in
+    update output mode. Two requirements drive the design (both found
+    in the round-1 review):
 
-    * **Window selection.** With a sliding window (window > slide) the
-      row set contains ~window/slide concurrent windows. ``max(w.start)``
-      is the window that just OPENED — it holds only the last ~slide of
-      events. The reference's ``reduceByKeyAndWindow(Minutes(15))``
-      (SparkApplication.scala:88) reports the TRAILING 15 minutes: the
-      window with the greatest ``w.end`` that is ≤ the current slide
-      boundary. The boundary is inferred from the data as
-      ``max(w.start) + slide`` (the newest window's start is the
-      slide-grid floor of the newest event time).
+    * **Window selection.** The reference's
+      ``reduceByKeyAndWindow(Minutes(15))`` (SparkApplication.scala:88)
+      reports the TRAILING window: the one ending at the slide boundary
+      after the newest event, not a window that just opened. The
+      boundary is the newest pane's ``w.end`` (the slide-grid floor of
+      the newest event time plus the pane width the row carries), and
+      the document sums the panes that start in
+      ``[boundary - window, boundary)``. Empty slides leave no pane,
+      so gaps in the pane grid need no special case.
 
     * **Delta merge.** In update output mode each micro-batch carries
-      only the (window, key) rows whose counts changed this trigger; a
+      only the (pane, key) rows whose counts changed this trigger; a
       key with no new events would silently drop out of the top-k. The
-      sink therefore merges deltas into a per-window count cache across
-      triggers and computes the top-k over the merged view — the same
-      full-window counts the reference recomputes each batch.
+      sink therefore merges the rows (each a pane's full count) into a
+      pane cache across triggers and computes the top-k over the merged
+      view — the same full-window counts the reference recomputes each
+      batch.
 
-    Scale envelope: the cache holds the latest count per (live window,
-    key) — O(window/slide × |distinct keys in window|), the same state
-    the reference retained as ~90 windowed RDDs, and strictly smaller
-    than complete output mode (which disables watermark eviction and
-    replays ALL windows every trigger). Windows whose end has passed
-    the slide boundary are evicted. Per-trigger driver traffic is the
-    delta row set, already bounded by the state-store update volume.
+    Scale envelope: the cache holds one count per (live pane, key) —
+    O(window/slide × |distinct keys per pane|), never more than the
+    distinct (key, event-slide) pairs of one window. Panes older than
+    the trailing window are evicted each trigger. Per-trigger driver
+    traffic is the update-mode row set: the (pane, key) pairs that
+    received events this trigger, not the ≤ k-row document.
     """
 
-    def __init__(self, path: str, k: int = 5, slide_seconds: float | None = None):
+    def __init__(self, path: str, k: int = 5, window: str = WINDOW_DURATION):
         self.path = path
         self.k = k
-        self.slide_seconds = slide_seconds
-        # (window_start, window_end) -> {key -> (count, display_hashtag)}
-        self._windows: dict[tuple, dict[str, tuple[int, str]]] = {}
-
-    def _infer_slide(self) -> float | None:
-        if self.slide_seconds is not None:
-            return self.slide_seconds
-        starts = sorted({s for (s, _e) in self._windows})
-        if len(starts) >= 2:
-            return min(
-                (b - a).total_seconds() for a, b in zip(starts, starts[1:])
-            )
-        if starts:  # single window seen: tumbling, slide == duration
-            s, e = next(iter(self._windows))
-            return (e - s).total_seconds()
-        return None
+        self.window = timedelta(seconds=duration_seconds(window))
+        # pane_start -> {key -> (count, display_hashtag)}
+        self._panes: dict[datetime, dict[str, tuple[int, str]]] = {}
+        self._boundary: datetime | None = None
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        rows = batch_df.select(
-            F.col("w.start").alias("ws"),
-            F.col("w.end").alias("we"),
-            "key",
-            "count",
-            "hashtag",
-        ).collect()
-        if not rows and not self._windows:
-            return
-        for r in rows:
-            self._windows.setdefault((r["ws"], r["we"]), {})[r["key"]] = (
+        for r in batch_df.collect():
+            ps, pe = r["w"]
+            self._panes.setdefault(ps, {})[r["key"]] = (
                 int(r["count"]),
                 r["hashtag"],
             )
-        slide = self._infer_slide()
-        if slide is None:
+            if self._boundary is None or pe > self._boundary:
+                self._boundary = pe
+        if self._boundary is None:
             return
-        from datetime import timedelta
-
-        boundary = max(s for (s, _e) in self._windows) + timedelta(
-            seconds=slide
-        )
-        complete = [we for (_ws, we) in self._windows if we <= boundary]
-        if not complete:
-            # All live windows still open (can happen on a replay whose
-            # first batch spans < one slide): keep the last good file.
-            return
-        trailing_end = max(complete)
-        trailing = max(
-            (w for w in self._windows if w[1] == trailing_end),
-            key=lambda w: w[0],
-        )
-        counts = self._windows[trailing]
-        # Evict windows fully in the past — state stays O(window/slide).
-        self._windows = {
-            w: c for w, c in self._windows.items() if w[1] >= trailing_end
-        }
-        top = sorted(
-            (
-                {"count": n, "hashtag": disp, "key": key}
-                for key, (n, disp) in counts.items()
-            ),
-            key=lambda r: (-r["count"], r["key"]),
-        )[: self.k]
-        write_result_file(self.path, render_document(top))
+        start = self._boundary - self.window
+        self._panes = {p: c for p, c in self._panes.items() if p >= start}
+        totals: dict[str, tuple[int, str]] = {}
+        for pane in self._panes.values():
+            for key, (n, disp) in pane.items():
+                if key in totals:
+                    total, shown = totals[key]
+                    totals[key] = (total + n, min(shown, disp))
+                else:
+                    totals[key] = (n, disp)
+        top = sorted(totals.items(), key=lambda kv: (-kv[1][0], kv[0]))
+        items = [{"count": n, "hashtag": d} for _k, (n, d) in top[: self.k]]
+        write_result_file(self.path, render_document(items))
 
 
-def make_topk_file_sink(path: str, k: int = 5, slide_seconds: float | None = None):
-    """foreachBatch hook: emit the top-k of the trailing complete window
-    each trigger ≙ the reference's per-batch foreachRDD(save)
+def make_topk_file_sink(path: str, k: int = 5, window: str = WINDOW_DURATION):
+    """foreachBatch hook: emit the top-k of the trailing window each
+    trigger ≙ the reference's per-batch foreachRDD(save)
     (SparkApplication.scala:92-95). See TopKFileSink for semantics."""
-    return TopKFileSink(path, k=k, slide_seconds=slide_seconds)
+    return TopKFileSink(path, k=k, window=window)
 
 
 class IdempotentParquetSink:

@@ -10,6 +10,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mrtweety_analytic_spark.streaming.pipeline import (
@@ -113,6 +114,158 @@ def test_stream_equals_batch(spark, tmp_path):
     spark.catalog.dropTempView("golden_stream")
 
 
+@pytest.mark.parametrize(
+    "window, slide",
+    [
+        ("15 minutes", "7 seconds"),  # 7-s panes cannot tile 900 s
+        ("15 mins", "10 seconds"),
+        ("1.5 minutes", "10 seconds"),
+        ("15 minutes", "0 seconds"),
+        ("INTERVAL 15 MINUTES", "10 seconds"),
+    ],
+)
+def test_windowed_counts_rejects_untileable_or_malformed(spark, window, slide):
+    tags = parse_hashtags(_tweet_df(spark))
+    with pytest.raises(ValueError):
+        windowed_counts(tags, window=window, slide=slide)
+
+
+@pytest.mark.parametrize(
+    "window, slide, message",
+    [
+        ("15 minutes", "7 seconds", "whole multiple"),
+        ("15 mins", "10 seconds", "is not '<n>"),
+    ],
+)
+def test_cli_stream_rejects_bad_window(capsys, window, slide, message):
+    """A bad --window/--slide is a usage error (exit 2) raised before
+    any Spark session starts."""
+    from mrtweety_analytic_spark.__main__ import main as cli_main
+
+    with pytest.raises(SystemExit) as exc:
+        cli_main(["stream", "--window", window, "--slide", slide])
+    assert exc.value.code == 2
+    assert message in capsys.readouterr().err
+
+
+_T0_MS = 1_704_110_400_000  # 2024-01-01 12:00:00 UTC
+
+
+def _write_tweet_files(src, batches):
+    """batches: per file, [(seconds after 12:00, [hashtag, ...]), ...].
+    Files get increasing mtimes so the file source replays them in
+    order, one per trigger."""
+    src.mkdir()
+    for i, events in enumerate(batches):
+        path = src / f"batch-{i}.json"
+        path.write_text(
+            "\n".join(
+                json.dumps(
+                    {
+                        "timestamp_ms": str(_T0_MS + int(sec * 1000)),
+                        "entities": {"hashtags": [{"text": t} for t in tags]},
+                    }
+                )
+                for sec, tags in events
+            )
+            + "\n"
+        )
+        mtime = _T0_MS / 1000 + 10 * i
+        os.utime(path, (mtime, mtime))
+
+
+def _stamped(raw):
+    return raw.withColumn(
+        "ts",
+        F.timestamp_millis(F.get_json_object("value", "$.timestamp_ms").cast("long")),
+    )
+
+
+def _replay(spark, src, checkpoint, sink):
+    raw = spark.readStream.option("maxFilesPerTrigger", 1).text(str(src))
+    counts = windowed_counts(blacklist_filter(parse_hashtags(_stamped(raw))))
+    q = (
+        counts.writeStream.outputMode("update")
+        .foreachBatch(sink)
+        .option("checkpointLocation", str(checkpoint))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(timeout=180), "replay did not finish"
+    return q
+
+
+def test_late_events_match_batch_sliding_window(spark, tmp_path):
+    """Events 5 min late (past the 1-min watermark, inside the 15-min
+    window) must be counted: the replayed document equals the top-5 of
+    the trailing 15 min / 10 s sliding window computed in batch, and
+    the pane aggregate drops no row by watermark."""
+    src = tmp_path / "tweets"
+    _write_tweet_files(
+        src,
+        [
+            [
+                (-120, ["Old", "old"]),            # before the trailing window
+                (5, ["Spark", "kafka"]),
+                (180, ["flink", "EU"]),
+                (480, ["spark", "Flink"]),
+            ],
+            [(720, ["kafka"]), (845, ["kafka", "KAFKA", "spark"])],
+            [
+                (545, ["flink", "FLINK", "flink"]),  # 5 min late
+                (555, ["beam"]),                     # 5 min late
+                (-55, ["edge", "edge", "edge"]),     # late, 5 s before the window
+            ],
+        ],
+    )
+    out = tmp_path / "analytic.json"
+    q = _replay(spark, src, tmp_path / "ckpt", make_topk_file_sink(str(out), k=5))
+    dropped = sum(
+        op["numRowsDroppedByWatermark"]
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    )
+    assert dropped == 0
+
+    tags = blacklist_filter(parse_hashtags(_stamped(spark.read.text(str(src)))))
+    rows = (
+        tags.groupBy(
+            F.window("ts", "15 minutes", "10 seconds").alias("w"),
+            F.lower("hashtag").alias("key"),
+        )
+        .agg(F.count(F.lit(1)).alias("count"), F.min("hashtag").alias("hashtag"))
+        .collect()
+    )
+    from datetime import timedelta
+
+    boundary = max(r["w"]["start"] for r in rows) + timedelta(seconds=10)
+    trailing = sorted(
+        (r for r in rows if r["w"]["end"] == boundary),
+        key=lambda r: (-r["count"], r["key"]),
+    )[:5]
+    expected = [{"count": r["count"], "hashtag": r["hashtag"]} for r in trailing]
+    assert json.loads(out.read_text())["items"] == expected
+    assert expected == [
+        {"count": 5, "hashtag": "FLINK"},
+        {"count": 4, "hashtag": "KAFKA"},
+        {"count": 3, "hashtag": "Spark"},
+        {"count": 1, "hashtag": "beam"},
+    ]
+
+
+def test_pane_plan_has_no_expand(spark, tmp_path):
+    """15 min / 10 s counts aggregate one pane row per event: the
+    executed streaming plan has no Expand (a sliding window would
+    expand every hashtag into 90 window rows before the state store)."""
+    src = tmp_path / "tweets"
+    _write_tweet_files(src, [[(0, ["spark"]), (30, ["kafka"])]])
+    sink = make_topk_file_sink(str(tmp_path / "analytic.json"), k=5)
+    q = _replay(spark, src, tmp_path / "ckpt", sink)
+    plan = q._jsq.explainInternal(False)
+    assert "StateStoreSave" in plan
+    assert "Expand" not in plan
+
+
 def test_json_document_contract(spark, tmp_path):
     """Output must match the reference result document shape
     (≙ web/analytic.json: items[{hashtag,count}] + ISO datetime)."""
@@ -135,15 +288,15 @@ def test_json_document_contract(spark, tmp_path):
     assert json.loads(out.read_text())["items"] == doc["items"]
 
 
-def _window_rows(spark, rows):
-    """rows: (win_start_str, win_end_str, key, count, hashtag)."""
+def _pane_rows(spark, rows):
+    """rows: (pane_start_str, pane_end_str, key, count, hashtag)."""
     df = spark.createDataFrame(
-        rows, "ws string, we string, key string, count long, hashtag string"
+        rows, "ps string, pe string, key string, count long, hashtag string"
     )
     return df.select(
         F.struct(
-            F.col("ws").cast("timestamp").alias("start"),
-            F.col("we").cast("timestamp").alias("end"),
+            F.col("ps").cast("timestamp").alias("start"),
+            F.col("pe").cast("timestamp").alias("end"),
         ).alias("w"),
         "key",
         "count",
@@ -152,30 +305,31 @@ def _window_rows(spark, rows):
 
 
 def test_sink_selects_trailing_window_not_newest(spark, tmp_path):
-    """ADVICE r1 (high): with window=15m slide=5m, max(w.start) is the
-    window that just opened (~5 min of data). The document must carry
-    the TRAILING complete window — greatest w.end <= max(w.start)+slide
-    — exactly what reduceByKeyAndWindow(Minutes(15)) reports."""
+    """ADVICE r1 (high): the newest pane holds only the last slide of
+    events. The document must carry the TRAILING window — the panes in
+    [boundary - 15m, boundary) with boundary = newest pane end —
+    exactly what reduceByKeyAndWindow(Minutes(15)) reports; a pane
+    that ended before the window is left out."""
     out = tmp_path / "analytic.json"
-    emit = make_topk_file_sink(str(out), k=5)
-    # Newest event at ~12:14 → windows [11:50,12:05) .. [12:10,12:25).
-    # Trailing complete window is [12:00,12:15): full 15 min of counts.
+    emit = make_topk_file_sink(str(out), k=5, window="15 minutes")
+    # 5-min panes, newest event at ~12:14 → boundary 12:15, trailing
+    # window [12:00, 12:15): spark 4+2+1, kafka 4; "old" is outside.
     emit(
-        _window_rows(
+        _pane_rows(
             spark,
             [
-                ("2024-01-01 11:50:00", "2024-01-01 12:05:00", "old", 9, "old"),
-                ("2024-01-01 12:00:00", "2024-01-01 12:15:00", "spark", 7, "Spark"),
-                ("2024-01-01 12:00:00", "2024-01-01 12:15:00", "kafka", 4, "kafka"),
-                ("2024-01-01 12:05:00", "2024-01-01 12:20:00", "spark", 3, "Spark"),
-                ("2024-01-01 12:10:00", "2024-01-01 12:25:00", "spark", 1, "Spark"),
+                ("2024-01-01 11:55:00", "2024-01-01 12:00:00", "old", 9, "old"),
+                ("2024-01-01 12:00:00", "2024-01-01 12:05:00", "spark", 4, "Spark"),
+                ("2024-01-01 12:00:00", "2024-01-01 12:05:00", "kafka", 4, "kafka"),
+                ("2024-01-01 12:05:00", "2024-01-01 12:10:00", "spark", 2, "spark"),
+                ("2024-01-01 12:10:00", "2024-01-01 12:15:00", "spark", 1, "Spark"),
             ],
         ),
         epoch_id=0,
     )
     doc = json.loads(out.read_text())
     assert doc["items"] == [
-        {"count": 7, "hashtag": "Spark"},
+        {"count": 7, "hashtag": "Spark"},  # min casing across panes
         {"count": 4, "hashtag": "kafka"},
     ]
 
@@ -183,40 +337,35 @@ def test_sink_selects_trailing_window_not_newest(spark, tmp_path):
 def test_sink_merges_update_mode_deltas_across_triggers(spark, tmp_path):
     """ADVICE r1 (medium): update mode delivers only changed keys per
     trigger; keys untouched this trigger must keep their cached counts
-    in the written top-k."""
+    in the written top-k, while panes that leave the window drop out."""
     out = tmp_path / "analytic.json"
-    emit = make_topk_file_sink(str(out), k=5)
-    # Trigger 1: spark/kafka events between 11:56 and 12:04 update all
-    # three covering windows (15 m window, 5 m slide).
+    emit = make_topk_file_sink(str(out), k=5, window="15 minutes")
+    # Trigger 1: spark/kafka events between 11:50 and 12:04 (5-min
+    # panes) → boundary 12:05, window [11:50, 12:05).
     emit(
-        _window_rows(
+        _pane_rows(
             spark,
             [
-                ("2024-01-01 11:50:00", "2024-01-01 12:05:00", "spark", 2, "Spark"),
-                ("2024-01-01 11:50:00", "2024-01-01 12:05:00", "kafka", 1, "kafka"),
-                ("2024-01-01 11:55:00", "2024-01-01 12:10:00", "spark", 5, "Spark"),
-                ("2024-01-01 11:55:00", "2024-01-01 12:10:00", "kafka", 4, "kafka"),
-                ("2024-01-01 12:00:00", "2024-01-01 12:15:00", "spark", 5, "Spark"),
-                ("2024-01-01 12:00:00", "2024-01-01 12:15:00", "kafka", 4, "kafka"),
+                ("2024-01-01 11:50:00", "2024-01-01 11:55:00", "spark", 1, "Spark"),
+                ("2024-01-01 11:55:00", "2024-01-01 12:00:00", "spark", 2, "Spark"),
+                ("2024-01-01 11:55:00", "2024-01-01 12:00:00", "kafka", 1, "kafka"),
+                ("2024-01-01 12:00:00", "2024-01-01 12:05:00", "spark", 3, "Spark"),
+                ("2024-01-01 12:00:00", "2024-01-01 12:05:00", "kafka", 3, "kafka"),
             ],
         ),
         epoch_id=0,
     )
     assert json.loads(out.read_text())["items"] == [
-        {"count": 2, "hashtag": "Spark"},
-        {"count": 1, "hashtag": "kafka"},
+        {"count": 6, "hashtag": "Spark"},
+        {"count": 4, "hashtag": "kafka"},
     ]
     # Trigger 2: only flink events (at ~12:06) arrive — spark/kafka send
-    # NO delta rows, yet must keep their cached counts in the trailing
-    # window [11:55, 12:10).
+    # NO rows, yet keep their cached counts in the trailing window
+    # [11:55, 12:10); the 11:50 pane has left it.
     emit(
-        _window_rows(
+        _pane_rows(
             spark,
-            [
-                ("2024-01-01 11:55:00", "2024-01-01 12:10:00", "flink", 6, "flink"),
-                ("2024-01-01 12:00:00", "2024-01-01 12:15:00", "flink", 6, "flink"),
-                ("2024-01-01 12:05:00", "2024-01-01 12:20:00", "flink", 6, "flink"),
-            ],
+            [("2024-01-01 12:05:00", "2024-01-01 12:10:00", "flink", 6, "flink")],
         ),
         epoch_id=1,
     )
@@ -228,13 +377,52 @@ def test_sink_merges_update_mode_deltas_across_triggers(spark, tmp_path):
     ]
 
 
+def test_sink_sums_window_across_missing_panes(spark, tmp_path):
+    """Empty slides leave no pane: events two slides apart give a pane
+    grid with gaps (the case that fooled slide inference from the
+    smallest start gap). The document still sums exactly the panes
+    starting in [boundary - window, boundary)."""
+    out = tmp_path / "analytic.json"
+    emit = make_topk_file_sink(str(out), k=5, window="30 seconds")
+    # 10-s panes at :00 and :20 (no :10 pane) → boundary :30, window
+    # [:00, :30): a 3+1, b 2.
+    emit(
+        _pane_rows(
+            spark,
+            [
+                ("2024-01-01 12:00:00", "2024-01-01 12:00:10", "a", 3, "a"),
+                ("2024-01-01 12:00:20", "2024-01-01 12:00:30", "a", 1, "a"),
+                ("2024-01-01 12:00:20", "2024-01-01 12:00:30", "b", 2, "b"),
+            ],
+        ),
+        epoch_id=0,
+    )
+    assert json.loads(out.read_text())["items"] == [
+        {"count": 4, "hashtag": "a"},
+        {"count": 2, "hashtag": "b"},
+    ]
+    # Next pane at :40 (no :30 pane) → boundary :50, window [:20, :50):
+    # the :00 pane is out, the :20 pane is still in.
+    emit(
+        _pane_rows(
+            spark,
+            [("2024-01-01 12:00:40", "2024-01-01 12:00:50", "b", 2, "b")],
+        ),
+        epoch_id=1,
+    )
+    assert json.loads(out.read_text())["items"] == [
+        {"count": 4, "hashtag": "b"},
+        {"count": 1, "hashtag": "a"},
+    ]
+
+
 def test_sink_empty_batch_keeps_last_document(spark, tmp_path):
     out = tmp_path / "analytic.json"
     emit = make_topk_file_sink(str(out), k=5)
-    win = ("2024-01-01 12:00:00", "2024-01-01 12:15:00")
-    emit(_window_rows(spark, [(*win, "spark", 5, "Spark")]), epoch_id=0)
+    pane = ("2024-01-01 12:00:00", "2024-01-01 12:15:00")
+    emit(_pane_rows(spark, [(*pane, "spark", 5, "Spark")]), epoch_id=0)
     first = json.loads(out.read_text())["items"]
-    emit(_window_rows(spark, []), epoch_id=1)  # trailing empty batch
+    emit(_pane_rows(spark, []), epoch_id=1)  # trailing empty batch
     assert json.loads(out.read_text())["items"] == first
 
 
