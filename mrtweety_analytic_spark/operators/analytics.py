@@ -10,6 +10,10 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
+from ..util import LastHandle
+
+# Supersession holder for q_date_spine's persisted daily rollup.
+_LAST_SPINE = LastHandle()
 
 
 @register(
@@ -749,7 +753,8 @@ def q_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy("day").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("user_id").alias("n_users"),
-    ).persist()
+    )
+    _LAST_SPINE.persist(daily)
     spine = daily.agg(
         F.min("day").alias("lo"), F.max("day").alias("hi")
     ).select(

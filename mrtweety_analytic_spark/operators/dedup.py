@@ -33,13 +33,17 @@ from ..sources import load_table
 from ..util import LastHandle
 
 # Multi-consumer intermediates of the funnel/dedup composites,
-# persisted per call and released on the NEXT call (the engine's
-# LastHandle rule) — without these the quality-gate tokenization
+# persisted per call — without these the quality-gate tokenization
 # re-executes once per downstream consumer (round-13 optimization
-# pass; see OPTIMIZATION_r13.md).
-_LAST_FUNNEL = LastHandle(lambda dfs: [df.unpersist() for df in dfs])
-_LAST_DEDUP_CORPUS = LastHandle(lambda dfs: [df.unpersist() for df in dfs])
-_LAST_KFOLD = LastHandle(lambda dfs: [df.unpersist() for df in dfs])
+# pass; see OPTIMIZATION_r13.md). Each handle holds one generation:
+# the next call releases it before persisting its own. funnel_stages
+# serves q_corpus_funnel, q_training_export and
+# q_training_export_full through the one _LAST_FUNNEL, so a caller
+# that builds two of them before acting on the first loses the
+# first's cache (a recompute, not a wrong result).
+_LAST_FUNNEL = LastHandle()
+_LAST_DEDUP_CORPUS = LastHandle()
+_LAST_KFOLD = LastHandle()
 
 
 def normalized_text(col: F.Column) -> F.Column:
@@ -804,8 +808,8 @@ def dedup_corpus(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     # kd feeds the jaccard pair join, the anti-join AND the callers'
     # per-source counts — persist so the exact tier runs once per
     # call, not once per consumer (round-13 optimization pass).
-    kd = docs.join(exact_kept, "doc_id", "left_semi").persist()
-    _LAST_DEDUP_CORPUS.replace([kd])
+    kd = docs.join(exact_kept, "doc_id", "left_semi")
+    _LAST_DEDUP_CORPUS.persist(kd)
     near_dropped = (
         _jaccard_pairs(kd)
         .select(F.col("doc_b").alias("doc_id"))
@@ -1206,15 +1210,14 @@ def funnel_stages(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
             & F.col("n_tokens").between(10, 500)
         )
         .select(*docs.columns)
-        .persist()
     )
     exact_kept = (
         q.groupBy(F.md5(normalized_text(F.col("text"))).alias("fp"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    fdocs = q.join(exact_kept, "doc_id", "left_semi").persist()
-    _LAST_FUNNEL.replace([q, fdocs])
+    fdocs = q.join(exact_kept, "doc_id", "left_semi")
+    _LAST_FUNNEL.persist(q, fdocs)
     near_dropped = (
         _jaccard_pairs(fdocs)
         .select(F.col("doc_b").alias("doc_id"))
@@ -1819,9 +1822,8 @@ def q_sample_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
         )
         .withColumn("fold", fold)
-        .persist()
     )
-    _LAST_KFOLD.replace([folded])
+    _LAST_KFOLD.persist(folded)
     fa = folded.select(
         F.col("doc_id").alias("doc_a"), F.col("fold").alias("fold_a")
     )

@@ -36,25 +36,11 @@ DAMPING = 0.85
 N_ITER = 3
 
 
-def _release_ckpts(dfs) -> None:
-    # localCheckpoint blocks are NOT in the CacheManager, so
-    # DataFrame.unpersist() is a no-op on them; the persisted RDD
-    # hangs off the LogicalRDD leaf and must be released there.
-    # Plain persist()ed frames (deg) release through the CacheManager.
-    for df in dfs:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-        else:
-            df.unpersist()
-
-
 # Supersession holder for each graph operator's checkpointed edge
 # blocks: repeated bench/verify runs keep at most one generation in
 # the block manager instead of accumulating for the session lifetime
-# (same pattern as _LAST_BLOOM_OUT in joins.py). LastHandle swallows
-# release errors from a stopped session.
-_LAST_GRAPH_CKPT = LastHandle(_release_ckpts)
+# (same pattern as _LAST_BLOOM_OUT in joins.py).
+_LAST_GRAPH_CKPT = LastHandle()
 
 
 # Round-13 NOTE: the edge-list MEMO that used to live here (one
@@ -68,7 +54,7 @@ _LAST_GRAPH_CKPT = LastHandle(_release_ckpts)
 # (keep=2: the previous query's returned DataFrame may still be
 # acting when the next one builds; each query calls _edges exactly
 # once, so a newer build never evicts its own caller's edges).
-_LAST_EDGE_BUILD = LastHandle(_release_ckpts, keep=2)
+_LAST_EDGE_BUILD = LastHandle(keep=2)
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,7 +71,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle and CLI paths all act immediately, so they are safe by
     construction."""
     df, ck = _build_edges(spark, sf_dir)
-    _LAST_EDGE_BUILD.replace([ck])
+    _LAST_EDGE_BUILD.replace(ck)
     return df
 
 
@@ -169,8 +155,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant term).
     """
     edges = _edges(spark, sf_dir)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")).persist()
-    _LAST_GRAPH_CKPT.replace([deg])
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    _LAST_GRAPH_CKPT.persist(deg)
     n = deg.count()
     if n == 0:  # empty graph: no nodes, no ranks (restart robustness)
         return spark.createDataFrame([], "node string, rank_scaled double")
@@ -310,7 +296,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     edges = _orient_by_degree(base).localCheckpoint(eager=True)
-    _LAST_GRAPH_CKPT.replace([edges])
+    _LAST_GRAPH_CKPT.replace(edges)
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
     wedges = e1.join(e2, F.col("e1.v") == F.col("e2.u"))
     closed = wedges.join(
@@ -409,7 +395,7 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ckpts.append(nxt)
         levels.append(nxt)
         frontier = nxt
-    _LAST_GRAPH_CKPT.replace(ckpts)
+    _LAST_GRAPH_CKPT.replace(*ckpts)
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionByName(lv)

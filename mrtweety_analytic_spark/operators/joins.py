@@ -399,7 +399,7 @@ _BLOOM_CONF = {
 # optimization-round rules prohibit).
 from ..util import LastHandle  # noqa: E402
 
-_LAST_BLOOM_OUT = LastHandle(lambda df: df.unpersist())
+_LAST_BLOOM_OUT = LastHandle()
 
 
 @register(
@@ -470,15 +470,7 @@ def q_join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 1-row result into the cache now, under the conf. Later
         # actions read the cache; the supersession handle releases the
         # previous call's entry (no accumulation across bench runs).
-        # Release BEFORE persisting: a repeat call's plan is
-        # cache-identical to the previous one, so persist() would
-        # dedup onto the old entry and a later unpersist of the old
-        # handle would evict the new cache with it — leaving the
-        # returned DataFrame to re-plan after the conf restore,
-        # without the bloom filter.
-        _LAST_BLOOM_OUT.clear()
-        out = out.persist()
-        _LAST_BLOOM_OUT.replace(out)
+        _LAST_BLOOM_OUT.persist(out)
         out.count()
         return out
     finally:

@@ -26,12 +26,11 @@ from ..registry import register
 from ..sources import load_table
 from ..util import LastHandle
 
-# Supersession holder for q_mix_rebalance's persisted rates frame
-# (repeated bench/verify calls keep one generation in the block
-# manager, same pattern as mining._LAST_ITEMS).
-_LAST_RATES = LastHandle(lambda dfs: [df.unpersist() for df in dfs])
-_LAST_EXPORT = LastHandle(lambda dfs: [df.unpersist() for df in dfs])
-_LAST_DSIR_TOK = LastHandle(lambda dfs: [df.unpersist() for df in dfs])
+# Supersession holders for this module's persisted frames: repeated
+# bench/verify calls keep one generation each in the block manager.
+_LAST_RATES = LastHandle()
+_LAST_EXPORT = LastHandle()
+_LAST_DSIR_TOK = LastHandle()
 
 
 @register(
@@ -623,9 +622,8 @@ def _mix_report(spark: SparkSession, docs: DataFrame, avail: DataFrame) -> DataF
                 F.lit(1.0), F.col("k") * F.col("target") / F.col("n_avail")
             ).alias("rate"),
         )
-        .persist()
     )
-    _LAST_RATES.replace([rates])
+    _LAST_RATES.persist(rates)
     u = F.expr(_HASH48).cast("bigint") / F.lit(281474976710656.0)
     kept = (
         docs.join(F.broadcast(rates.select("lang", "rate")), "lang")
@@ -813,8 +811,8 @@ def training_export_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `final` feeds two consumers (the availability aggregate and the
     # keep join) — persist the survivor set so the funnel's pair join
     # runs once, not twice (the engine's multi-consumer rule).
-    final = funnel_stages(docs)[2].persist()
-    _LAST_EXPORT.replace([final])
+    final = funnel_stages(docs)[2]
+    _LAST_EXPORT.persist(final)
     targets = spark.createDataFrame(
         list(MIX_TARGETS.items()), "lang string, target double"
     )
@@ -844,7 +842,7 @@ def training_export_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAST_EXPORT_FULL = LastHandle(lambda dfs: [df.unpersist() for df in dfs])
+_LAST_EXPORT_FULL = LastHandle()
 
 
 def _export_full_oracle() -> str:
@@ -1011,7 +1009,7 @@ def training_export_full_frames(
     # side and the clean anti-join) — without the persist the whole
     # funnel + cluster-split lineage above executes twice (round-13
     # optimization pass; the dominant cost of this composite).
-    tnb = train.filter(F.col("doc_id") % DECON_BENCH_MOD != 0).persist()
+    tnb = train.filter(F.col("doc_id") % DECON_BENCH_MOD != 0)
     arr = F.split("text", " ")
     gexpr = F.explode(_word_ngrams(arr, DECON_N)).alias("shingle")
     # Round-14: the old shared `grams` frame (corpus-wide
@@ -1042,14 +1040,13 @@ def training_export_full_frames(
         .select("doc_id")
         .distinct()
         .withColumn("shard", shard)
-        .persist()
     )
     # clean feeds two consumers (availability agg + keep join);
     # contaminated feeds two (anti-join + manifest union) — persist
     # both so the funnel/cluster lineage runs once (the engine's
     # multi-consumer rule).
-    clean = tnb.join(contaminated, "doc_id", "left_anti").persist()
-    _LAST_EXPORT_FULL.replace([tnb, clean, contaminated])
+    clean = tnb.join(contaminated, "doc_id", "left_anti")
+    _LAST_EXPORT_FULL.persist(tnb, contaminated, clean)
     targets = spark.createDataFrame(
         list(MIX_TARGETS.items()), "lang string, target double"
     )
@@ -1353,8 +1350,8 @@ def _dsir_doc_logw(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.conv(F.substring(F.md5("term"), 1, 4), 16, 10).cast("int")
             % DSIR_BUCKETS
         ).alias("f"),
-    ).persist()
-    _LAST_DSIR_TOK.replace([tok])
+    )
+    _LAST_DSIR_TOK.persist(tok)
     raw = tok.groupBy("f").agg(F.count(F.lit(1)).alias("c_raw"))
     tgt = (
         tok.filter(F.col("lang") == DSIR_TARGET_LANG)

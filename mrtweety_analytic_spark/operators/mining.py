@@ -19,14 +19,6 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import LastHandle
-
-# Supersession holders for this module's persisted aggregates:
-# repeated bench/verify runs keep at most one generation in the
-# block manager (same pattern as _LAST_GRAPH_CKPT in graph.py).
-_LAST_ITEMS = LastHandle(lambda dfs: [df.unpersist() for df in dfs])
-_LAST_PMI = LastHandle(lambda dfs: [df.unpersist() for df in dfs])
-_LAST_LLR = LastHandle(lambda dfs: [df.unpersist() for df in dfs])
 
 
 @register(
@@ -94,17 +86,11 @@ def basket_pairs_core(li: DataFrame, cap_r: int | None = None) -> DataFrame:
     basket's rarer items are missed) and OFF by default; at 100 TB
     it is the guard that keeps one degenerate basket from dominating
     the shuffle."""
-    # The basket item set feeds four consumers with different column
-    # pruning (basket count, item support, both pair-join sides), so
-    # ReusedExchange can't canonicalize them together — persisting the
-    # 2-column distinct collapses it to one scan + one distinct
-    # shuffle (same rationale as q_text_tfidf's tf persist).
-    items = (
-        li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-        .persist()
-    )
-    _LAST_ITEMS.replace([items])
+    # items feeds four consumers, yet re-planning it per consumer beat
+    # persisting it 2x in an interleaved A/B at sf 0.1.
+    items = li.select(
+        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
+    ).distinct()
     n_b = items.agg(
         F.countDistinct("o").alias("n_baskets"),
         F.count(F.lit(1)).alias("n_items"),
@@ -131,51 +117,33 @@ def basket_pairs_core(li: DataFrame, cap_r: int | None = None) -> DataFrame:
             ),
         )
         fi = ranked.where(F.col("rn") <= cap_r).select("o", "p")
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_OLDPAIRS") == "1":  # A/B control
-        a, b = fi.alias("a"), fi.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")),
-            )
-            .groupBy(F.col("a.p").alias("p1"), F.col("b.p").alias("p2"))
-            .agg(F.count(F.lit(1)).alias("pair_cnt"))
+    # Within-basket pair generation via the certified posting-list
+    # fan-out from dedup._pairs_from_postings (posexplode + slice +
+    # explode over the basket's sorted item array) instead of the
+    # o-keyed self-join — ONE o-exchange into the collect_list
+    # instead of TWO feeding a SortMergeJoin (guide §2.4); pair counts
+    # are integer-exact either way (items are distinct per basket,
+    # ascending slice ≡ p1 < p2). Basket arrays are support-pruned
+    # (freq ≥ mean) and cap_r bounds them further when set, so array
+    # width is the same fan-out bound the join form had.
+    baskets = fi.groupBy("o").agg(
+        F.sort_array(F.collect_list("p")).alias("ps")
+    )
+    pairs = (
+        baskets.select(F.posexplode("ps").alias("i", "p1"), F.col("ps"))
+        .select(
+            "p1",
+            F.explode(
+                F.slice(
+                    F.col("ps"),
+                    F.col("i") + 2,
+                    F.greatest(F.lit(0), F.size("ps") - F.col("i") - 1),
+                )
+            ).alias("p2"),
         )
-    else:
-        # Round-14: within-basket pair generation via the certified
-        # posting-list fan-out from dedup._pairs_from_postings
-        # (posexplode + slice + explode over the basket's sorted item
-        # array) instead of the o-keyed self-join — ONE o-exchange
-        # into the collect_list instead of TWO feeding a SortMergeJoin
-        # (guide §2.4); pair counts are integer-exact either way
-        # (items are distinct per basket, ascending slice ≡ p1 < p2).
-        # Basket arrays are support-pruned (freq ≥ mean) and cap_r
-        # bounds them further when set, so array width is the same
-        # fan-out bound the join form had.
-        baskets = fi.groupBy("o").agg(
-            F.sort_array(F.collect_list("p")).alias("ps")
-        )
-        pairs = (
-            baskets.select(
-                F.posexplode("ps").alias("i", "p1"), F.col("ps")
-            )
-            .select(
-                "p1",
-                F.explode(
-                    F.slice(
-                        F.col("ps"),
-                        F.col("i") + 2,
-                        F.greatest(
-                            F.lit(0), F.size("ps") - F.col("i") - 1
-                        ),
-                    )
-                ).alias("p2"),
-            )
-            .groupBy("p1", "p2")
-            .agg(F.count(F.lit(1)).alias("pair_cnt"))
-        )
+        .groupBy("p1", "p2")
+        .agg(F.count(F.lit(1)).alias("pair_cnt"))
+    )
     fa = freq.select(F.col("p").alias("p1"), F.col("cnt").alias("cnt_a"))
     fb = freq.select(F.col("p").alias("p2"), F.col("cnt").alias("cnt_b"))
     return (
@@ -256,23 +224,16 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair_arr = F.arrays_zip(
         F.slice(arr, 1, F.size(arr) - 1), F.slice(arr, 2, F.size(arr) - 1)
     )
-    # Both aggregates feed multiple consumers with different pruning
-    # (the join chain + their own totals), which would re-plan the
-    # corpus explode per consumer — persisting the vocab-sized
-    # aggregates caps tokenization at one pass each (the tfidf rule).
     big = (
         docs.select(F.explode(pair_arr).alias("pr"))
         .groupBy(F.col("pr.0").alias("a"), F.col("pr.1").alias("b"))
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
     )
     uni = (
         docs.select(F.explode(arr).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
     )
-    _LAST_PMI.replace([big, uni])
     n_uni = uni.agg(F.sum("cnt").alias("n_uni"))
     n_big = big.agg(F.sum("cnt").alias("n_big"))
     ua = uni.select(F.col("term").alias("a"), F.col("cnt").alias("cnt_a"))
@@ -1798,9 +1759,7 @@ def q_text_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.explode(pair_arr).alias("pr"))
         .groupBy(F.col("pr.0").alias("a"), F.col("pr.1").alias("b"))
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
     )
-    _LAST_LLR.replace([big])
     la = big.groupBy("a").agg(F.sum("cnt").alias("ra"))
     rb = big.groupBy("b").agg(F.sum("cnt").alias("cb"))
     nb = big.agg(F.sum("cnt").alias("n"))

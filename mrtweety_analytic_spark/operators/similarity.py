@@ -27,7 +27,7 @@ from ..util import LastHandle
 
 # Cache handle for the last q_sim_knn_batch result — unpersisted on
 # the next call so repeated bench runs don't accumulate entries.
-_LAST_KNN_BATCH_OUT = LastHandle(lambda df: df.unpersist())
+_LAST_KNN_BATCH_OUT = LastHandle()
 
 KNN_K = 10
 BATCH_K = 3
@@ -225,15 +225,9 @@ def q_sim_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize once so the probe broadcast can be released before
     # returning — otherwise executors retain it for the session's
     # lifetime. The cached k·|probes| rows are what the caller
-    # re-reads. The previous call's entry is released BEFORE the new
-    # persist (see q_join_bloom_runtime: a cache-identical repeat
-    # plan would dedup onto the old entry and die with its unpersist;
-    # knn_batch plans differ per call via fresh closures, but the
-    # ordering keeps this safe if that ever changes), so repeated
-    # bench runs hold at most one.
-    _LAST_KNN_BATCH_OUT.clear()
-    out = out.persist()
-    _LAST_KNN_BATCH_OUT.replace(out)
+    # re-reads; the supersession handle releases the previous call's
+    # entry, so repeated bench runs hold at most one.
+    _LAST_KNN_BATCH_OUT.persist(out)
     out.count()
     # unpersist (not destroy): frees executor copies now; the driver
     # copy remains, so a cache-evicted recompute can still
@@ -4124,8 +4118,6 @@ _PACK_HI = (
     "CAST(0 AS BIGINT), (a, b) -> a + b)"
 )
 
-_LAST_HAM_SIGS = LastHandle(lambda dfs: [df.unpersist() for df in dfs])
-
 
 @register(
     "q_sim_hamming_topk",
@@ -4172,7 +4164,7 @@ def q_sim_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape — NO corpus-scale sort: Hamming distance lives on the
     discrete domain 0..64, so per-probe top-k decomposes into
-      (1) one signature pass (24 B/row, persisted),
+      (1) a signature projection (24 B/row),
       (2) a (probe, distance) histogram — map-side-combinable count
           into at most 65 x n_probes rows,
       (3) the k-th-distance cutoff d* and the below-cutoff count per
@@ -4181,7 +4173,8 @@ def q_sim_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
           h = d* ties ranked by vec_id up to the remaining budget —
           the tie window moves only the d*-bucket, never the corpus.
     At 100 TB the corpus is scanned twice as 24-byte signature rows
-    (both scans from the persisted projection), shuffles carry the
+    (the projection is recomputed per scan: persisting it did not pay
+    in an interleaved A/B at sf 0.1), shuffles carry the
     65-bucket census and the final <=k rows per probe, and nothing
     ever sorts corpus-scale data. The same two-pass
     histogram-threshold trick applies to any bounded integer score.
@@ -4199,8 +4192,7 @@ def q_sim_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.expr(_PACK_LO).alias("lo"),
         F.expr(_PACK_HI).alias("hi"),
-    ).persist()
-    _LAST_HAM_SIGS.replace([sigs])
+    )
     probes = sigs.filter(F.col("vec_id") % PROBE_MOD == 0).select(
         F.col("vec_id").alias("probe_id"),
         F.col("lo").alias("plo"),

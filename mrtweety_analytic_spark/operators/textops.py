@@ -21,17 +21,8 @@ from ..registry import register
 from ..sources import load_table
 from ..util import LastHandle
 
-# Supersession holder for bm25_scored's persisted per-doc aggregate
-# (two registered consumers — q_text_bm25 and q_sim_hybrid_rrf — can
-# each leave one generation in the block manager per bench pass).
-# keep=2 (ADVICE r09): bm25_scored has TWO registered consumers
-# (q_text_bm25 and q_sim_hybrid_rrf); a driver that builds both
-# DataFrames before materializing either must not have the second
-# build unpersist the first's cached per-doc aggregate out from
-# under it (silent recompute — perf only, but avoidable).
-_LAST_BM25_PERDOC = LastHandle(
-    lambda dfs: [df.unpersist() for df in dfs], keep=2
-)
+# Supersession holder for q_text_tfidf's persisted tf aggregate.
+_LAST_TFIDF = LastHandle()
 
 # Trending-query stopword blacklist — the engine analogue of the
 # reference's WORD_BLACKLIST {europe, europa, eu, euro}
@@ -485,9 +476,8 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the physical plan: 4 scans without this). Persisting the small
     # (doc, term, cnt) aggregate collapses the corpus tokenization to
     # one pass — the standard materialize-token-counts step.
-    tf = toks.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).persist()
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("cnt"))
+    _LAST_TFIDF.persist(tf)
     dl = tf.groupBy("doc_id").agg(F.sum("cnt").alias("len"))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = dl.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -2613,7 +2603,7 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice) — but it is a strict map-side-combinable reduction:
     post-shuffle rows are one per doc, |Q|+2 columns wide. idf and
     the (n_docs, avgdl) pair are O(|Q|) and O(1) broadcasts off that
-    cached frame. The final scored frame is
+    aggregate. The final scored frame is
     |matching docs| rows cut by TakeOrderedAndProject — no corpus
     sort, no unbounded shuffle. At 100 TB the only full-corpus
     stages are the two token aggregates, both strict reductions.
@@ -2629,11 +2619,12 @@ def bm25_scored(docs: DataFrame) -> DataFrame:
 
     One corpus pass: tokenization reduces straight to a per-doc WIDE
     aggregate (len + one conditional tf column per query term — |Q|
-    is a query-time constant, so the width is fixed), persisted and
-    reused by the two O(1)-row corpus statistics (n_docs/avgdl and
-    per-term df). Without this the naive dl/tf/idf formulation scans
-    and re-tokenizes the corpus FIVE times (measured on the physical
-    plan) — the q_text_tfidf lesson applied at authoring time.
+    is a query-time constant, so the width is fixed), read by the
+    scoring join and by the O(1)-row corpus statistics (n_docs/avgdl
+    and per-term df). The naive dl/tf/idf formulation scans and
+    re-tokenizes the corpus FIVE times (measured on the physical
+    plan). The aggregate is not persisted: in an interleaved A/B at
+    sf 0.1, caching it made q_text_bm25 and q_sim_hybrid_rrf slower.
     """
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("term")
@@ -2645,8 +2636,7 @@ def bm25_scored(docs: DataFrame) -> DataFrame:
             .cast("double")
             .alias(f"tf_{i}")
         )
-    per_doc = toks.groupBy("doc_id").agg(*aggs).persist()
-    _LAST_BM25_PERDOC.replace([per_doc])
+    per_doc = toks.groupBy("doc_id").agg(*aggs)
     stats = per_doc.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg("len").alias("avgdl"),

@@ -61,23 +61,11 @@ _MEMORY_PIN_ROW_BUDGET = 100_000
 _MEMORY_PIN_HELPERS = frozenset({"_run_to_memory", "_mdr_monitor"})
 
 
-def _release_pins(dfs) -> None:
-    # The pinned sink frames are localCheckpoint'ed — their RDD hangs
-    # off the LogicalRDD leaf (not the CacheManager); release there.
-    for df in dfs:
-        try:
-            plan = df._jdf.queryExecution().analyzed()
-            if plan.getClass().getSimpleName() == "LogicalRDD":
-                plan.rdd().unpersist(False)
-        except Exception:
-            pass
-
-
 # Supersession holder for the pinned memory-sink frames (ADVICE r13:
 # heavy checkpointed intermediates should be LastHandle-tracked).
 # keep=2: the previous call's returned frame may still be acting when
 # the next streaming query pins its own.
-_LAST_SINK_PIN = LastHandle(_release_pins, keep=2)
+_LAST_SINK_PIN = LastHandle(keep=2)
 
 
 def _run_to_memory(
@@ -127,7 +115,7 @@ def _run_to_memory(
     # below then reads the already-materialized blocks instead of
     # re-planning the sink scan. Identical rows/schema either way.
     out = result.localCheckpoint(eager=True)
-    _LAST_SINK_PIN.replace([out])
+    _LAST_SINK_PIN.replace(out)
     # Budget the STATE the pin implies: distinct keys when the group
     # key is named, raw emissions otherwise (see _MEMORY_PIN_ROW_BUDGET
     # note for why raw rows over-count under multi-batch replays).
@@ -479,18 +467,6 @@ def s_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
 
 
-# Previous s_state_reader checkpoint dir — superseded on the next
-# call so repeated runs don't accumulate state dirs in the tempdir;
-# the final one is removed at interpreter exit.
-def _rmtree(path: str) -> None:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-
-
-_LAST_STATE_CKPT = LastHandle(_rmtree)
-
-
 @register(
     "s_state_reader",
     oracle="""
@@ -510,7 +486,7 @@ def s_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     inspect (or repair-audit) a job's state without touching the job,
     partition-parallel over the state files.
     """
-    import os
+    import shutil
     import tempfile
 
     events = load_events_stream(spark, sf_dir)
@@ -520,18 +496,19 @@ def s_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(
         tempfile.gettempdir(), f"mrtweety_state_{uuid.uuid4().hex[:8]}"
     )
-    _run_to_memory(spark, agg, "complete", checkpoint=ckpt)
-    state = spark.read.format("statestore").load(ckpt)
-    out = state.select(
-        F.col("key.window.start").alias("window_start"),
-        F.col("key.event_type").alias("event_type"),
-        F.col("value.count").alias("n"),
-    )
-    # Pin rows before the checkpoint dir is superseded by a later
-    # call (the statestore read is lazy over those files).
-    pinned = spark.createDataFrame(out.collect(), out.schema)
-    _LAST_STATE_CKPT.replace(ckpt)
-    return pinned
+    try:
+        _run_to_memory(spark, agg, "complete", checkpoint=ckpt)
+        state = spark.read.format("statestore").load(ckpt)
+        out = state.select(
+            F.col("key.window.start").alias("window_start"),
+            F.col("key.event_type").alias("event_type"),
+            F.col("value.count").alias("n"),
+        )
+        # Pin the rows on the driver: the statestore read is lazy
+        # over the checkpoint files, which go away right after.
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _has_protobuf() -> bool:

@@ -3,49 +3,71 @@
 from __future__ import annotations
 
 import atexit
-from collections.abc import Callable
-from typing import Any
+
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame
+
+
+def _release(df: DataFrame) -> None:
+    # localCheckpoint blocks are NOT in the CacheManager, so
+    # DataFrame.unpersist() is a no-op on them; the persisted RDD
+    # hangs off the LogicalRDD leaf and must be released there.
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    else:
+        df.unpersist()
 
 
 class LastHandle:
-    """Supersession holder for a per-operator resource (cached
-    DataFrame, scratch/checkpoint dir): releasing the PREVIOUS
-    instance when a new one replaces it bounds accumulation across
-    repeated bench/verify runs, and the final instance is released at
+    """Supersession holder for an operator's materialized DataFrames,
+    one generation per call: a new generation releases the ones that
+    fall out of `keep`, which bounds block-manager accumulation across
+    repeated bench/verify runs; the last generation is released at
     interpreter exit.
 
-    `keep` > 1 retains that many generations before releasing — used
-    where the previous generation's resource may still back a
-    lazily-re-evaluated DataFrame held by the caller (scratch dirs).
+    `persist(*dfs)` releases BEFORE it persists: a repeat call plans
+    the same frames as the previous call, persist() would share the
+    previous call's CacheManager entry, and releasing that generation
+    afterwards would evict the new cache with it. `replace(*dfs)`
+    records frames that are already materialized (localCheckpoint),
+    whose blocks are new on every call.
 
-    Release errors are swallowed: the classic failure is a stale
-    handle from a stopped SparkSession (unpersist on a dead py4j
-    gateway raises), which must not break the operator's first call
-    in the next session.
+    `keep` > 1 retains that many generations — for checkpointed frames
+    whose previous generation may still back a DataFrame the caller
+    has not acted on yet. It is for `replace` only: a retained
+    persisted generation would share its cache entry with a new one.
+
+    py4j errors on release are swallowed: a handle left over from a
+    stopped SparkSession raises Py4JJavaError (a Java
+    NullPointerException), which must not break the operator's first
+    call in the next session. Any other error propagates.
     """
 
-    def __init__(self, release: Callable[[Any], None], keep: int = 1):
-        self._release = release
+    def __init__(self, keep: int = 1):
         self._keep = max(1, keep)
-        self._values: list[Any] = []
+        self._gens: list[tuple[DataFrame, ...]] = []
         atexit.register(self.clear)
 
-    def replace(self, value: Any) -> None:
-        self._values.append(value)
-        while len(self._values) > self._keep:
-            self._release_one(self._values.pop(0))
+    def persist(self, *dfs: DataFrame) -> None:
+        """Release what falls out of `keep`, then persist `dfs` in
+        order (a later frame built on an earlier one reads its cache)."""
+        self._trim(self._keep - 1)
+        for df in dfs:
+            df.persist()
+        self._gens.append(dfs)
 
-    def current(self) -> Any | None:
-        """The newest live value, or None — lets an operator serve a
-        repeat call from its pinned resource instead of rebuilding."""
-        return self._values[-1] if self._values else None
+    def replace(self, *dfs: DataFrame) -> None:
+        self._gens.append(dfs)
+        self._trim(self._keep)
 
     def clear(self) -> None:
-        while self._values:
-            self._release_one(self._values.pop())
+        self._trim(0)
 
-    def _release_one(self, value: Any) -> None:
-        try:
-            self._release(value)
-        except Exception:
-            pass
+    def _trim(self, n: int) -> None:
+        while len(self._gens) > n:
+            for df in self._gens.pop(0):
+                try:
+                    _release(df)
+                except Py4JError:
+                    pass
