@@ -198,7 +198,9 @@ def main(argv: list[str] | None = None) -> int:
                 print(
                     f"batch {r['batch_id']}: {r['input_rows']} rows, "
                     f"{r['rows_per_sec']:.0f} rows/s, "
-                    f"state {r['state_rows']} rows"
+                    f"state {r['state_rows']} rows in "
+                    f"{r['state_partitions']} partitions, "
+                    f"commit {r['state_commit_ms']} ms"
                 )
             print(rec.summary())
         return 0

@@ -2,16 +2,20 @@
 
 The reference ran a single-node `local[*]` Spark 2.2 context
 (reference: spark/src/main/scala/.../SparkApplication.scala:34,37).
-Here the session is tuned for the Catalyst/Tungsten path: AQE on,
-shuffle partitions sized for the local test harness (the 100 TB
-deployment overrides via config), UTC session timezone so results
-hash identically against the DuckDB oracle.
+Here the session is tuned for the Catalyst/Tungsten path: AQE on, UTC
+session timezone so results hash identically against the DuckDB
+oracle, and two shuffle widths. Batch plans start from AQE's
+`initialPartitionNum` (32) and coalesce; streams run with AQE off, so
+their state stores take `spark.sql.shuffle.partitions`. A cluster sets
+the first for batch and the second for stream state; a stream with a
+checkpoint keeps the width its offset log recorded.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs applied even to externally-created sessions
@@ -27,10 +31,11 @@ RUNTIME_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # local[32] harness: 200 default shuffle partitions is wrong for
-    # sub-GB inputs; AQE coalesces down from this anyway. A cluster
-    # deployment sets this (or relies on AQE initialPartitionNum).
-    "spark.sql.shuffle.partitions": "32",
+    # Batch width: AQE starts every batch shuffle here, then coalesces.
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "32",
+    # Stream state width: each trigger commits every state partition,
+    # and the flagship's ~2k state rows need few.
+    "spark.sql.shuffle.partitions": "4",
     # ANSI off: keep permissive SQL semantics matching DuckDB's
     # silent-null behaviours we rely on (e.g. bad JSON -> NULL).
     "spark.sql.ansi.enabled": "false",
@@ -41,15 +46,19 @@ RUNTIME_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+_UNMODIFIABLE = {"CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG"}
+
 
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an existing session (idempotent)."""
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Non-runtime-settable in this build — leave as-is.
-            pass
+        except AnalysisException as e:
+            # skip only what the session cannot modify: a skipped
+            # initialPartitionNum would shrink every batch shuffle
+            if e.getCondition() not in _UNMODIFIABLE:
+                raise
     return spark
 
 

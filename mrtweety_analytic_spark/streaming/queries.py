@@ -80,31 +80,25 @@ def _run_to_memory(
     memory-sink table as a plain local DataFrame.
 
     availableNow trigger: process the whole replay then terminate —
-    the batch-equivalence harness of SURVEY.md §7.4. State-store
-    instances scale with shuffle partitions, so the partition count is
-    dropped for the stateful run (8 state stores instead of 32 for a
-    replay this size) and restored after. Pass `checkpoint` to persist
-    the run's state for post-hoc inspection (s_state_reader); the
-    default temp checkpoint is discarded by Spark on clean stop.
+    the batch-equivalence harness of SURVEY.md §7.4. The state stores
+    take the session's stream width (`spark.sql.shuffle.partitions`,
+    see session.py). Pass `checkpoint` to persist the run's state for
+    post-hoc inspection (s_state_reader); the default temp checkpoint
+    is discarded by Spark on clean stop.
     """
     name = f"s_{uuid.uuid4().hex[:12]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        writer = (
-            df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-        )
-        if checkpoint is not None:
-            writer = writer.option("checkpointLocation", checkpoint)
-        q = writer.start()
-        if not q.awaitTermination(timeout=600):
-            q.stop()
-            raise TimeoutError(f"streaming query {name} exceeded 600s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    writer = (
+        df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+    )
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    q = writer.start()
+    if not q.awaitTermination(timeout=600):
+        q.stop()
+        raise TimeoutError(f"streaming query {name} exceeded 600s")
     result = spark.table(name)
     # Pin the sink rows as an eagerly checkpointed frame BEFORE the
     # temp view is dropped. Round-14: this replaces
@@ -865,20 +859,15 @@ def s_topk_update_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(), f"analytic_upd_{uuid.uuid4().hex[:8]}.json"
     )
     sink = TopKFileSink(path, k=5, window="1 day")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            counts.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout=600):
-            q.stop()
-            raise TimeoutError("s_topk_update_sink exceeded 600s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q = (
+        counts.writeStream.outputMode("update")
+        .foreachBatch(sink)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout=600):
+        q.stop()
+        raise TimeoutError("s_topk_update_sink exceeded 600s")
     if not os.path.exists(path):  # empty replay: sink never fired
         return spark.createDataFrame(
             [], "rank int, hashtag string, n long"
@@ -1344,20 +1333,15 @@ def s_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", "event_id", "event_type", "value"
     )
     sink = UpsertKeyedSink()
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            events.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout=600):
-            q.stop()
-            raise TimeoutError("s_upsert_sink exceeded 600s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q = (
+        events.writeStream.outputMode("append")
+        .foreachBatch(sink)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout=600):
+        q.stop()
+        raise TimeoutError("s_upsert_sink exceeded 600s")
     return sink.table().select(
         "user_id",
         F.col("event_type").alias("last_type"),

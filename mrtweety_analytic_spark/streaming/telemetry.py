@@ -45,6 +45,11 @@ class ProgressRecorder(StreamingQueryListener):
             "rows_per_sec": p.processedRowsPerSecond,
             "batch_duration_ms": (p.durationMs or {}).get("triggerExecution"),
             "state_rows": sum(s.numRowsTotal for s in state) if state else 0,
+            # the state width and the commit task time it costs
+            "state_partitions": max(
+                (s.numShufflePartitions for s in state), default=0
+            ),
+            "state_commit_ms": sum(s.commitTimeMs for s in state),
         }
         with self._lock:
             self.records.append(rec)

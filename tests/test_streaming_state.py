@@ -523,6 +523,17 @@ def test_telemetry_records_progress_and_state_size(spark, tmp_path):
         assert s["n_batches"] >= 3
         assert s["total_input_rows"] == 24
         assert s["max_state_rows"] == 4  # four distinct keys held in state
+        from mrtweety_analytic_spark.session import RUNTIME_CONF
+
+        width = int(RUNTIME_CONF["spark.sql.shuffle.partitions"])
+        for r in rec.records:
+            assert {
+                "batch_id", "input_rows", "rows_per_sec",
+                "batch_duration_ms", "state_rows",
+            } <= r.keys()
+            assert r["state_partitions"] == width
+            assert r["state_commit_ms"] >= 0
+        assert sum(r["state_commit_ms"] for r in rec.records) > 0
     finally:
         telemetry.detach(spark, rec)
         spark.catalog.dropTempView("tel_counts")
