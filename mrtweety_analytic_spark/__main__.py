@@ -168,7 +168,7 @@ def main(argv: list[str] | None = None) -> int:
 
         from .sources import load_events_stream
         from .streaming.pipeline import windowed_counts
-        from .streaming.sink import make_topk_file_sink
+        from .streaming.sink import TopKFileSink
 
         events = load_events_stream(spark, args.sf_dir).select(
             "ts", F.col("event_type").alias("hashtag")
@@ -183,7 +183,7 @@ def main(argv: list[str] | None = None) -> int:
             rec = telemetry.attach(spark)
         # The sink sums the trailing window's panes and takes the
         # top-5 (≙ foreachRDD(save), SparkApplication.scala:92-95).
-        emit = make_topk_file_sink(args.out, k=5, window=args.window)
+        emit = TopKFileSink(args.out, k=5, window=args.window)
         query = (
             counts.writeStream.outputMode("update")
             .foreachBatch(emit)

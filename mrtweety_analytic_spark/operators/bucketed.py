@@ -10,15 +10,14 @@ bucketed read → join result against a plain join of the originals.
 
 from __future__ import annotations
 
-import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
+from ..util import app_temp_dir
 
 N_BUCKETS = 8
 
@@ -56,9 +55,8 @@ _WRITTEN_FOR: dict[str, str] = {}
     """,
 )
 def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "mrtweety_bucketed_" + sf_dir.strip("/").replace("/", "_"),
+    base = app_temp_dir(
+        spark, "bucketed_" + sf_dir.strip("/").replace("/", "_")
     )
     cached = (
         _WRITTEN_FOR.get("sf_dir") == sf_dir

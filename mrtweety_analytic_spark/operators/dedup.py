@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import LastHandle
+from ..util import LastHandle, ordered_pairs
 
 # Multi-consumer intermediates of the funnel/dedup composites,
 # persisted per call — without these the quality-gate tokenization
@@ -672,31 +672,12 @@ def _postings_of(shingles: DataFrame) -> DataFrame:
 
 def _pairs_from_postings(postings: DataFrame) -> DataFrame:
     """(doc_a, doc_b, n_common) from posting arrays — the map-side
-    ordered-pair explode + count of _pair_counts' contract.
-
-    The fan-out is posexplode + slice + explode (two codegen'd
-    generators) rather than a nested transform(...) HOF building an
-    array-of-structs (interpreted, and it materializes the full
-    d^2/2 pair array per posting row before exploding). Round-13
-    in-session A/B (tools/opt_exp_jaccard.py, sf 0.1, identical
-    result signature): full jaccard kernel 3.4/4.7/3.0 s with the
-    HOF form vs 3.0/3.1/2.7 s with this form + the checkpointed
-    index.
-    """
-    pairs = postings.select(
-        F.posexplode("ds").alias("i", "doc_a"), F.col("ds")
-    ).select(
-        "doc_a",
-        F.explode(
-            F.slice(
-                F.col("ds"),
-                F.col("i") + 2,
-                F.greatest(F.lit(0), F.size("ds") - F.col("i") - 1),
-            )
-        ).alias("doc_b"),
-    )
-    return pairs.groupBy("doc_a", "doc_b").agg(
-        F.count(F.lit(1)).alias("n_common")
+    ordered-pair explode (util.ordered_pairs) + count of _pair_counts'
+    contract."""
+    return (
+        ordered_pairs(postings, "ds", "doc_a", "doc_b")
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
     )
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
+from ..util import ordered_pairs
 
 
 @register(
@@ -118,29 +119,18 @@ def basket_pairs_core(li: DataFrame, cap_r: int | None = None) -> DataFrame:
         )
         fi = ranked.where(F.col("rn") <= cap_r).select("o", "p")
     # Within-basket pair generation via the certified posting-list
-    # fan-out from dedup._pairs_from_postings (posexplode + slice +
-    # explode over the basket's sorted item array) instead of the
-    # o-keyed self-join — ONE o-exchange into the collect_list
-    # instead of TWO feeding a SortMergeJoin (guide §2.4); pair counts
-    # are integer-exact either way (items are distinct per basket,
-    # ascending slice ≡ p1 < p2). Basket arrays are support-pruned
-    # (freq ≥ mean) and cap_r bounds them further when set, so array
-    # width is the same fan-out bound the join form had.
+    # fan-out (util.ordered_pairs over the basket's sorted item array)
+    # instead of the o-keyed self-join — ONE o-exchange into the
+    # collect_list instead of TWO feeding a SortMergeJoin (guide §2.4);
+    # pair counts are integer-exact either way (items are distinct per
+    # basket, ascending slice ≡ p1 < p2). Basket arrays are
+    # support-pruned (freq ≥ mean) and cap_r bounds them further when
+    # set, so array width is the same fan-out bound the join form had.
     baskets = fi.groupBy("o").agg(
         F.sort_array(F.collect_list("p")).alias("ps")
     )
     pairs = (
-        baskets.select(F.posexplode("ps").alias("i", "p1"), F.col("ps"))
-        .select(
-            "p1",
-            F.explode(
-                F.slice(
-                    F.col("ps"),
-                    F.col("i") + 2,
-                    F.greatest(F.lit(0), F.size("ps") - F.col("i") - 1),
-                )
-            ).alias("p2"),
-        )
+        ordered_pairs(baskets, "ps", "p1", "p2")
         .groupBy("p1", "p2")
         .agg(F.count(F.lit(1)).alias("pair_cnt"))
     )

@@ -8,12 +8,15 @@ the query needs.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import register
 from ..sources import load_table, table_path
+from ..util import app_temp_dir
 
 
 @register(
@@ -108,14 +111,9 @@ def partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     written once per Spark session (never reused across sessions).
     Shared by the static (q_scan_partition_pruned) and dynamic
     (q_join_dpp) pruning certificates."""
-    import os
-    import tempfile
-
     events = load_table(spark, sf_dir, "events")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"mrtweety_part_events_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{os.getuid()}",
+    out = app_temp_dir(
+        spark, "part_events_" + os.path.basename(os.path.normpath(sf_dir))
     )
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _PART_EVENTS_WRITTEN:

@@ -58,6 +58,239 @@ def cosine_expr(a: F.Column, b: F.Column) -> F.Column:
     )
 
 
+# --- Vector-quantization kernels --------------------------------------
+# One copy of each step the k-means / PQ / IVF-PQ family shares, so a
+# tiebreak or rounding fix lands in one place. PLANS.md maps each
+# family query to the kernels it uses.
+
+PQ_M = 8  # subspaces
+PQ_S = 8  # dims per subspace (M × S = 64 = embedding dim)
+
+
+def _sq_l2(a: F.Column, b: F.Column) -> F.Column:
+    """Squared L2 distance of two array<double> columns: one
+    interpreted zip_with + aggregate fold (the dot_expr caveat holds)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _km_l2(a: F.Column, b: F.Column) -> F.Column:
+    return F.sqrt(_sq_l2(a, b))
+
+
+def _dim_means(df: DataFrame, keys: list[str], arr: str) -> DataFrame:
+    """(keys..., ce): each key's mean of the array column `arr` —
+    posexplode + a partial-aggregable (keys, dim) avg, re-assembled in
+    dim order. The shuffle is O(keys × dims), independent of the row
+    count. (A single-aggregate form lost its round-14 A/B.)"""
+    return (
+        df.select(*keys, F.posexplode(arr).alias("dim", "v"))
+        .groupBy(*keys, "dim")
+        .agg(F.avg("v").alias("c"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("dim", "c"))),
+                lambda s: s["c"],
+            ).alias("ce")
+        )
+    )
+
+
+def _pq_split(df: DataFrame, keys: list[str], arr: str, out: str) -> DataFrame:
+    """(keys..., m, out): one row per PQ subspace m = 1..PQ_M, holding
+    the m-th PQ_S-dim slice of the array column `arr`."""
+    subs = F.transform(
+        F.sequence(F.lit(1), F.lit(PQ_M)),
+        lambda m: F.slice(F.col(arr), (m - 1) * PQ_S + 1, PQ_S),
+    )
+    return df.select(*keys, F.posexplode(subs).alias("m0", out)).select(
+        *keys, (F.col("m0") + 1).alias("m"), out
+    )
+
+
+def _nearest(
+    df: DataFrame,
+    book: DataFrame,
+    vec: str,
+    code: str,
+    cw: str,
+    by: str | None = None,
+    dist: str | None = None,
+) -> DataFrame:
+    """Nearest codeword of each row by L2 on the array column `vec`.
+    The codebook rows (by, code, cw) collapse to ONE broadcast array
+    row per `by` value (one row in all without `by`), and each row
+    takes array_min over struct(round(L2, 6), code): the struct field
+    order makes array_min the (rounded distance, code) argmin
+    tiebreak. No window, no groupBy and no Exchange of the fanned-out
+    rows, so an assignment pass is one map-side scan at any scale.
+    Returns df's columns plus `code`, and the distance as `dist` when
+    it is named."""
+    packed = book.groupBy(*([by] if by else [])).agg(
+        F.collect_list(F.struct(code, cw)).alias("book")
+    )
+    best = F.array_min(
+        F.transform(
+            "book",
+            lambda s: F.struct(
+                F.round(_km_l2(F.col(vec), s[cw]), 6).alias("d"),
+                s[code].alias(code),
+            ),
+        )
+    )
+    if by:
+        joined = df.join(F.broadcast(packed), by)
+    else:
+        joined = df.crossJoin(F.broadcast(packed))
+    extra = [best["d"].alias(dist)] if dist else []
+    return joined.select(*df.columns, best[code].alias(code), *extra)
+
+
+def _label_codebook(vecs: DataFrame, arr: str) -> DataFrame:
+    """(m, code, cw): the untrained PQ codebook — each label's mean of
+    `arr`, split into PQ_M sub-centroids whose code is the label."""
+    means = _dim_means(vecs, ["label"], arr).withColumnRenamed("label", "code")
+    return _pq_split(means, ["code"], "ce", "cw")
+
+
+def _adc(
+    cands: DataFrame, psubs: DataFrame, book: DataFrame, on: tuple = ()
+) -> DataFrame:
+    """Asymmetric distance computation (Jégou et al., TPAMI 2011):
+    each probe's look-up table of squared sub-distances to every
+    codeword — psubs (probe_id, *on, m, psub) against the broadcast
+    book (m, code, cw) — is broadcast and equi-joined to the candidate
+    codes (vec_id, m, code, [probe_id, *on]) on (m, code, *on); the
+    PQ_M-row sum per (probe, candidate) is partial-aggregable. approx
+    L2 = sqrt(Σ_m d²), rounded to 6. Without `on` keys every probe
+    scores every code row (flat PQ) and self-matches drop here."""
+    lut = psubs.join(F.broadcast(book), "m").select(
+        "probe_id",
+        *[k for k in on if k != "probe_id"],
+        "m",
+        F.col("code").alias("l_code"),
+        _sq_l2(F.col("psub"), F.col("cw")).alias("d2"),
+    )
+    scored = cands.join(
+        F.broadcast(lut),
+        [cands["m"] == lut["m"], cands["code"] == lut["l_code"]]
+        + [cands[k] == lut[k] for k in on],
+    )
+    for k in on:
+        scored = scored.drop(lut[k])
+    if not on:
+        scored = scored.filter(F.col("vec_id") != F.col("probe_id"))
+    return scored.groupBy("probe_id", "vec_id").agg(
+        F.round(F.sqrt(F.sum("d2")), 6).alias("approx_l2")
+    )
+
+
+def _topk(df: DataFrame, k: int, order: list, cols: list[str]) -> DataFrame:
+    """Each probe's first k rows by `order` (row_number over a
+    probe_id window; callers order by rounded scores with an id
+    tiebreak, so the cut is engine-exact)."""
+    w = W.partitionBy("probe_id").orderBy(*order)
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select(*cols)
+    )
+
+
+def _adc_top(adc: DataFrame, k: int) -> DataFrame:
+    return _topk(
+        adc, k, ["approx_l2", "vec_id"], ["probe_id", "vec_id", "approx_l2"]
+    )
+
+
+def _probes(emb: DataFrame, arr: str = "emb", norm: bool = False) -> DataFrame:
+    """The probe set (vec_id % PROBE_MOD == 0) as (probe_id, pe), plus
+    its norm `pnorm` when asked — a per-row invariant computed once,
+    never per pair."""
+    cols = [F.col("vec_id").alias("probe_id"), F.col(arr).alias("pe")]
+    if norm:
+        cols.append(F.sqrt(dot_expr(F.col(arr), F.col(arr))).alias("pnorm"))
+    return emb.filter(F.col("vec_id") % PROBE_MOD == 0).select(*cols)
+
+
+def _route(probes: DataFrame, cent: DataFrame, key: str) -> DataFrame:
+    """IVF coarse routing over the tiny probes × cells grid: every
+    broadcast centroid (key, ce) ranked per probe (`rn`) by cosine
+    rounded to 4, key-asc tiebreak."""
+    w = W.partitionBy("probe_id").orderBy(
+        F.desc(F.round(cosine_expr(F.col("ce"), F.col("pe")), 4)),
+        F.asc(key),
+    )
+    return probes.join(F.broadcast(cent)).withColumn(
+        "rn", F.row_number().over(w)
+    )
+
+
+def _cell_scores(
+    vecs: DataFrame, arr: str, cells: DataFrame, key: str, *extra: str
+) -> DataFrame:
+    """(extra..., probe_id, vec_id, score): exact cosine, rounded to 6,
+    of each routed probe against its cells' vectors — an equi-join on
+    the cell key (candidate cost Σ|selected cells|, never n × probes).
+    Norms are per-row invariants computed before the join, so the
+    per-pair work is ONE interpreted dot fold, not cosine_expr's
+    three."""
+    return (
+        vecs.withColumn("enorm", F.sqrt(dot_expr(F.col(arr), F.col(arr))))
+        .join(F.broadcast(cells), key)
+        .filter(F.col("vec_id") != F.col("probe_id"))
+        .select(
+            *extra,
+            "probe_id",
+            "vec_id",
+            F.round(
+                dot_expr(F.col(arr), F.col("pe"))
+                / (F.col("enorm") * F.col("pnorm")),
+                6,
+            ).alias("score"),
+        )
+    )
+
+
+def _recall(
+    approx: DataFrame,
+    exact: DataFrame,
+    name: str = "recall_at_k",
+    by: str | None = None,
+) -> DataFrame:
+    """Recall certificate: the exact top-k rows (probe_id, vec_id)
+    left-joined to the broadcast approximate ones — n_exact, n_hit and
+    their ratio rounded to 4 — over the whole probe set (with
+    n_probes), or per value of `by`, a key both sides carry. Both
+    sides are k·probes rows at any corpus size, so broadcasting the
+    approximate side keeps the outer join map-side instead of a
+    two-Exchange sort-merge."""
+    keys = ([by] if by else []) + ["probe_id", "vec_id"]
+    hits = approx.select(*[F.col(k).alias("i_" + k) for k in keys])
+    j = exact.join(
+        F.broadcast(hits), [F.col(k) == F.col("i_" + k) for k in keys], "left"
+    )
+    n, n_hit = F.count(F.lit(1)), F.count("i_vec_id")
+    aggs = [
+        n.alias("n_exact"),
+        n_hit.alias("n_hit"),
+        F.round(n_hit / n, 4).alias(name),
+    ]
+    if by:
+        return j.groupBy(by).agg(*aggs)
+    return j.agg(F.countDistinct("probe_id").alias("n_probes"), *aggs)
+
+
+def _knn_top(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(probe_id, vec_id) of q_sim_knn_batch: the exact cosine top-k
+    the IVF recall certificates compare against."""
+    return q_sim_knn_batch(spark, sf_dir).select("probe_id", "vec_id")
+
+
 @register(
     "q_sim_knn_cosine",
     oracle=f"""
@@ -399,40 +632,9 @@ def q_sim_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
     )
-    cent = (
-        emb.select("label", F.posexplode("e").alias("dim", "v"))
-        .groupBy("label", "dim")
-        .agg(F.avg("v").alias("c"))
-        .groupBy(F.col("label").alias("c_label"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s["c"],
-            ).alias("ce")
-        )
-        .agg(F.collect_list(F.struct("c_label", "ce")).alias("cents"))
-    )
-    dist2 = lambda ce: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("e"), ce, lambda p, q: (p - q) * (p - q)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    # struct field order (dist, label) makes array_min implement the
-    # (rounded-distance, label) argmin tiebreak lexicographically.
-    best = F.array_min(
-        F.transform(
-            F.col("cents"),
-            lambda s: F.struct(
-                F.round(F.sqrt(dist2(s["ce"])), 6).alias("dist"),
-                s["c_label"].alias("lb"),
-            ),
-        )
-    )
-    return emb.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "label",
-        best["lb"].alias("assigned_label"),
-        best["dist"].alias("dist_l2"),
+    cent = _dim_means(emb, ["label"], "e").withColumnRenamed("label", "c_label")
+    return _nearest(emb, cent, "e", "c_label", "ce", dist="dist_l2").select(
+        "vec_id", "label", F.col("c_label").alias("assigned_label"), "dist_l2"
     )
 
 
@@ -481,10 +683,6 @@ def q_sim_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PQ_M = 8  # subspaces
-PQ_S = 8  # dims per subspace (M × S = 64 = embedding dim)
-
-
 @register(
     "q_sim_pq_assign",
     oracle="""
@@ -522,62 +720,19 @@ def q_sim_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k-means E-step siblings: q_sim_centroid/q_sim_kmeans_assign);
     a trained codebook drops in as the same tiny broadcast table.
 
-    Scale shape: the codebook (M × labels rows) is BROADCAST; the
-    corpus side explodes into M subvectors per row map-side, and the
-    nearest-code argmin is a partial-aggregable
-    min(struct(rounded_dist, code)) — one shuffle of O(rows × M)
-    compact tuples, no window over the corpus.
+    Scale shape: the codebook (M × labels rows) is BROADCAST, packed
+    as one codeword array per subspace; the corpus side explodes into
+    M subvectors per row map-side, and the nearest-code argmin is a
+    per-row array_min over struct(rounded_dist, code) — no shuffle and
+    no window over the corpus.
     """
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("emb")
     )
-    lng = emb.select("label", F.posexplode("emb").alias("i0", "v"))
-    cent = (
-        lng.groupBy("label", (F.col("i0") + 1).alias("dim"))
-        .agg(F.avg("v").alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s["c"],
-            ).alias("ce")
-        )
-    )
-    msplit = F.transform(
-        F.sequence(F.lit(1), F.lit(PQ_M)),
-        lambda m: F.slice(F.col("ce"), (m - 1) * PQ_S + 1, PQ_S),
-    )
-    codebook = cent.select(
-        F.col("label").alias("c_label"),
-        F.posexplode(msplit).alias("m0", "sub_ce"),
-    ).select((F.col("m0") + 1).alias("m"), "c_label", "sub_ce")
-    subs = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), F.lit(PQ_M)),
-                lambda m: F.slice(F.col("emb"), (m - 1) * PQ_S + 1, PQ_S),
-            )
-        ).alias("m0", "sub"),
-    ).select("vec_id", (F.col("m0") + 1).alias("m"), "sub")
-    d = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("sub"), F.col("sub_ce"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    scored = subs.join(F.broadcast(codebook), "m").select(
-        "vec_id",
-        "m",
-        F.struct(F.round(d, 6).alias("d"), F.col("c_label")).alias("cand"),
-    )
-    best = scored.groupBy("vec_id", "m").agg(F.min("cand").alias("b"))
-    return best.select(
-        "vec_id",
-        F.col("m").cast("int").alias("subspace"),
-        F.col("b.c_label").alias("code"),
-        F.col("b.d").alias("dist_l2"),
+    subs = _pq_split(emb, ["vec_id"], "emb", "sub")
+    book = _label_codebook(emb, "emb")
+    return _nearest(subs, book, "sub", "code", "cw", "m", "dist_l2").select(
+        "vec_id", F.col("m").cast("int").alias("subspace"), "code", "dist_l2"
     )
 
 
@@ -652,65 +807,20 @@ def q_sim_ivf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
     )
-
-    # Coarse codebook: per-(label, dim) mean, re-assembled in dim
-    # order. O(labels × dims) rows — broadcast-sized at any corpus
-    # scale (the codebook IS small by construction; that's what makes
-    # it a codebook).
-    cent = (
-        emb.select("label", F.posexplode("e").alias("dim", "v"))
-        .groupBy("label", "dim")
-        .agg(F.avg("v").alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s["c"],
-            ).alias("ce")
-        )
-    )
-
-    probes = emb.filter(F.col("vec_id") % PROBE_MOD == 0).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.sqrt(dot_expr(F.col("e"), F.col("e"))).alias("pnorm"),
-    )
-
-    routed = probes.join(F.broadcast(cent))  # probes × labels grid
-    w_route = W.partitionBy("probe_id").orderBy(
-        F.desc(F.round(cosine_expr(F.col("ce"), F.col("pe")), 4)),
-        F.asc("label"),
-    )
+    # Coarse codebook: per-label mean, O(labels × dims) rows —
+    # broadcast-sized at any corpus scale (the codebook IS small by
+    # construction; that's what makes it a codebook).
+    cent = _dim_means(emb, ["label"], "e")
     cells = (
-        routed.withColumn("rn", F.row_number().over(w_route))
+        _route(_probes(emb, "e", norm=True), cent, "label")
         .filter(F.col("rn") <= NPROBE)
         .select("probe_id", "label", "pe", "pnorm")
     )
-
-    # Norms are per-ROW invariants: computed once on each side before
-    # the pair join, so the per-pair work is ONE interpreted HOF fold
-    # (the dot product), not the three cosine_expr would do.
-    cand = (
-        emb.withColumn("enorm", F.sqrt(dot_expr(F.col("e"), F.col("e"))))
-        .join(F.broadcast(cells), "label")
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "vec_id",
-            F.round(
-                dot_expr(F.col("e"), F.col("pe"))
-                / (F.col("enorm") * F.col("pnorm")),
-                6,
-            ).alias("score"),
-        )
-    )
-    w_rank = W.partitionBy("probe_id").orderBy(
-        F.desc("score"), F.asc("vec_id")
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= RERANK_K)
-        .select("probe_id", "vec_id", "score")
+    return _topk(
+        _cell_scores(emb, "e", cells, "label"),
+        RERANK_K,
+        [F.desc("score"), F.asc("vec_id")],
+        ["probe_id", "vec_id", "score"],
     )
 
 
@@ -759,27 +869,9 @@ def q_sim_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
     )
-    cent = (
-        emb.select("label", F.posexplode("e").alias("dim", "v"))
-        .groupBy("label", "dim")
-        .agg(F.avg("v").alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s["c"],
-            ).alias("ce")
-        )
-    )
-    dist = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("e"), F.col("ce"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+    cent = _dim_means(emb, ["label"], "e")
     d = emb.join(F.broadcast(cent), "label").select(
-        "vec_id", "label", dist.alias("dist")
+        "vec_id", "label", _km_l2(F.col("e"), F.col("ce")).alias("dist")
     )
     stats = d.groupBy("label").agg(
         F.avg("dist").alias("mu"), F.stddev_samp("dist").alias("sigma")
@@ -892,24 +984,7 @@ def q_sim_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both sides are k·probes-row results; the comparison join
     is O(k·probes) regardless of corpus size.
     """
-    ivf = q_sim_ivf_rerank(spark, sf_dir).select(
-        F.col("probe_id").alias("i_probe"), F.col("vec_id").alias("i_vec")
-    )
-    exact = q_sim_knn_batch(spark, sf_dir).select("probe_id", "vec_id")
-    j = exact.join(
-        F.broadcast(ivf),
-        (F.col("probe_id") == F.col("i_probe"))
-        & (F.col("vec_id") == F.col("i_vec")),
-        "left",
-    )
-    return j.agg(
-        F.countDistinct("probe_id").alias("n_probes"),
-        F.count(F.lit(1)).alias("n_exact"),
-        F.count("i_vec").alias("n_hit"),
-        F.round(F.count("i_vec") / F.count(F.lit(1)), 4).alias(
-            "recall_at_k"
-        ),
-    )
+    return _recall(q_sim_ivf_rerank(spark, sf_dir), _knn_top(spark, sf_dir))
 
 
 KM_K = 8  # coarse-quantizer cells; seeds = the KM_K smallest vec_ids
@@ -983,58 +1058,10 @@ _IVF_KMEANS_ORACLE = f"""
 """
 
 
-def _km_l2(a: F.Column, b: F.Column) -> F.Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def _km_assign_df(emb: DataFrame, c: DataFrame) -> DataFrame:
-    """Shuffle-free argmin assignment (VERDICT r05 item 2): all K
-    centroids collapse to ONE broadcast array row and each vector
-    takes array_min over struct(round(dist,6), cl) — the same
-    lexicographic (dist, cl) tiebreak the old window top-1 used,
-    with zero Exchange of the K-fanned corpus (the
-    q_sim_kmeans_assign shape, shared by every Lloyd step and by
-    q_sim_nprobe_curve)."""
-    packed = c.agg(F.collect_list(F.struct("cl", "ce")).alias("cents"))
-    best = F.array_min(
-        F.transform(
-            F.col("cents"),
-            lambda s: F.struct(
-                F.round(_km_l2(F.col("emb"), s["ce"]), 6).alias("dist"),
-                s["cl"].alias("cl"),
-            ),
-        )
-    )
-    return emb.crossJoin(F.broadcast(packed)).select(
-        "vec_id", "emb", best["cl"].alias("cl")
-    )
-
-
-def _km_centroids_df(a: DataFrame) -> DataFrame:
-    return (
-        a.select("cl", F.posexplode("emb").alias("dim", "v"))
-        .groupBy("cl", "dim")
-        .agg(F.avg("v").alias("m"))
-        .groupBy("cl")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim", "m"))),
-                lambda s: s["m"],
-            ).alias("ce")
-        )
-    )
-
-
 def _km_train(emb: DataFrame) -> DataFrame:
     """Two deterministic Lloyd iterations from the KM_K smallest
     vec_ids — the learned coarse quantizer shared by
-    q_sim_ivf_kmeans and q_sim_nprobe_curve.
+    q_sim_ivf_kmeans, q_sim_nprobe_curve and the IVF-PQ tiers.
 
     The returned frame is KM_K tiny rows but carries the full
     two-iteration training lineage (2× corpus scan + 2 aggregate
@@ -1050,7 +1077,7 @@ def _km_train(emb: DataFrame) -> DataFrame:
         F.col("vec_id").alias("cl"), F.col("emb").alias("ce")
     )
     for _ in range(2):
-        cent = _km_centroids_df(_km_assign_df(emb, cent))
+        cent = _dim_means(_nearest(emb, cent, "emb", "cl", "ce"), ["cl"], "emb")
     return cent.localCheckpoint(eager=False)
 
 
@@ -1080,42 +1107,17 @@ def q_sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
     cent = _km_train(emb)
-    af = _km_assign_df(emb, cent)
-
-    probes = emb.filter(F.col("vec_id") % PROBE_MOD == 0).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("emb").alias("pe"),
-        F.sqrt(dot_expr(F.col("emb"), F.col("emb"))).alias("pnorm"),
-    )
-    w_route = W.partitionBy("probe_id").orderBy(
-        F.desc(F.round(cosine_expr(F.col("ce"), F.col("pe")), 4)),
-        F.asc("cl"),
-    )
+    af = _nearest(emb, cent, "emb", "cl", "ce")
     cells = (
-        probes.join(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(w_route))
+        _route(_probes(emb, norm=True), cent, "cl")
         .filter(F.col("rn") <= NPROBE)
         .select("probe_id", "cl", "pe", "pnorm")
     )
-    cand = (
-        af.withColumn("enorm", F.sqrt(dot_expr(F.col("emb"), F.col("emb"))))
-        .join(F.broadcast(cells), "cl")
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "vec_id",
-            F.round(
-                dot_expr(F.col("emb"), F.col("pe"))
-                / (F.col("enorm") * F.col("pnorm")),
-                6,
-            ).alias("score"),
-        )
-    )
-    w_rank = W.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= RERANK_K)
-        .select("probe_id", "vec_id", "score")
+    return _topk(
+        _cell_scores(af, "emb", cells, "cl"),
+        RERANK_K,
+        [F.desc("score"), F.asc("vec_id")],
+        ["probe_id", "vec_id", "score"],
     )
 
 
@@ -1143,24 +1145,7 @@ def q_sim_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     evidence that training the coarse quantizer on the vectors is
     what makes IVF routing viable. Same O(k·probes) comparison join.
     """
-    ivf = q_sim_ivf_kmeans(spark, sf_dir).select(
-        F.col("probe_id").alias("i_probe"), F.col("vec_id").alias("i_vec")
-    )
-    exact = q_sim_knn_batch(spark, sf_dir).select("probe_id", "vec_id")
-    j = exact.join(
-        F.broadcast(ivf),
-        (F.col("probe_id") == F.col("i_probe"))
-        & (F.col("vec_id") == F.col("i_vec")),
-        "left",
-    )
-    return j.agg(
-        F.countDistinct("probe_id").alias("n_probes"),
-        F.count(F.lit(1)).alias("n_exact"),
-        F.count("i_vec").alias("n_hit"),
-        F.round(F.count("i_vec") / F.count(F.lit(1)), 4).alias(
-            "recall_at_k"
-        ),
-    )
+    return _recall(q_sim_ivf_kmeans(spark, sf_dir), _knn_top(spark, sf_dir))
 
 
 @register(
@@ -1344,6 +1329,30 @@ _PQ_ADC_ORACLE_CORE = """
 """
 
 
+def _pq_search(emb: DataFrame, codes: DataFrame, book: DataFrame) -> DataFrame:
+    """Flat PQ search shared by q_sim_pq_adc and q_sim_pq_trained:
+    score every probe by ADC against the corpus `codes` (vec_id, m,
+    code) of `book` (m, code, cw), keep each probe's top-10."""
+    psubs = _pq_split(_probes(emb), ["probe_id"], "pe", "psub")
+    return _adc_top(_adc(codes, psubs, book), 10)
+
+
+def _exact_l2_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each probe's exact top-10 by L2 rounded to 6, vec_id tiebreak —
+    the reference of the PQ recall certificates."""
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    )
+    return _topk(
+        emb.crossJoin(F.broadcast(_probes(emb))).filter(
+            F.col("vec_id") != F.col("probe_id")
+        ),
+        10,
+        [F.round(_km_l2(F.col("emb"), F.col("pe")), 6).asc(), F.col("vec_id").asc()],
+        ["probe_id", "vec_id"],
+    )
+
+
 @register(
     "q_sim_pq_adc",
     oracle=f"""
@@ -1375,89 +1384,21 @@ def q_sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.col("embedding").cast("array<double>").alias("emb"),
     )
-    lng = emb.select("label", F.posexplode("emb").alias("i0", "v"))
-    cent = (
-        lng.groupBy("label", (F.col("i0") + 1).alias("dim"))
-        .agg(F.avg("v").alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s["c"],
-            ).alias("ce")
-        )
-    )
-    split_m = lambda col: F.posexplode(  # noqa: E731
-        F.transform(
-            F.sequence(F.lit(1), F.lit(PQ_M)),
-            lambda m: F.slice(col, (m - 1) * PQ_S + 1, PQ_S),
-        )
-    )
-    codebook = cent.select(
-        F.col("label").alias("c_label"), split_m(F.col("ce")).alias("m0", "sub_ce")
-    ).select((F.col("m0") + 1).alias("m"), "c_label", "sub_ce")
-    subs = emb.select(
-        "vec_id", split_m(F.col("emb")).alias("m0", "sub")
-    ).select("vec_id", (F.col("m0") + 1).alias("m"), "sub")
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("sub"), F.col("sub_ce"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    # Encode: nearest sub-centroid per (vec, m) — partial-aggregable
-    # min(struct(rounded_dist, code)), no window over the corpus.
+    book = _label_codebook(emb, "emb")
+    # Encode: nearest sub-centroid per (vec, m) as a partial-aggregable
+    # min(struct(rounded_dist, code)). Its (vec_id, m) Exchange spreads
+    # the probes × corpus ADC join below over the shuffle width;
+    # _nearest encodes map-side, which leaves that join in the tasks
+    # of the embeddings scan, and lost an interleaved sf0.1 A/B here.
+    d = F.round(_km_l2(F.col("sub"), F.col("cw")), 6)
     codes = (
-        subs.join(F.broadcast(codebook), "m")
+        _pq_split(emb, ["vec_id"], "emb", "sub")
+        .join(F.broadcast(book), "m")
         .groupBy("vec_id", "m")
-        .agg(
-            F.min(
-                F.struct(
-                    F.round(F.sqrt(d2), 6).alias("d"),
-                    F.col("c_label").alias("code"),
-                )
-            ).alias("best")
-        )
-        .select("vec_id", "m", F.col("best.code").alias("code"))
+        .agg(F.min(F.struct(d.alias("d"), "code")).alias("best"))
+        .select("vec_id", "m", "best.code")
     )
-    psubs = (
-        emb.filter(F.col("vec_id") % PROBE_MOD == 0)
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            split_m(F.col("emb")).alias("m0", "psub"),
-        )
-        .select("probe_id", (F.col("m0") + 1).alias("m"), "psub")
-    )
-    lut = psubs.join(F.broadcast(codebook), "m").select(
-        "probe_id",
-        "m",
-        "c_label",
-        F.aggregate(
-            F.zip_with(
-                F.col("psub"),
-                F.col("sub_ce"),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("d2"),
-    )
-    adc = (
-        codes.join(
-            F.broadcast(lut),
-            (codes["m"] == lut["m"]) & (codes["code"] == lut["c_label"]),
-        )
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .groupBy("probe_id", "vec_id")
-        .agg(F.round(F.sqrt(F.sum("d2")), 6).alias("approx_l2"))
-    )
-    w = W.partitionBy("probe_id").orderBy("approx_l2", "vec_id")
-    return (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("probe_id", "vec_id", "approx_l2")
-    )
+    return _pq_search(emb, codes, book)
 
 
 @register(
@@ -1497,47 +1438,8 @@ def q_sim_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the trade a 100 TB index makes on purpose — and the oracle hash
     pins it cross-engine.
     """
-    adc = q_sim_pq_adc(spark, sf_dir).select(
-        F.col("probe_id").alias("a_probe"), F.col("vec_id").alias("a_vec")
-    )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    probes = emb.filter(F.col("vec_id") % PROBE_MOD == 0).select(
-        F.col("vec_id").alias("probe_id"), F.col("emb").alias("pe")
-    )
-    l2 = F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                F.col("emb"), F.col("pe"), lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    w = W.partitionBy("probe_id").orderBy(
-        F.round(l2, 6).asc(), F.col("vec_id").asc()
-    )
-    exact = (
-        emb.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("probe_id", "vec_id")
-    )
-    j = exact.join(
-        F.broadcast(adc),
-        (F.col("probe_id") == F.col("a_probe"))
-        & (F.col("vec_id") == F.col("a_vec")),
-        "left",
-    )
-    return j.agg(
-        F.countDistinct("probe_id").alias("n_probes"),
-        F.count(F.lit(1)).alias("n_exact"),
-        F.count("a_vec").alias("n_hit"),
-        F.round(F.count("a_vec") / F.count(F.lit(1)), 4).alias(
-            "recall_at_10"
-        ),
+    return _recall(
+        q_sim_pq_adc(spark, sf_dir), _exact_l2_top10(spark, sf_dir), "recall_at_10"
     )
 
 
@@ -1623,70 +1525,22 @@ _PQ_TRAINED_ORACLE_CORE = """
 """
 
 
-def _pq_trained_codebook(emb: DataFrame) -> DataFrame:
+def _pq_trained_codebook(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Lloyd-train PQT_K codewords per subspace (seeds = subvectors
     of the PQT_K smallest vec_ids, PQT_ITERS deterministic
     iterations, empty clusters keep their previous codeword). Each
     iteration is: one broadcast of the KiB-sized codebook, one
-    shuffle-free per-row argmin (min over struct(rounded_dist, code)
-    — no window over the corpus), one partial-aggregable
-    (m, code, dim) mean. The k-means cost shape, in subspace."""
-    split_m = F.posexplode(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(PQ_M)),
-            lambda m: F.slice(F.col("emb"), (m - 1) * PQ_S + 1, PQ_S),
-        )
-    )
-    subs = emb.select("vec_id", split_m.alias("m0", "sub")).select(
-        "vec_id", (F.col("m0") + 1).alias("m"), "sub"
-    )
+    shuffle-free per-row argmin (_nearest — no window over the
+    corpus), one partial-aggregable (m, code, dim) mean. The k-means
+    cost shape, in subspace. Returns (codebook (m, code, cw), corpus
+    subvectors (vec_id, m, sub))."""
+    subs = _pq_split(emb, ["vec_id"], "emb", "sub")
     cb = subs.filter(F.col("vec_id") < PQT_K).select(
         "m", F.col("vec_id").alias("code"), F.col("sub").alias("cw")
     )
-
-    def assign(codebook: DataFrame) -> DataFrame:
-        # Shuffle-free argmin (the q_sim_kmeans_assign /
-        # q_sim_ivf_kmeans shape): the codebook collapses to ONE
-        # 8-row broadcast (per-m codeword list) and each (vec, m) row
-        # takes array_min over struct(round(dist, 6), code) — a
-        # map-only broadcast join, no groupBy of the n×8 sub rows.
-        packed = codebook.groupBy("m").agg(
-            F.collect_list(F.struct("code", "cw")).alias("cws")
-        )
-        sub_d2 = lambda cw: F.aggregate(  # noqa: E731
-            F.zip_with(
-                F.col("sub"), cw, lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        best = F.array_min(
-            F.transform(
-                F.col("cws"),
-                lambda s: F.struct(
-                    F.round(F.sqrt(sub_d2(s["cw"])), 6).alias("d"),
-                    s["code"].alias("code"),
-                ),
-            )
-        )
-        return subs.join(F.broadcast(packed), "m").select(
-            "vec_id", "m", best["code"].alias("code"), "sub"
-        )
-
     for _ in range(PQT_ITERS):
-        means = (
-            assign(cb)
-            .select("m", "code", F.posexplode("sub").alias("dim", "v"))
-            .groupBy("m", "code", "dim")
-            .agg(F.avg("v").alias("av"))
-            .groupBy("m", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "av"))),
-                    lambda s: s["av"],
-                ).alias("ncw")
-            )
-        )
+        assigned = _nearest(subs, cb, "sub", "code", "cw", by="m")
+        means = _dim_means(assigned, ["m", "code"], "sub")
         # Iterative-algorithm hygiene (the min_label_propagate rule):
         # cb appears TWICE per iteration (assign input + empty-cluster
         # fallback join), so an untruncated lineage DOUBLES each round
@@ -1696,12 +1550,10 @@ def _pq_trained_codebook(emb: DataFrame) -> DataFrame:
         # pass; measured 4.6 s -> ~1 s warm on q_sim_pq_trained).
         cb = (
             cb.join(means, ["m", "code"], "left")
-            .select(
-                "m", "code", F.coalesce("ncw", "cw").alias("cw")
-            )
+            .select("m", "code", F.coalesce("ce", "cw").alias("cw"))
             .localCheckpoint(eager=False)
         )
-    return cb, subs, assign
+    return cb, subs
 
 
 @register(
@@ -1726,46 +1578,9 @@ def q_sim_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    cb, subs, assign = _pq_trained_codebook(emb)
-    codes = assign(cb).select("vec_id", "m", "code")
-    split_m = F.posexplode(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(PQ_M)),
-            lambda m: F.slice(F.col("emb"), (m - 1) * PQ_S + 1, PQ_S),
-        )
-    )
-    psubs = (
-        emb.filter(F.col("vec_id") % PROBE_MOD == 0)
-        .select(F.col("vec_id").alias("probe_id"), split_m.alias("m0", "psub"))
-        .select("probe_id", (F.col("m0") + 1).alias("m"), "psub")
-    )
-    lut = psubs.join(F.broadcast(cb), "m").select(
-        "probe_id",
-        "m",
-        F.col("code").alias("c_code"),
-        F.aggregate(
-            F.zip_with(
-                F.col("psub"), F.col("cw"), lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("d2"),
-    )
-    adc = (
-        codes.join(
-            F.broadcast(lut),
-            (codes["m"] == lut["m"]) & (codes["code"] == lut["c_code"]),
-        )
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .groupBy("probe_id", "vec_id")
-        .agg(F.round(F.sqrt(F.sum("d2")), 6).alias("approx_l2"))
-    )
-    w = W.partitionBy("probe_id").orderBy("approx_l2", "vec_id")
-    return (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("probe_id", "vec_id", "approx_l2")
-    )
+    cb, subs = _pq_trained_codebook(emb)
+    codes = _nearest(subs, cb, "sub", "code", "cw", by="m")
+    return _pq_search(emb, codes.select("vec_id", "m", "code"), cb)
 
 
 @register(
@@ -1796,47 +1611,10 @@ def q_sim_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the untrained tier's 0.16 (q_sim_pq_adc_recall) — the training
     step's value, measured under the oracle hash rather than
     asserted. Same eval shape as the family's other certificates."""
-    adc = q_sim_pq_trained(spark, sf_dir).select(
-        F.col("probe_id").alias("a_probe"), F.col("vec_id").alias("a_vec")
-    )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    probes = emb.filter(F.col("vec_id") % PROBE_MOD == 0).select(
-        F.col("vec_id").alias("probe_id"), F.col("emb").alias("pe")
-    )
-    l2 = F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                F.col("emb"), F.col("pe"), lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    w = W.partitionBy("probe_id").orderBy(
-        F.round(l2, 6).asc(), F.col("vec_id").asc()
-    )
-    exact = (
-        emb.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("probe_id", "vec_id")
-    )
-    j = exact.join(
-        F.broadcast(adc),
-        (F.col("probe_id") == F.col("a_probe"))
-        & (F.col("vec_id") == F.col("a_vec")),
-        "left",
-    )
-    return j.agg(
-        F.countDistinct("probe_id").alias("n_probes"),
-        F.count(F.lit(1)).alias("n_exact"),
-        F.count("a_vec").alias("n_hit"),
-        F.round(F.count("a_vec") / F.count(F.lit(1)), 4).alias(
-            "recall_at_10"
-        ),
+    return _recall(
+        q_sim_pq_trained(spark, sf_dir),
+        _exact_l2_top10(spark, sf_dir),
+        "recall_at_10",
     )
 
 
@@ -2560,81 +2338,24 @@ def q_sim_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
     cent = _km_train(emb)
-    af = _km_assign_df(emb, cent)
-    probes = emb.filter(F.col("vec_id") % PROBE_MOD == 0).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("emb").alias("pe"),
-        F.sqrt(dot_expr(F.col("emb"), F.col("emb"))).alias("pnorm"),
-    )
-    w_route = W.partitionBy("probe_id").orderBy(
-        F.desc(F.round(cosine_expr(F.col("ce"), F.col("pe")), 4)),
-        F.asc("cl"),
-    )
-    routes = (
-        probes.join(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(w_route))
-        .select("probe_id", "cl", "rn", "pe", "pnorm")
+    af = _nearest(emb, cent, "emb", "cl", "ce")
+    routes = _route(_probes(emb, norm=True), cent, "cl").select(
+        "probe_id", "cl", "rn", "pe", "pnorm"
     )
     nps = F.explode(
-        F.array(*[F.lit(p) for p in _NPROBE_CURVE])
-    ).alias("np")
-    rcells = routes.select("*", nps).filter(
-        F.col("rn") <= F.col("np")
-    )
-    cand = (
-        af.withColumn(
-            "enorm", F.sqrt(dot_expr(F.col("emb"), F.col("emb")))
-        )
-        .join(F.broadcast(rcells), "cl")
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "np",
-            "probe_id",
-            "vec_id",
-            F.round(
-                dot_expr(F.col("emb"), F.col("pe"))
-                / (F.col("enorm") * F.col("pnorm")),
-                6,
-            ).alias("score"),
-        )
-    )
-    w_rank = W.partitionBy("np", "probe_id").orderBy(
+        F.array(*[F.lit(p) for p in _NPROBE_CURVE]).cast("array<bigint>")
+    ).alias("nprobe")
+    rcells = routes.select("*", nps).filter(F.col("rn") <= F.col("nprobe"))
+    w_rank = W.partitionBy("nprobe", "probe_id").orderBy(
         F.desc("score"), F.asc("vec_id")
     )
     topk = (
-        cand.withColumn("krn", F.row_number().over(w_rank))
+        _cell_scores(af, "emb", rcells, "cl", "nprobe")
+        .withColumn("krn", F.row_number().over(w_rank))
         .filter(F.col("krn") <= RERANK_K)
-        .select(
-            F.col("np").alias("t_np"),
-            F.col("probe_id").alias("t_probe"),
-            F.col("vec_id").alias("t_vec"),
-        )
     )
-    exact = q_sim_knn_batch(spark, sf_dir).select("probe_id", "vec_id")
-    ex = exact.select(
-        "probe_id", "vec_id", nps
-    )
-    # Both recall-join sides are workload-bounded (probes × np × k
-    # rows, never corpus-sized) — broadcast the retrieved side so the
-    # outer join is map-side instead of a two-Exchange sort-merge
-    # (round-14; guide §3.1).
-    j = ex.join(
-        F.broadcast(topk),
-        (F.col("np") == F.col("t_np"))
-        & (F.col("probe_id") == F.col("t_probe"))
-        & (F.col("vec_id") == F.col("t_vec")),
-        "left",
-    )
-    return (
-        j.groupBy(F.col("np").cast("bigint").alias("nprobe"))
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.count("t_vec").alias("n_hit"),
-            F.round(
-                F.count("t_vec") / F.count(F.lit(1)), 4
-            ).alias("recall_at_k"),
-        )
-    )
+    exact = _knn_top(spark, sf_dir).select("*", nps)
+    return _recall(topk, exact, by="nprobe")
 
 
 @register(
@@ -3028,20 +2749,21 @@ def q_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs; every stage of the composition is hash-certified by the
     composed oracle.
     """
-    adc, _, _ = _ivfpq_adc(spark, sf_dir)
-    w = W.partitionBy("probe_id").orderBy("approx_l2", "vec_id")
-    return (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= IVFPQ_K)
-        .select("probe_id", "vec_id", "approx_l2")
-    )
+    return _adc_top(_ivfpq_adc(spark, sf_dir, residual=False)[0], IVFPQ_K)
 
 
-def _ivfpq_adc(spark: SparkSession, sf_dir: str):
-    """Shared IVF-route + PQ-ADC pipeline: returns (adc scores over
-    routed candidates, probes with float vectors, embeddings) so the
-    ADC-final (q_sim_ivfpq) and exact-refine (q_sim_ivfpq_refine)
-    tiers window the same certified frame."""
+def _ivfpq_adc(spark: SparkSession, sf_dir: str, residual: bool):
+    """IVF routing + PQ-ADC over the routed candidates — IVFADC of
+    Jégou et al. (TPAMI 2011), the Spark twin of the adc / radc CTE
+    chains. Returns (adc scores, probes with float vectors,
+    embeddings), so the ADC-final and exact-refine tiers window the
+    same certified frame.
+
+    residual=False PQ-encodes the raw vectors and builds one LUT per
+    probe. residual=True encodes v − c(v), the residual after coarse
+    quantization, and builds one LUT per (probe, probed cell) from
+    the probe's own residual in that cell. Either way the codebook is
+    the label means of the vectors being encoded."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
@@ -3049,125 +2771,78 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str):
     )
     ev = emb.select("vec_id", "emb")
     cent = _km_train(ev)
-    af = _km_assign_df(ev, cent).select("vec_id", "cl")
-
-    # PQ codebook from label means (the q_sim_pq_adc recipe).
-    lng = emb.select("label", F.posexplode("emb").alias("i0", "v"))
-    pcent = (
-        lng.groupBy("label", (F.col("i0") + 1).alias("dim"))
-        .agg(F.avg("v").alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s["c"],
-            ).alias("pce")
-        )
-    )
-    split_m = lambda col: F.posexplode(  # noqa: E731
-        F.transform(
-            F.sequence(F.lit(1), F.lit(PQ_M)),
-            lambda m: F.slice(col, (m - 1) * PQ_S + 1, PQ_S),
-        )
-    )
-    # labels×PQ_M tiny rows consumed TWICE (corpus encoding `codes`
-    # and probe LUT build) — truncate the label-mean lineage once
-    # instead of re-executing the full posexplode aggregate per
-    # consumer (round-13 optimization pass).
-    codebook = pcent.select(
-        F.col("label").alias("c_label"),
-        split_m(F.col("pce")).alias("m0", "sub_ce"),
-    ).select(
-        (F.col("m0") + 1).alias("m"), "c_label", "sub_ce"
-    ).localCheckpoint(eager=False)
-    subs = emb.select(
-        "vec_id", split_m(F.col("emb")).alias("m0", "sub")
-    ).select("vec_id", (F.col("m0") + 1).alias("m"), "sub")
-    # Corpus encoding by shuffle-free per-row argmin (the certified
-    # _km_assign_df / _pq_trained_codebook shape): the 8-label
-    # codebook collapses to ONE row per m and each (vec, m) row takes
-    # array_min over struct(round(dist, 6), label) — same
-    # lexicographic (d, code) tiebreak as the old explode +
-    # groupBy(vec_id, m) min(struct), with zero Exchange and no
-    # SortAggregate of the n×M×labels fan-out (round-13 optimization
-    # pass; interleaved A/B confirmed identical output).
-    packed_cb = codebook.groupBy("m").agg(
-        F.collect_list(F.struct("c_label", "sub_ce")).alias("cbs")
-    )
-    best_code = F.array_min(
-        F.transform(
-            F.col("cbs"),
-            lambda s: F.struct(
-                F.round(
-                    F.sqrt(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col("sub"),
-                                s["sub_ce"],
-                                lambda x, y: (x - y) * (x - y),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                    ),
-                    6,
-                ).alias("d"),
-                s["c_label"].alias("code"),
-            ),
-        )
-    )
-    codes = subs.join(F.broadcast(packed_cb), "m").select(
-        "vec_id", "m", best_code["code"].alias("code")
-    )
-
-    probes = emb.filter(F.col("vec_id") % PROBE_MOD == 0).select(
-        F.col("vec_id").alias("probe_id"), F.col("emb").alias("pe")
-    )
-    w_route = W.partitionBy("probe_id").orderBy(
-        F.desc(F.round(cosine_expr(F.col("ce"), F.col("pe")), 4)),
-        F.asc("cl"),
-    )
+    af = _nearest(ev, cent, "emb", "cl", "ce")  # (vec_id, emb, cl)
+    probes = _probes(emb)
+    # cells feeds two consumers in the residual encoder but must NOT be
+    # localCheckpoint-truncated: both branches meet again in the ADC
+    # join, and a shared RDD relation gives them identical exprIds,
+    # breaking df["col"] disambiguation (AMBIGUOUS_REFERENCE). The
+    # replayed lineage is only the probes×K route window — cheap.
     cells = (
-        probes.join(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(w_route))
+        _route(probes, cent, "cl")
         .filter(F.col("rn") <= NPROBE)
         .select("probe_id", "cl")
     )
-    cand = (
-        cells.join(af, "cl")
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", "vec_id")
-    )
-    psubs = probes.select(
-        "probe_id", split_m(F.col("pe")).alias("m0", "psub")
-    ).select("probe_id", (F.col("m0") + 1).alias("m"), "psub")
-    lut = psubs.join(F.broadcast(codebook), "m").select(
-        "probe_id",
-        "m",
-        "c_label",
-        F.aggregate(
-            F.zip_with(
-                F.col("psub"),
-                F.col("sub_ce"),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("d2"),
-    )
-    adc = (
-        codes.join(cand, "vec_id")
-        .join(
-            F.broadcast(lut),
-            (codes["m"] == lut["m"])
-            & (codes["code"] == lut["c_label"])
-            & (cand["probe_id"] == lut["probe_id"]),
+    if residual:
+        # af feeds TWO consumers (the residual subtraction and the
+        # candidate side), each otherwise replaying the broadcast-
+        # argmin assignment over the corpus — truncate it once
+        # (round-13 optimization pass, the q_graph_hits pattern).
+        af = af.localCheckpoint(eager=False)
+        minus = lambda v: F.zip_with(v, "ce", lambda x, y: x - y)  # noqa: E731
+        vecs = af.join(F.broadcast(cent), "cl").select(
+            "vec_id", "cl", minus("emb").alias("emb")
         )
-        .drop(lut["probe_id"])
-        .groupBy("probe_id", "vec_id")
-        .agg(F.round(F.sqrt(F.sum("d2")), 6).alias("approx_l2"))
+        book_vecs = vecs.join(emb.select("vec_id", "label"), "vec_id")
+        pvecs = (
+            cells.join(probes, "probe_id")
+            .join(F.broadcast(cent), "cl")
+            .select("probe_id", "cl", minus("pe").alias("pe"))
+        )
+        keys = ("probe_id", "cl")
+    else:
+        vecs, book_vecs, pvecs, keys = emb, emb, probes, ("probe_id",)
+    # labels×PQ_M tiny rows consumed TWICE (corpus encoding and probe
+    # LUT build) — truncate the label-mean lineage once instead of
+    # re-executing the posexplode aggregate (and, for residuals, the
+    # subtraction) per consumer (round-13 optimization pass).
+    book = _label_codebook(book_vecs, "emb").localCheckpoint(eager=False)
+    subs = _pq_split(vecs, ["vec_id"], "emb", "sub")
+    codes = _nearest(subs, book, "sub", "code", "cw", by="m").select(
+        "vec_id", "m", "code"
     )
-    return adc, probes, emb
+    # codes and cand both descend from af: renaming gives the
+    # candidate side a fresh vec_id attribute for the codes join
+    cand = (
+        cells.join(af.select(F.col("vec_id").alias("cand"), "cl"), "cl")
+        .filter(F.col("cand") != F.col("probe_id"))
+        .select(*keys, F.col("cand").alias("vec_id"))
+    )
+    psubs = _pq_split(pvecs, list(keys), "pe", "psub")
+    return _adc(codes.join(cand, "vec_id"), psubs, book, on=keys), probes, emb
+
+
+def _adc_refine(adc: DataFrame, probes: DataFrame, emb: DataFrame) -> DataFrame:
+    """ADC top-IVFPQ_REFINE_R shortlist → exact cosine re-rank to
+    top-IVFPQ_K: the refine tier over either IVF-PQ encoder."""
+    short = _adc_top(adc, IVFPQ_REFINE_R).select("probe_id", "vec_id")
+    re = (
+        short.join(emb.select("vec_id", "emb"), "vec_id")
+        .join(probes, "probe_id")
+        .select(
+            "probe_id",
+            "vec_id",
+            F.round(cosine_expr(F.col("emb"), F.col("pe")), 6).alias(
+                "cos_sim"
+            ),
+        )
+    )
+    return _topk(
+        re,
+        IVFPQ_K,
+        [F.desc("cos_sim"), F.asc("vec_id")],
+        ["probe_id", "vec_id", "cos_sim"],
+    )
 
 
 @register(
@@ -3217,30 +2892,7 @@ def q_sim_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak (the round-before-ranking repo rule), identical in the
     oracle.
     """
-    adc, probes, emb = _ivfpq_adc(spark, sf_dir)
-    w_short = W.partitionBy("probe_id").orderBy("approx_l2", "vec_id")
-    short = (
-        adc.withColumn("rn", F.row_number().over(w_short))
-        .filter(F.col("rn") <= IVFPQ_REFINE_R)
-        .select("probe_id", "vec_id")
-    )
-    re = (
-        short.join(emb.select("vec_id", "emb"), "vec_id")
-        .join(probes, "probe_id")
-        .select(
-            "probe_id",
-            "vec_id",
-            F.round(cosine_expr(F.col("emb"), F.col("pe")), 6).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = W.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        re.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= IVFPQ_K)
-        .select("probe_id", "vec_id", "cos_sim")
-    )
+    return _adc_refine(*_ivfpq_adc(spark, sf_dir, residual=False))
 
 
 @register(
@@ -3269,24 +2921,7 @@ def q_sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(k·probes) comparison join as every recall certificate in this
     family.
     """
-    ivfpq = q_sim_ivfpq(spark, sf_dir).select(
-        F.col("probe_id").alias("i_probe"), F.col("vec_id").alias("i_vec")
-    )
-    exact = q_sim_knn_batch(spark, sf_dir).select("probe_id", "vec_id")
-    j = exact.join(
-        F.broadcast(ivfpq),
-        (F.col("probe_id") == F.col("i_probe"))
-        & (F.col("vec_id") == F.col("i_vec")),
-        "left",
-    )
-    return j.agg(
-        F.countDistinct("probe_id").alias("n_probes"),
-        F.count(F.lit(1)).alias("n_exact"),
-        F.count("i_vec").alias("n_hit"),
-        F.round(F.count("i_vec") / F.count(F.lit(1)), 4).alias(
-            "recall_at_k"
-        ),
-    )
+    return _recall(q_sim_ivfpq(spark, sf_dir), _knn_top(spark, sf_dir))
 
 
 @register(
@@ -3325,23 +2960,8 @@ def q_sim_ivfpq_refine_recall(
     bounded O(k-probes) comparison join as the other recall
     certificates.
     """
-    refined = q_sim_ivfpq_refine(spark, sf_dir).select(
-        F.col("probe_id").alias("r_probe"), F.col("vec_id").alias("r_vec")
-    )
-    exact = q_sim_knn_batch(spark, sf_dir).select("probe_id", "vec_id")
-    j = exact.join(
-        F.broadcast(refined),
-        (F.col("probe_id") == F.col("r_probe"))
-        & (F.col("vec_id") == F.col("r_vec")),
-        "left",
-    )
-    return j.agg(
-        F.countDistinct("probe_id").alias("n_probes"),
-        F.count(F.lit(1)).alias("n_exact"),
-        F.count("r_vec").alias("n_hit"),
-        F.round(F.count("r_vec") / F.count(F.lit(1)), 4).alias(
-            "recall_at_k"
-        ),
+    return _recall(
+        q_sim_ivfpq_refine(spark, sf_dir), _knn_top(spark, sf_dir)
     )
 
 
@@ -3449,163 +3069,6 @@ _IVFPQ_RES_ORACLE = f"""
 """
 
 
-def _ivfpq_residual_adc(spark: SparkSession, sf_dir: str):
-    """Residual-encoded IVF-ADC pipeline — the Spark twin of the radc
-    CTE above. Returns (adc scores, probes, embeddings) so the
-    ADC-final and exact-refine tiers window the same certified frame
-    (the _ivfpq_adc contract)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.col("embedding").cast("array<double>").alias("emb"),
-    )
-    ev = emb.select("vec_id", "emb")
-    cent = _km_train(ev)
-    # afv feeds TWO consumers (the residual subtraction `red` and the
-    # candidate-side `af`), each otherwise replaying the broadcast-
-    # argmin assignment over the corpus — truncate it once (round-13
-    # optimization pass, the q_graph_hits multi-consumer pattern).
-    afv = _km_assign_df(ev, cent).localCheckpoint(
-        eager=False
-    )  # (vec_id, emb, cl)
-    red = afv.join(F.broadcast(cent), "cl").select(
-        "vec_id",
-        "cl",
-        F.zip_with("emb", "ce", lambda x, y: x - y).alias("remb"),
-    )
-    rlng = red.join(emb.select("vec_id", "label"), "vec_id").select(
-        "label", F.posexplode("remb").alias("i0", "v")
-    )
-    rpcent = (
-        rlng.groupBy("label", (F.col("i0") + 1).alias("dim"))
-        .agg(F.avg("v").alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s["c"],
-            ).alias("pce")
-        )
-    )
-    split_m = lambda col: F.posexplode(  # noqa: E731
-        F.transform(
-            F.sequence(F.lit(1), F.lit(PQ_M)),
-            lambda m: F.slice(col, (m - 1) * PQ_S + 1, PQ_S),
-        )
-    )
-    # Same two-consumer truncation as _ivfpq_adc's codebook — here
-    # the re-executed lineage would be even heavier (residual
-    # subtraction + posexplode aggregate per reference).
-    codebook = rpcent.select(
-        F.col("label").alias("c_label"),
-        split_m(F.col("pce")).alias("m0", "sub_ce"),
-    ).select(
-        (F.col("m0") + 1).alias("m"), "c_label", "sub_ce"
-    ).localCheckpoint(eager=False)
-    rsubs = red.select(
-        "vec_id", split_m(F.col("remb")).alias("m0", "sub")
-    ).select("vec_id", (F.col("m0") + 1).alias("m"), "sub")
-    # Residual-corpus encoding by the same shuffle-free per-row
-    # argmin as _ivfpq_adc's codes (round-13 optimization pass): no
-    # explode of the n×M×labels fan-out, no Exchange, no
-    # SortAggregate — identical (d, code) lexicographic tiebreak.
-    packed_cb = codebook.groupBy("m").agg(
-        F.collect_list(F.struct("c_label", "sub_ce")).alias("cbs")
-    )
-    best_code = F.array_min(
-        F.transform(
-            F.col("cbs"),
-            lambda s: F.struct(
-                F.round(
-                    F.sqrt(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col("sub"),
-                                s["sub_ce"],
-                                lambda x, y: (x - y) * (x - y),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                    ),
-                    6,
-                ).alias("d"),
-                s["c_label"].alias("code"),
-            ),
-        )
-    )
-    rcodes = rsubs.join(F.broadcast(packed_cb), "m").select(
-        "vec_id", "m", best_code["code"].alias("code")
-    )
-    probes = emb.filter(F.col("vec_id") % PROBE_MOD == 0).select(
-        F.col("vec_id").alias("probe_id"), F.col("emb").alias("pe")
-    )
-    w_route = W.partitionBy("probe_id").orderBy(
-        F.desc(F.round(cosine_expr(F.col("ce"), F.col("pe")), 4)),
-        F.asc("cl"),
-    )
-    # NOTE: cells feeds two consumers (pres, rcand) but must NOT be
-    # localCheckpoint-truncated — both branches meet again in the
-    # radc join, and a shared RDD relation gives them identical
-    # exprIds, breaking df["col"] disambiguation (AMBIGUOUS_REFERENCE,
-    # caught by the round-13 oracle re-check). The replayed lineage is
-    # only the probes×K route window — cheap.
-    cells = (
-        probes.join(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(w_route))
-        .filter(F.col("rn") <= NPROBE)
-        .select("probe_id", "cl")
-    )
-    pres = (
-        cells.join(probes, "probe_id")
-        .join(F.broadcast(cent), "cl")
-        .select(
-            "probe_id",
-            "cl",
-            F.zip_with("pe", "ce", lambda x, y: x - y).alias("rpe"),
-        )
-    )
-    rpsubs = pres.select(
-        "probe_id", "cl", split_m(F.col("rpe")).alias("m0", "psub")
-    ).select("probe_id", "cl", (F.col("m0") + 1).alias("m"), "psub")
-    rlut = rpsubs.join(F.broadcast(codebook), "m").select(
-        "probe_id",
-        "cl",
-        "m",
-        "c_label",
-        F.aggregate(
-            F.zip_with(
-                F.col("psub"),
-                F.col("sub_ce"),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("d2"),
-    )
-    af = afv.select("vec_id", "cl")
-    rcand = (
-        cells.join(af.withColumnRenamed("vec_id", "cand_vec"), "cl")
-        .filter(F.col("cand_vec") != F.col("probe_id"))
-        .select("probe_id", "cl", F.col("cand_vec").alias("vec_id"))
-    )
-    joined = rcodes.join(rcand, "vec_id")
-    radc = (
-        joined.join(
-            F.broadcast(rlut),
-            (joined["m"] == rlut["m"])
-            & (joined["code"] == rlut["c_label"])
-            & (joined["probe_id"] == rlut["probe_id"])
-            & (joined["cl"] == rlut["cl"]),
-        )
-        .drop(rlut["probe_id"])
-        .drop(rlut["cl"])
-        .groupBy("probe_id", "vec_id")
-        .agg(F.round(F.sqrt(F.sum("d2")), 6).alias("approx_l2"))
-    )
-    return radc, probes, emb
-
-
 @register("q_sim_ivfpq_residual", oracle=_IVFPQ_RES_ORACLE)
 def q_sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ with RESIDUAL encoding — FAISS's actual IVFADC: each
@@ -3626,13 +3089,7 @@ def q_sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast. Corpus is still touched as {PQ_M}-byte codes at query
     time; the residual subtraction happens once at index-build.
     """
-    adc, _, _ = _ivfpq_residual_adc(spark, sf_dir)
-    w = W.partitionBy("probe_id").orderBy("approx_l2", "vec_id")
-    return (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= IVFPQ_K)
-        .select("probe_id", "vec_id", "approx_l2")
-    )
+    return _adc_top(_ivfpq_adc(spark, sf_dir, residual=True)[0], IVFPQ_K)
 
 
 @register(
@@ -3662,23 +3119,8 @@ def q_sim_ivfpq_residual_recall(
     certificates isolates the encoding change, everything else held
     fixed (same cells, same NPROBE, same {PQ_M}×8 codes).
     """
-    ivfpqr = q_sim_ivfpq_residual(spark, sf_dir).select(
-        F.col("probe_id").alias("i_probe"), F.col("vec_id").alias("i_vec")
-    )
-    exact = q_sim_knn_batch(spark, sf_dir).select("probe_id", "vec_id")
-    j = exact.join(
-        F.broadcast(ivfpqr),
-        (F.col("probe_id") == F.col("i_probe"))
-        & (F.col("vec_id") == F.col("i_vec")),
-        "left",
-    )
-    return j.agg(
-        F.countDistinct("probe_id").alias("n_probes"),
-        F.count(F.lit(1)).alias("n_exact"),
-        F.count("i_vec").alias("n_hit"),
-        F.round(F.count("i_vec") / F.count(F.lit(1)), 4).alias(
-            "recall_at_k"
-        ),
+    return _recall(
+        q_sim_ivfpq_residual(spark, sf_dir), _knn_top(spark, sf_dir)
     )
 
 
@@ -3730,30 +3172,7 @@ def q_sim_ivfpq_residual_refine(
     {IVFPQ_REFINE_R} float vectors per probe, never a cell-wide
     shuffle; the corpus stays 8-byte codes.
     """
-    adc, probes, emb = _ivfpq_residual_adc(spark, sf_dir)
-    w_short = W.partitionBy("probe_id").orderBy("approx_l2", "vec_id")
-    short = (
-        adc.withColumn("rn", F.row_number().over(w_short))
-        .filter(F.col("rn") <= IVFPQ_REFINE_R)
-        .select("probe_id", "vec_id")
-    )
-    re = (
-        short.join(emb.select("vec_id", "emb"), "vec_id")
-        .join(probes, "probe_id")
-        .select(
-            "probe_id",
-            "vec_id",
-            F.round(cosine_expr(F.col("emb"), F.col("pe")), 6).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = W.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        re.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= IVFPQ_K)
-        .select("probe_id", "vec_id", "cos_sim")
-    )
+    return _adc_refine(*_ivfpq_adc(spark, sf_dir, residual=True))
 
 
 @register(
@@ -3785,23 +3204,9 @@ def q_sim_ivfpq_residual_refine_recall(
     q_sim_ivfpq_residual_refine's docstring (encoder choice matters
     for ADC-final; shortlist width matters once refined).
     """
-    refined = q_sim_ivfpq_residual_refine(spark, sf_dir).select(
-        F.col("probe_id").alias("i_probe"), F.col("vec_id").alias("i_vec")
-    )
-    exact = q_sim_knn_batch(spark, sf_dir).select("probe_id", "vec_id")
-    j = exact.join(
-        F.broadcast(refined),
-        (F.col("probe_id") == F.col("i_probe"))
-        & (F.col("vec_id") == F.col("i_vec")),
-        "left",
-    )
-    return j.agg(
-        F.countDistinct("probe_id").alias("n_probes"),
-        F.count(F.lit(1)).alias("n_exact"),
-        F.count("i_vec").alias("n_hit"),
-        F.round(F.count("i_vec") / F.count(F.lit(1)), 4).alias(
-            "recall_at_k"
-        ),
+    return _recall(
+        q_sim_ivfpq_residual_refine(spark, sf_dir),
+        _knn_top(spark, sf_dir),
     )
 
 

@@ -31,7 +31,7 @@ from .pipeline import (
     stamp_processing_time,
     windowed_counts,
 )
-from .sink import make_topk_file_sink
+from .sink import TopKFileSink
 
 
 def start_live_topk(
@@ -71,7 +71,7 @@ def start_live_topk(
     )
     writer = (
         counts.writeStream.outputMode("update")
-        .foreachBatch(make_topk_file_sink(out_path, k=k, window=window))
+        .foreachBatch(TopKFileSink(out_path, k=k, window=window))
         .trigger(processingTime=trigger)
     )
     if checkpoint is not None:

@@ -63,7 +63,9 @@ def write_result_file(path: str, payload: str) -> None:
 
 
 class TopKFileSink:
-    """foreachBatch hook writing the top-k of the trailing window.
+    """foreachBatch hook writing the top-k of the trailing window each
+    trigger ≙ the reference's per-batch foreachRDD(save)
+    (SparkApplication.scala:92-95).
 
     Input: `windowed_counts` pane rows (w, key, count, hashtag) in
     update output mode. Two requirements drive the design (both found
@@ -127,13 +129,6 @@ class TopKFileSink:
         top = sorted(totals.items(), key=lambda kv: (-kv[1][0], kv[0]))
         items = [{"count": n, "hashtag": d} for _k, (n, d) in top[: self.k]]
         write_result_file(self.path, render_document(items))
-
-
-def make_topk_file_sink(path: str, k: int = 5, window: str = WINDOW_DURATION):
-    """foreachBatch hook: emit the top-k of the trailing window each
-    trigger ≙ the reference's per-batch foreachRDD(save)
-    (SparkApplication.scala:92-95). See TopKFileSink for semantics."""
-    return TopKFileSink(path, k=k, window=window)
 
 
 class IdempotentParquetSink:

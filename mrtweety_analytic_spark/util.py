@@ -3,9 +3,13 @@
 from __future__ import annotations
 
 import atexit
+import os
+import shutil
+import tempfile
 
 from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def _release(df: DataFrame) -> None:
@@ -71,3 +75,45 @@ class LastHandle:
                     _release(df)
                 except Py4JError:
                     pass
+
+
+_APP_DIRS: set[str] = set()
+
+
+def app_temp_dir(spark: SparkSession, name: str) -> str:
+    """A temp directory private to this Spark application, removed at
+    interpreter exit. Keyed by the application id, so two processes
+    running the same query never delete or overwrite each other's
+    files."""
+    path = os.path.join(
+        tempfile.gettempdir(),
+        f"mrtweety_{name}_{spark.sparkContext.applicationId}",
+    )
+    if path not in _APP_DIRS:
+        _APP_DIRS.add(path)
+        atexit.register(shutil.rmtree, path, True)
+    return path
+
+
+def ordered_pairs(df: DataFrame, arr: str, a: str, b: str) -> DataFrame:
+    """(a, b) for every pair of positions i < j of the sorted array
+    column `arr` — so a < b for distinct elements.
+
+    The fan-out is posexplode + slice + explode (two codegen'd
+    generators) rather than a nested transform(...) HOF building an
+    array-of-structs (interpreted, and it materializes the full
+    d^2/2 pair array per row before exploding). Round-13 in-session
+    A/B (sf 0.1, identical result signature): full jaccard kernel
+    3.4/4.7/3.0 s with the HOF form vs 3.0/3.1/2.7 s with this form +
+    the checkpointed index.
+    """
+    return df.select(F.posexplode(arr).alias("i", a), F.col(arr)).select(
+        a,
+        F.explode(
+            F.slice(
+                F.col(arr),
+                F.col("i") + 2,
+                F.greatest(F.lit(0), F.size(arr) - F.col("i") - 1),
+            )
+        ).alias(b),
+    )

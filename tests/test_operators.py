@@ -4,6 +4,11 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -192,6 +197,27 @@ def test_bucketed_join_has_no_join_shuffle(spark, sf_dir):
     assert final.count("Bucketed: true") == 2
     join_part = final.split("SortMergeJoin", 1)[1]
     assert "Exchange" not in join_part  # no shuffle below the join
+
+
+@pytest.mark.parametrize(
+    "name, shared_dir",
+    [
+        ("q_join_bucketed", "mrtweety_bucketed_root_testdata_sf0.001"),
+        ("q_scan_partition_pruned", f"mrtweety_part_events_sf0.001_{os.getuid()}"),
+    ],
+)
+def test_written_tables_survive_a_second_process(spark, sf_dir, name, shared_dir):
+    """Tables a query writes to /tmp live in a directory keyed by the
+    Spark application id. A second process running the same query on
+    the same sf clears and rewrites one per-sf directory; deleting
+    that directory must leave this session's tables readable."""
+    from mrtweety_analytic_spark.queries import QUERIES
+
+    first = sorted(map(tuple, QUERIES[name](spark, sf_dir).collect()))
+    assert first
+    shutil.rmtree(os.path.join(tempfile.gettempdir(), shared_dir), True)
+    again = sorted(map(tuple, QUERIES[name](spark, sf_dir).collect()))
+    assert again == first
 
 
 def test_scan_pruned_pushdown(spark, sf_dir):

@@ -20,7 +20,7 @@ from mrtweety_analytic_spark.streaming.pipeline import (
     windowed_counts,
 )
 from mrtweety_analytic_spark.streaming.sink import (
-    make_topk_file_sink,
+    TopKFileSink,
     render_document,
     write_result_file,
 )
@@ -219,7 +219,7 @@ def test_late_events_match_batch_sliding_window(spark, tmp_path):
         ],
     )
     out = tmp_path / "analytic.json"
-    q = _replay(spark, src, tmp_path / "ckpt", make_topk_file_sink(str(out), k=5))
+    q = _replay(spark, src, tmp_path / "ckpt", TopKFileSink(str(out), k=5))
     dropped = sum(
         op["numRowsDroppedByWatermark"]
         for p in q.recentProgress
@@ -259,7 +259,7 @@ def test_pane_plan_has_no_expand(spark, tmp_path):
     expand every hashtag into 90 window rows before the state store)."""
     src = tmp_path / "tweets"
     _write_tweet_files(src, [[(0, ["spark"]), (30, ["kafka"])]])
-    sink = make_topk_file_sink(str(tmp_path / "analytic.json"), k=5)
+    sink = TopKFileSink(str(tmp_path / "analytic.json"), k=5)
     q = _replay(spark, src, tmp_path / "ckpt", sink)
     plan = q._jsq.explainInternal(False)
     assert "StateStoreSave" in plan
@@ -272,7 +272,7 @@ def test_json_document_contract(spark, tmp_path):
     from datetime import datetime
 
     out = tmp_path / "analytic.json"
-    emit = make_topk_file_sink(str(out), k=5)
+    emit = TopKFileSink(str(out), k=5)
     emit(_batch_result(spark), epoch_id=0)
     doc = json.loads(out.read_text())
     assert set(doc) == {"items", "datetime"}
@@ -311,7 +311,7 @@ def test_sink_selects_trailing_window_not_newest(spark, tmp_path):
     exactly what reduceByKeyAndWindow(Minutes(15)) reports; a pane
     that ended before the window is left out."""
     out = tmp_path / "analytic.json"
-    emit = make_topk_file_sink(str(out), k=5, window="15 minutes")
+    emit = TopKFileSink(str(out), k=5, window="15 minutes")
     # 5-min panes, newest event at ~12:14 → boundary 12:15, trailing
     # window [12:00, 12:15): spark 4+2+1, kafka 4; "old" is outside.
     emit(
@@ -339,7 +339,7 @@ def test_sink_merges_update_mode_deltas_across_triggers(spark, tmp_path):
     trigger; keys untouched this trigger must keep their cached counts
     in the written top-k, while panes that leave the window drop out."""
     out = tmp_path / "analytic.json"
-    emit = make_topk_file_sink(str(out), k=5, window="15 minutes")
+    emit = TopKFileSink(str(out), k=5, window="15 minutes")
     # Trigger 1: spark/kafka events between 11:50 and 12:04 (5-min
     # panes) → boundary 12:05, window [11:50, 12:05).
     emit(
@@ -383,7 +383,7 @@ def test_sink_sums_window_across_missing_panes(spark, tmp_path):
     smallest start gap). The document still sums exactly the panes
     starting in [boundary - window, boundary)."""
     out = tmp_path / "analytic.json"
-    emit = make_topk_file_sink(str(out), k=5, window="30 seconds")
+    emit = TopKFileSink(str(out), k=5, window="30 seconds")
     # 10-s panes at :00 and :20 (no :10 pane) → boundary :30, window
     # [:00, :30): a 3+1, b 2.
     emit(
@@ -418,7 +418,7 @@ def test_sink_sums_window_across_missing_panes(spark, tmp_path):
 
 def test_sink_empty_batch_keeps_last_document(spark, tmp_path):
     out = tmp_path / "analytic.json"
-    emit = make_topk_file_sink(str(out), k=5)
+    emit = TopKFileSink(str(out), k=5)
     pane = ("2024-01-01 12:00:00", "2024-01-01 12:15:00")
     emit(_pane_rows(spark, [(*pane, "spark", 5, "Spark")]), epoch_id=0)
     first = json.loads(out.read_text())["items"]

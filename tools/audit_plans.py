@@ -25,6 +25,14 @@ shape is covered by the streaming pytest suite.
 Usage:
     python tools/audit_plans.py [sf_dir]
 Exit code 1 if any verdict is FAIL.
+
+Digest mode (the "same plans" gate for refactors):
+    python tools/audit_plans.py [sf_dir] --digest OUT.json [--against BASE.json]
+writes, per batch query, two sha256 digests of its initial physical
+plan: `shape` (operator names and tree structure only) and `full`
+(the plan text with expression ids, plan ids, lambda-variable
+suffixes and temp paths stripped). With --against it lists the
+queries whose digests differ from BASE.json and exits 1 if any does.
 """
 
 from __future__ import annotations
@@ -94,8 +102,98 @@ def _global_windows(plan: str) -> int:
     return n
 
 
+_VOLATILE = [
+    (re.compile(r"#\d+L?"), "#"),  # expression ids
+    (re.compile(r"\[?plan_id=\d+\]?|\[id=#\]"), ""),  # exchange / subquery ids
+    (re.compile(r"\b([xyz])_\d+\b"), r"\1"),  # PySpark lambda variables
+    # temp dirs (Spark abbreviates a long file-index location with ...)
+    (re.compile(r"\[(file:)?/tmp/[^\]]*?(\]|\.\.\.(?=,))"), "[<tmp>]"),
+    (re.compile(r"(file:)?/tmp/[^\s,\]\)]*"), "<tmp>"),
+    (re.compile(r"\b(RDD|ExistingRDD)\[\d+\]"), r"\1"),  # RDD ids
+    (re.compile(r"\bsubquery#?\d*"), "subquery"),
+]
+_OPERATOR = re.compile(r"^([\s:|+\-]*)(?:\*\(\d+\)\s*)?(Scan [A-Za-z]+|[A-Za-z]+)")
+
+
+def normalize_plan(plan: str) -> str:
+    """Plan text with per-process identifiers stripped."""
+    for pattern, repl in _VOLATILE:
+        plan = pattern.sub(repl, plan)
+    return plan
+
+
+def plan_shape(plan: str) -> str:
+    """Operator names in tree order, each under its tree prefix."""
+    return "\n".join(
+        m.group(1) + m.group(2)
+        for m in map(_OPERATOR.match, plan.splitlines())
+        if m
+    )
+
+
+def _sha(text: str) -> str:
+    import hashlib
+
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
+def digest_main(sf_dir: str, out: str, against: str | None) -> int:
+    import json
+
+    from mrtweety_analytic_spark.queries import QUERIES
+    from mrtweety_analytic_spark.session import get_spark
+
+    spark = get_spark("plan-digest")
+    spark.sparkContext.setLogLevel("ERROR")
+    digests = {}
+    for name in sorted(QUERIES):
+        if name.startswith("s_"):
+            continue
+        try:
+            df = QUERIES[name](spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+        except Exception as e:  # noqa: BLE001
+            digests[name] = {"error": str(e)[:200]}
+            continue
+        digests[name] = {
+            "shape": _sha(plan_shape(plan)),
+            "full": _sha(normalize_plan(plan)),
+        }
+    with open(out, "w") as f:
+        json.dump(digests, f, indent=1, sort_keys=True)
+        f.write("\n")
+    print(f"wrote {len(digests)} batch plan digests to {out}")
+    if against is None:
+        return 0
+    with open(against) as f:
+        base = json.load(f)
+    n_diff = 0
+    for name in sorted(set(base) | set(digests)):
+        a, b = base.get(name), digests.get(name)
+        if a == b:
+            continue
+        n_diff += 1
+        if a is None or b is None:
+            print(f"{name:40s} {'added' if a is None else 'removed'}")
+            continue
+        kinds = [k for k in ("shape", "full", "error") if a.get(k) != b.get(k)]
+        print(f"{name:40s} differs: {', '.join(kinds)}")
+    print(f"{n_diff} of {len(digests)} digests differ from {against}")
+    return 1 if n_diff else 0
+
+
 def main() -> int:
+    opts = {}
+    for flag in ("--digest", "--against"):
+        if flag in sys.argv:
+            i = sys.argv.index(flag)
+            opts[flag] = sys.argv[i + 1]
+            del sys.argv[i : i + 2]
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    if "--digest" in opts:
+        return digest_main(sf_dir, opts["--digest"], opts.get("--against"))
+    if "--against" in opts:
+        sys.exit("--against needs --digest OUT.json")
 
     from mrtweety_analytic_spark.queries import QUERIES
     from mrtweety_analytic_spark.session import get_spark
