@@ -22,32 +22,8 @@ from mrtweety_analytic_spark.queries import ORACLES, QUERIES  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
-# Round-12 rotation — executed exactly as pre-committed in round 11
-# (the backlog is zero, so the window is a freshness rotation):
-# (1) the 3 oracled round-12 births lead (s_schema_drift ingest
-# dial, q_training_export_full gated-export composite,
-# s_decontaminate — the live twin of the export's benchmark
-# gate); (2) the
-# operators whose PHYSICAL PLAN changed this round — q_dq_chi2 and
-# q_ts_crosscorr (their crossJoin sides are now broadcast-explicit,
-# VERDICT r11 item 2). The other round-12 code touches are
-# behaviorally inert and locally re-verified 4/4 at sf 0.01 rather
-# than windowed: the _run_to_memory key_cols/op guard changes only
-# the budget-check path (s_minhash_dup_rate, s_dedup_url — both
-# also carry P r11 rows), and q_fn_variant_schema's oracle moved
-# into a shared constant verbatim. (3) The remaining 45 slots
-# rotate through the STALEST driver rows: all 45 r01-certified
-# names in registry order — the oldest evidence in the project —
-# so after this window the stalest driver row in the registry
-# advances from r01 to r03. Rows-only names skipped as always
-# (a no_oracle row certifies nothing).
-#
-# Pre-committed ROUND-13 window policy: (1) oracled round-13 births
-# lead; (2) then operators whose plan changed in round 13; (3) the
-# remaining slots continue the stalest rotation from the r03 cohort
-# in registry order (q_win_topk_per_group, q_sort_limit_topk,
-# q_udf_scalar, q_udaf_grouped, ...), skipping rows-only names as
-# always.
+# Names listed here lead queries() and oracle_sql(), in this order;
+# every other registered name follows in registry order.
 PRIORITY = [
     # round-12 births, windowed in their birth round
     "s_schema_drift",

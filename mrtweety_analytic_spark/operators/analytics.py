@@ -2370,11 +2370,11 @@ def q_agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     RNG could not).
 
     Scale: one fan-out of B weights per row (map-side), B partial-
-    aggregable weighted sums, then a {0}-element driver-side
+    aggregable weighted sums, then a _BOOT_B-element driver-side
     quantile interpolation (the same explicit array interpolation as
     q_ts_hampel, identical in both engines). Nothing resamples,
     nothing shuffles beyond B group keys.
-    """.format(_BOOT_B)
+    """
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     ).select("event_id", "value")

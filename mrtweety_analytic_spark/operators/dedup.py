@@ -112,24 +112,38 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("term")
-    ).select("doc_id", F.xxhash64("term").alias("h"))
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1)
-            .otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(64)
-    ]
-    agg = toks.groupBy("doc_id").agg(*votes)
-    packed = reduce(
-        lambda acc, i: acc.bitwiseOR(
-            F.when(
-                F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
-            ).otherwise(F.lit(0).cast("long"))
-        ),
-        range(64),
+    ).select("doc_id", F.xxhash64("term").alias("v"))
+    return _simhash(toks, 64)
+
+
+def _pack_bits(bits: list[F.Column]) -> F.Column:
+    """One int64 with bit i set where bits[i] holds — the sign-bit
+    packer of the simhash and SRP signatures. Summing disjoint powers
+    of two never overflows: only bit 63 is negative, and it is added
+    to a non-negative partial sum."""
+    return reduce(
+        lambda acc, i: acc + F.when(
+            bits[i], F.shiftleft(F.lit(1).cast("long"), i)
+        ).otherwise(F.lit(0).cast("long")),
+        range(len(bits)),
         F.lit(0).cast("long"),
     )
+
+
+def _simhash(hashed: DataFrame, bits: int) -> DataFrame:
+    """(doc_id, simhash) from per-token hashes (doc_id, v): per bit
+    position the ±1 vote sum over the document's tokens, then the
+    majority bits packed — one map-side-combinable groupBy carrying
+    `bits` int sums. The shared step of the xxhash64 and md5 tiers."""
+    votes = [
+        F.sum(
+            F.when(F.shiftright(F.col("v"), i).bitwiseAND(F.lit(1)) == 1, 1)
+            .otherwise(-1)
+        ).alias(f"b{i}")
+        for i in range(bits)
+    ]
+    agg = hashed.groupBy("doc_id").agg(*votes)
+    packed = _pack_bits([F.col(f"b{i}") > 0 for i in range(bits)])
     return agg.select("doc_id", packed.alias("simhash"))
 
 
@@ -322,10 +336,10 @@ def _embedding_pairs_blocked(
     )
 
 
-# Near-dup pair edges for the cluster query: word-5-gram Jaccard
-# >= 0.2 (the q_dedup_ngram_jaccard pair set).
-_EDGES_SQL = """
-    all_shingles AS (
+# The word-5-gram candidate CTEs of the shingle-overlap oracles: the
+# distinct shingle index, stop shingles (df > 100) removed, per-doc
+# set sizes and per-pair shared-shingle counts.
+_SHINGLE_OVERLAP_SQL = """all_shingles AS (
         SELECT DISTINCT doc_id, shingle
         FROM (
             SELECT doc_id,
@@ -354,7 +368,12 @@ _EDGES_SQL = """
         FROM shingles a JOIN shingles b
           ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         GROUP BY 1, 2
-    ),
+    )"""
+
+# Near-dup pair edges for the cluster query: word-5-gram Jaccard
+# >= 0.2 (the q_dedup_ngram_jaccard pair set).
+_EDGES_SQL = f"""
+    {_SHINGLE_OVERLAP_SQL},
     pairs AS (
         SELECT doc_a, doc_b
         FROM common
@@ -421,21 +440,25 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (localCheckpoint truncates the whole jaccard lineage) and
     # re-truncate labels every round — otherwise each iteration
     # re-executes all previous iterations' joins.
-    return min_label_propagate(pairs).select(
+    return min_label_propagate(pairs, 20).select(
         F.col("doc").alias("doc_id"), F.col("label").alias("cluster_id")
     )
 
 
 def min_label_propagate(
-    pairs: DataFrame, pairs_materialized: bool = False
+    pairs: DataFrame, rounds: int, pairs_materialized: bool = False
 ) -> DataFrame:
     """Connected components by iterative min-label propagation over
     an (doc_a, doc_b) pair list — the shared core behind
-    q_dedup_clusters (shingle-jaccard edges) and
-    q_sim_semantic_clusters (embedding-cosine edges). Each round is
+    q_dedup_clusters (shingle-jaccard edges), q_sim_semantic_clusters
+    (embedding-cosine edges) and q_graph_components_cert (the
+    oracle-certified nation trade graph). Each round is
     one distributed join+aggregate; labels re-checkpoint every round
     so iteration k never re-executes 1..k-1; only the convergence
-    count crosses to the driver.
+    count crosses to the driver. A component of diameter d needs d
+    changing rounds plus one quiet one; if `rounds` run out while
+    labels still change, it raises instead of returning partial
+    components.
 
     `pairs_materialized=True` tells the kernel the caller already
     checkpointed `pairs`: the doubled edge union then stays LAZY
@@ -455,7 +478,7 @@ def min_label_propagate(
         .withColumn("label", F.col("doc"))
         .localCheckpoint()
     )
-    for _ in range(20):  # diameter bound; tiny graphs converge fast
+    for _ in range(rounds):
         neighbor_min = (
             edges.join(labels, edges.doc_b == labels.doc)
             .groupBy(F.col("doc_a").alias("doc"))
@@ -482,46 +505,18 @@ def min_label_propagate(
             )
             .localCheckpoint(eager=False)
         )
-        changed = new_labels.filter(F.col("chg")).count()
         labels = new_labels.select("doc", "label")
-        if changed == 0:
-            break
-    return labels
+        if new_labels.filter(F.col("chg")).count() == 0:
+            return labels
+    raise RuntimeError(
+        f"min_label_propagate: labels still changing after {rounds} rounds"
+    )
 
 
 @register(
     "q_dedup_ngram_jaccard",
-    oracle="""
-    WITH all_shingles AS (
-        SELECT DISTINCT doc_id, shingle
-        FROM (
-            SELECT doc_id,
-                   t.term || ' ' || lead(t.term, 1) OVER w || ' '
-                          || lead(t.term, 2) OVER w || ' '
-                          || lead(t.term, 3) OVER w || ' '
-                          || lead(t.term, 4) OVER w AS shingle
-            FROM (
-                SELECT doc_id,
-                       unnest(string_split(text, ' ')) AS term,
-                       generate_subscripts(string_split(text, ' '), 1) AS pos
-                FROM documents
-            ) t
-            WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        )
-        WHERE shingle IS NOT NULL
-    ),
-    shingles AS (
-        SELECT doc_id, shingle FROM all_shingles
-        WHERE shingle IN (SELECT shingle FROM all_shingles
-                          GROUP BY shingle HAVING count(*) <= 100)
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_SHINGLE_OVERLAP_SQL}
     SELECT doc_a, doc_b,
            round(1.0 * n_common / (sa.n + sb.n - n_common), 4) AS jaccard
     FROM common
@@ -549,37 +544,8 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_containment",
-    oracle="""
-    WITH all_shingles AS (
-        SELECT DISTINCT doc_id, shingle
-        FROM (
-            SELECT doc_id,
-                   t.term || ' ' || lead(t.term, 1) OVER w || ' '
-                          || lead(t.term, 2) OVER w || ' '
-                          || lead(t.term, 3) OVER w || ' '
-                          || lead(t.term, 4) OVER w AS shingle
-            FROM (
-                SELECT doc_id,
-                       unnest(string_split(text, ' ')) AS term,
-                       generate_subscripts(string_split(text, ' '), 1) AS pos
-                FROM documents
-            ) t
-            WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        )
-        WHERE shingle IS NOT NULL
-    ),
-    shingles AS (
-        SELECT doc_id, shingle FROM all_shingles
-        WHERE shingle IN (SELECT shingle FROM all_shingles
-                          GROUP BY shingle HAVING count(*) <= 100)
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_SHINGLE_OVERLAP_SQL}
     SELECT doc_a, doc_b,
            round(1.0 * n_common / least(sa.n, sb.n), 4) AS containment
     FROM common
@@ -601,15 +567,9 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     postings, sizes = _shingle_postings(docs)
-    common = _pairs_from_postings(postings)
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    cont = F.col("n_common") / F.least(F.col("sa.n"), F.col("sb.n"))
-    return (
-        common.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(cont >= 0.6)
-        .select("doc_a", "doc_b", F.round(cont, 4).alias("containment"))
+    return _overlap_verify(
+        _pairs_from_postings(postings), sizes,
+        F.least(F.col("sa.n"), F.col("sb.n")), 0.6, "containment", 4,
     )
 
 
@@ -763,15 +723,32 @@ def _jaccard_pairs(docs: DataFrame, threshold: float = 0.2,
     dedup_corpus/q_dedup_pipeline.
     """
     postings, sizes = _shingle_postings(docs, df_cap)
-    common = _pairs_from_postings(postings)
+    return _overlap_verify(
+        _pairs_from_postings(postings), sizes, _union_size(), threshold,
+        "jaccard", 4,
+    )
+
+
+def _union_size() -> F.Column:
+    """|A ∪ B| for _overlap_verify: the Jaccard denominator."""
+    return F.col("sa.n") + F.col("sb.n") - F.col("n_common")
+
+
+def _overlap_verify(common: DataFrame, sizes: DataFrame, denom: F.Column,
+                    threshold: float, name: str, digits: int) -> DataFrame:
+    """(doc_a, doc_b, name) for every candidate pair whose set overlap
+    n_common / denom >= threshold, rounded to `digits` — the exact
+    verify of the jaccard, containment and minhash tiers. `common`
+    holds (doc_a, doc_b, n_common), `sizes` (doc_id, n); `denom`
+    reads the two set sizes as sa.n and sb.n."""
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
-    jac = F.col("n_common") / (F.col("sa.n") + F.col("sb.n") - F.col("n_common"))
+    score = F.col("n_common") / denom
     return (
         common.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
         .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
+        .filter(score >= threshold)
+        .select("doc_a", "doc_b", F.round(score, digits).alias(name))
     )
 
 
@@ -802,7 +779,7 @@ def dedup_corpus(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 @register(
     "q_dedup_pipeline",
-    oracle="""
+    oracle=f"""
     WITH kept AS (
         SELECT min(doc_id) AS doc_id
         FROM documents
@@ -811,36 +788,7 @@ def dedup_corpus(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
                      ' +', ' ', 'g')))
     ),
     kd AS (SELECT d.* FROM documents d JOIN kept k ON d.doc_id = k.doc_id),
-    all_shingles AS (
-        SELECT DISTINCT doc_id, shingle
-        FROM (
-            SELECT doc_id,
-                   t.term || ' ' || lead(t.term, 1) OVER w || ' '
-                          || lead(t.term, 2) OVER w || ' '
-                          || lead(t.term, 3) OVER w || ' '
-                          || lead(t.term, 4) OVER w AS shingle
-            FROM (
-                SELECT doc_id,
-                       unnest(string_split(text, ' ')) AS term,
-                       generate_subscripts(string_split(text, ' '), 1) AS pos
-                FROM kd
-            ) t
-            WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        )
-        WHERE shingle IS NOT NULL
-    ),
-    shingles AS (
-        SELECT doc_id, shingle FROM all_shingles
-        WHERE shingle IN (SELECT shingle FROM all_shingles
-                          GROUP BY shingle HAVING count(*) <= 100)
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    {_SHINGLE_OVERLAP_SQL.replace("FROM documents", "FROM kd")},
     near_dropped AS (
         SELECT DISTINCT doc_b AS doc_id
         FROM common
@@ -963,42 +911,71 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "simhash")
         .localCheckpoint(eager=False)
     )
-    bands = sigs.select(
-        "doc_id",
-        "simhash",
+    return _hamming_pairs(
+        sigs, "simhash", SIMHASH_BANDS, 16, SIMHASH_MAX_HAMMING
+    )
+
+
+def _bands(sigs: DataFrame, id_col: str, sig_col: str, n_bands: int,
+           bits: int, keep_sig: bool = False) -> DataFrame:
+    """(id_col[, sig_col], band_idx, band_val): one row per band of the
+    int64 signature — band i is bits [bits·i, bits·(i+1)). The index
+    side of Manku et al.'s banding (WWW'07): rows that agree on a band
+    share a (band_idx, band_val) bucket."""
+    cols = [id_col, sig_col] if keep_sig else [id_col]
+    mask = (1 << bits) - 1
+    return sigs.select(
+        *cols,
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(i).alias("band_idx"),
-                        F.shiftrightunsigned(F.col("simhash"), 16 * i)
-                        .bitwiseAND(F.lit(0xFFFF))
+                        F.shiftrightunsigned(F.col(sig_col), bits * i)
+                        .bitwiseAND(F.lit(mask))
                         .alias("band_val"),
                     )
-                    for i in range(SIMHASH_BANDS)
+                    for i in range(n_bands)
                 ]
             )
         ).alias("b"),
-    ).select("doc_id", "simhash", "b.band_idx", "b.band_val")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    ham = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+    ).select(*cols, "b.band_idx", "b.band_val")
+
+
+def _bucket_pairs(rows: DataFrame, id_col: str, a: str, b: str,
+                  keys: tuple[str, ...] = ("band_idx", "band_val"),
+                  extra: tuple[F.Column, ...] = (),
+                  where: F.Column | None = None) -> DataFrame:
+    """Distinct (a, b, *extra) over every pair of rows that share all
+    `keys` (a band bucket), with a < b — one equi-self-join, never a
+    cross product. `extra` may read either side as `a.<col>` /
+    `b.<col>`; `where` filters before the distinct (a pair sharing
+    several buckets is verified once per bucket, kept once)."""
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    pairs = rows.alias("a").join(
+        rows.alias("b"), reduce(lambda x, y: x & y, on)
+    ).select(
+        F.col(f"a.{id_col}").alias(a), F.col(f"b.{id_col}").alias(b), *extra
     )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-        .distinct()
+    return (pairs if where is None else pairs.filter(where)).distinct()
+
+
+def _hamming_pairs(sigs: DataFrame, sig_col: str, n_bands: int, bits: int,
+                   max_hamming: int, hamming_type: str = "int") -> DataFrame:
+    """(doc_a, doc_b, hamming) for every pair of (doc_id, sig_col)
+    signatures within `max_hamming` bits. With max_hamming < n_bands a
+    pair that close agrees exactly on at least one band (pigeonhole),
+    so the band-bucket self-join finds every such pair and only
+    candidates pay the bit_count(xor) verify: recall is exact."""
+    ham = F.bit_count(
+        F.col(f"a.{sig_col}").bitwiseXOR(F.col(f"b.{sig_col}"))
+    ).cast(hamming_type)
+    return _bucket_pairs(
+        _bands(sigs, "doc_id", sig_col, n_bands, bits, keep_sig=True),
+        "doc_id", "doc_a", "doc_b",
+        extra=(ham.alias("hamming"),),
+        where=F.col("hamming") <= max_hamming,
     )
 
 
@@ -1438,18 +1415,7 @@ def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    a = sig.select(
-        F.col("doc_id").alias("doc_a"), "band", F.col("sg").alias("sga")
-    )
-    b = sig.select(
-        F.col("doc_id").alias("doc_b"), "band", F.col("sg").alias("sgb")
-    )
-    cand = (
-        a.join(b, (a.band == b.band) & (F.col("sga") == F.col("sgb")))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = _bucket_pairs(sig, "doc_id", "doc_a", "doc_b", keys=("band", "sg"))
     inter = (
         cand.join(
             sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a"
@@ -1459,21 +1425,11 @@ def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["doc_b", "s"],
         )
         .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("ni"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    jac = F.col("ni") / (F.col("na") + F.col("nb") - F.col("ni"))
-    return (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")),
-            "doc_b",
-        )
-        .filter(jac >= MHC_JACCARD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    return _overlap_verify(
+        inter, sizes, _union_size(), MHC_JACCARD, "jaccard", 6
     )
 
 
@@ -1782,9 +1738,9 @@ def q_sample_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
-    clusters = min_label_propagate(pairs, pairs_materialized=True).select(
-        F.col("doc").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
+    clusters = min_label_propagate(
+        pairs, 20, pairs_materialized=True
+    ).select(F.col("doc").alias("doc_id"), F.col("label").alias("cluster_id"))
     fold = (
         F.conv(
             F.substring(F.md5(F.col("cluster_id").cast("string")), 1, 12),
@@ -1868,23 +1824,7 @@ def _simhash_md5_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("v"),
     )
-    votes = [
-        F.sum(
-            F.when(
-                F.shiftright(F.col("v"), i).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(SIMHASH_MD5_BITS)
-    ]
-    agg = toks.groupBy("doc_id").agg(*votes)
-    packed = reduce(
-        lambda acc, i: acc + F.when(
-            F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long")),
-        range(SIMHASH_MD5_BITS),
-        F.lit(0).cast("long"),
-    )
-    return agg.select("doc_id", packed.alias("simhash"))
+    return _simhash(toks, SIMHASH_MD5_BITS)
 
 
 @register(
@@ -1955,44 +1895,9 @@ def q_dedup_simhash_md5_pairs(
     # tokens) feeds BOTH self-join sides — truncate it once
     # (round-13 optimization pass).
     sigs = _simhash_md5_sigs(spark, sf_dir).localCheckpoint(eager=False)
-    bands = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.shiftrightunsigned(
-                            F.col("simhash"), 15 * i
-                        )
-                        .bitwiseAND(F.lit(0x7FFF))
-                        .alias("band_val"),
-                    )
-                    for i in range(SIMHASH_MD5_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "simhash", "b.band_idx", "b.band_val")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    ham = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            ham.cast("long").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= SIMHASH_MD5_MAX_HAMMING)
-        .distinct()
+    return _hamming_pairs(
+        sigs, "simhash", SIMHASH_MD5_BANDS, 15, SIMHASH_MD5_MAX_HAMMING,
+        hamming_type="long",
     )
 
 
@@ -2097,15 +2002,7 @@ def _srp_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x,
         )
 
-    sig = reduce(
-        lambda acc, p: acc
-        + F.when(
-            dot_lit(_SRP_COEFS[p]) >= 0,
-            F.shiftleft(F.lit(1).cast("long"), p),
-        ).otherwise(F.lit(0).cast("long")),
-        range(_SRP_PLANES),
-        F.lit(0).cast("long"),
-    )
+    sig = _pack_bits([dot_lit(c) >= 0 for c in _SRP_COEFS])
     return emb.select("vec_id", "e", sig.alias("sig"))
 
 
@@ -2117,25 +2014,7 @@ def _srp_candidates_from_sigs(
     occupancy count is a window over the join key itself, so the cap
     costs no extra shuffle — bands are already hash-partitioned by
     (band_idx, band_val) for the equi-join."""
-    mask = 2 ** _SRP_BAND_BITS - 1
-    bands = sigs.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.shiftrightunsigned(
-                            F.col("sig"), _SRP_BAND_BITS * i
-                        )
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
-                    )
-                    for i in range(_SRP_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("vec_id", "band.band_idx", "band.band_val")
+    bands = _bands(sigs, "vec_id", "sig", _SRP_BANDS, _SRP_BAND_BITS)
     w_bucket = W.partitionBy("band_idx", "band_val")
     # kept feeds BOTH self-join sides — truncate so the signature
     # build + occupancy window run once (round-13 optimization pass).
@@ -2145,20 +2024,7 @@ def _srp_candidates_from_sigs(
         .drop("occ")
         .localCheckpoint(eager=False)
     )
-    a, b = kept.alias("a"), kept.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-        .distinct()
-    )
+    return _bucket_pairs(kept, "vec_id", "vec_a", "vec_b")
 
 
 def _srp_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2274,8 +2140,8 @@ def q_dedup_srp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_srp_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SRP-LSH cost/quality certificate: recall of the exact
-    cos ≥ {thr} pair set (q_dedup_embedding's blocked-BLAS anchor at
-    the same threshold) inside the banded candidate set, and the
+    cos ≥ SRP_COS_THRESHOLD pair set (q_dedup_embedding's blocked-BLAS
+    anchor at the same threshold) inside the banded candidate set, and the
     candidate fraction of all n(n−1)/2 pairs — both hash-certified.
     On this isotropic corpus the threshold-grazing pairs sit near
     θ = 66°, where 4×4-bit banding recalls ≈ 0.5 (the header math);
@@ -2287,9 +2153,7 @@ def q_dedup_srp_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     is sampled (certify on a fixed-size probe stratum), exactly as
     q_sim_ivfpq_recall's docstring prescribes; the candidate and
     index sides stay linear.
-    """.replace(
-        "{thr}", str(SRP_COS_THRESHOLD)
-    )
+    """
     emb = load_table(spark, sf_dir, "embeddings")
     # exact (the O(n²) blocked-BLAS anchor) and cand each feed TWO
     # consumers (their count + the recall join) — truncate both so

@@ -564,62 +564,72 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Iterative hygiene per the repo rule: the edge list is the shared
     checkpointed _edges frame; each round recomputes degrees on the
-    induced subgraph (one map-side-combinable count + two semi
-    joins), re-checkpoints the survivor set so round k never replays
-    rounds 1..k-1, and ships ONLY the convergence count to the
-    driver. The peel terminates in ≤ max-degree rounds; 20 bounds
-    any graph this corpus generates (and a production run raises it,
-    not the per-round cost). Certified by the constructed-graph
-    pytest (cycle survives, pendant peels) — a fixpoint has no
+    induced subgraph (one map-side-combinable count + two broadcast
+    semi joins), re-checkpoints the survivor set so round k never
+    replays rounds 1..k-1, and ships ONLY the convergence count to
+    the driver (_peel). 20 rounds bound any graph this corpus
+    generates; a graph that needs more raises instead of returning a
+    partial core (a production run raises the bound, not the
+    per-round cost). Certified by the constructed-graph pytest
+    (cycle survives, pendant peels) — a fixpoint has no
     single-query SQL twin on THIS unbounded graph, hence rows-only;
     the identical peel kernel is hash-certified end-to-end by
     q_graph_kcore_cert on the bounded nation trade graph (25-round
     unrolled MATERIALIZED-CTE oracle).
     """
     edges = _edges(spark, sf_dir)  # both directions, checkpointed
-    nodes = (
-        edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
-    )
-    # One count job per peel round: last round's n_now IS this round's
-    # node count, so carry it instead of re-counting the checkpointed
-    # survivor frame (at scale each count is a driver round-trip per
-    # iteration).
-    n_prev = nodes.count()
-    # The survivor set is O(|V|) while the filtered side is O(|E|):
-    # broadcasting the node set makes both endpoint semi-joins
-    # map-side (the q_graph_pagerank |V| << |E| argument), so each
-    # peel round's only shuffle is the degree groupBy — previously
-    # every round sort-merge-shuffled the full edge list twice
-    # (round-14 optimization pass, guide §3.1).
-    for _ in range(20):
-        alive = edges.join(
-            F.broadcast(nodes), edges.src == nodes.node, "left_semi"
-        ).join(
-            F.broadcast(nodes.select(F.col("node").alias("dst_n"))),
-            F.col("dst") == F.col("dst_n"),
-            "left_semi",
-        )
-        deg = alive.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        survivors = (
-            deg.filter(F.col("d") >= 2)
-            .select(F.col("src").alias("node"))
-            .localCheckpoint()
-        )
-        n_now = survivors.count()
-        nodes = survivors
-        if n_now == n_prev or n_now == 0:
-            break
-        n_prev = n_now
-    core_edges = edges.join(
-        F.broadcast(nodes), edges.src == nodes.node, "left_semi"
-    ).join(
-        F.broadcast(nodes.select(F.col("node").alias("dst_n"))),
-        F.col("dst") == F.col("dst_n"),
-        "left_semi",
-    )
-    return core_edges.groupBy(F.col("src").alias("node")).agg(
+    core = _peel(edges, "src", "dst", 20, broadcast=True)
+    return core.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("core_degree")
     )
+
+
+def _peel(edges: DataFrame, src: str, dst: str, rounds: int,
+          broadcast: bool = False) -> DataFrame:
+    """The 2-core's edges: `edges` (both directions listed) restricted
+    to the nodes left after repeatedly peeling nodes of degree < 2 —
+    the degree-peel kernel of q_graph_kcore and q_graph_kcore_cert.
+
+    Each round recomputes degrees on the induced subgraph (two
+    endpoint semi-joins + one map-side-combinable count),
+    re-checkpoints the survivor set so round k never replays rounds
+    1..k-1, and ships only the survivor count to the driver — last
+    round's count is this round's baseline, so one count job per
+    round. Raises if `rounds` run out while nodes are still peeling.
+
+    `broadcast=True` hints the survivor set, which is O(|V|) while the
+    edge side is O(|E|): both semi-joins then run map-side and a
+    round's only shuffle is the degree groupBy (round-14 optimization
+    pass, guide §3.1). Without it the planner picks the joins.
+    """
+
+    hint = F.broadcast if broadcast else (lambda df: df)
+
+    def induced(nodes: DataFrame) -> DataFrame:
+        return edges.join(
+            hint(nodes), F.col(src) == nodes.node, "left_semi"
+        ).join(
+            hint(nodes.select(F.col("node").alias("bn"))),
+            F.col(dst) == F.col("bn"),
+            "left_semi",
+        )
+
+    nodes = edges.select(F.col(src).alias("node")).distinct().localCheckpoint()
+    n_prev = nodes.count()
+    for _ in range(rounds):
+        nodes = (
+            induced(nodes)
+            .groupBy(src)
+            .agg(F.count(F.lit(1)).alias("d"))
+            .filter(F.col("d") >= 2)
+            .select(F.col(src).alias("node"))
+            .localCheckpoint()
+        )
+        n_now = nodes.count()
+        if n_now == n_prev or n_now == 0:
+            return induced(nodes)
+        n_prev = n_now
+    raise RuntimeError(f"_peel: nodes still peeling after {rounds} rounds")
 
 
 @register(
@@ -1082,16 +1092,47 @@ def q_graph_components_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     2 at sf0.01) while keeping the oracle's quadratic
     reach-enumeration at ≤ 25² rows.
 
-    The Spark side is the production-shaped kernel, identical to
-    q_dedup_clusters' core: labels start as the node id, each round
+    The Spark side runs dedup.min_label_propagate, the kernel of
+    q_dedup_clusters: labels start as the node id, each round
     takes min(own, neighbors' labels) (one equi-join + one
     map-side-combinable groupBy), re-checkpoints (lineage stays
-    flat), and exits when no label changed — ≤ diameter rounds,
-    with only the per-round change count shipped to the driver. On
+    flat), and exits when no label changed — one job per round, the
+    change count, bounded by 25 rounds (≤ 25 nodes bound any
+    diameter). Nations with no strong edge keep their own label. On
     a 100 TB edge list the SAME loop runs with the node frame
     hash-partitioned; the certification graph is small because the
     ORACLE must enumerate reachability, not because the kernel is.
     """
+    from .dedup import min_label_propagate
+
+    und = _nation_trade_graph(spark, sf_dir, 7)
+    labels = min_label_propagate(
+        und.select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b")),
+        25,
+        pairs_materialized=True,
+    )
+    comp = (
+        load_table(spark, sf_dir, "nation")
+        .join(F.broadcast(labels), F.col("n_name") == F.col("doc"), "left")
+        .select("n_name", F.coalesce("label", "n_name").alias("component"))
+    )
+    sizes = comp.groupBy("component").agg(
+        F.count(F.lit(1)).alias("comp_size")
+    )
+    return comp.join(F.broadcast(sizes), "component").select(
+        "n_name", "component", "comp_size"
+    )
+
+
+def _nation_trade_graph(spark: SparkSession, sf_dir: str,
+                        num: int) -> DataFrame:
+    """Undirected (a, b) nation-name edges, both directions listed,
+    checkpointed: an edge where cross-nation trade volume (order lines
+    from a customer of one nation to a supplier of the other, either
+    way round) is >= num/4 of the mean pair volume. The comparison is
+    integer cross-multiplication, cnt·4·n >= num·s — no double
+    threshold for the engines to disagree on. The bounded graph (<= 25
+    nodes) of the two graph certificates."""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     cust = load_table(spark, sf_dir, "customer")
@@ -1120,53 +1161,17 @@ def q_graph_components_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cn", "sn")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    tot = e0.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("cnt").alias("s")
-    )
+    tot = e0.agg(F.count(F.lit(1)).alias("n"), F.sum("cnt").alias("s"))
     strong = (
         e0.crossJoin(F.broadcast(tot))
-        .filter(F.col("cnt") * 4 * F.col("n") >= 7 * F.col("s"))
+        .filter(F.col("cnt") * 4 * F.col("n") >= num * F.col("s"))
         .select("cn", "sn")
     )
-    und = (
+    return (
         strong.select(F.col("cn").alias("a"), F.col("sn").alias("b"))
         .union(strong.select(F.col("sn").alias("a"), F.col("cn").alias("b")))
         .distinct()
         .localCheckpoint()
-    )
-    labels = (
-        nat.select(F.col("n_name").alias("node"))
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(25):  # <= node count bounds any diameter
-        neigh = und.join(
-            labels, und.a == labels.node
-        ).select(F.col("b").alias("node"), "lbl")
-        new_labels = (
-            labels.unionByName(neigh)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.join(
-                labels.select("node", F.col("lbl").alias("old")), "node"
-            )
-            .filter(F.col("lbl") != F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    comp = labels.select(
-        F.col("node").alias("n_name"), F.col("lbl").alias("component")
-    )
-    sizes = comp.groupBy("component").agg(
-        F.count(F.lit(1)).alias("comp_size")
-    )
-    return comp.join(F.broadcast(sizes), "component").select(
-        "n_name", "component", "comp_size"
     )
 
 
@@ -1235,8 +1240,8 @@ def q_graph_kcore_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     its in-core degree is value-compared cross-engine, closing the
     one no_oracle driver row from CORRECTNESS_r07.
 
-    The Spark side is the production peel, structurally identical
-    to q_graph_kcore: each round recomputes degrees on the induced
+    The Spark side is the production peel, the _peel kernel
+    q_graph_kcore runs: each round recomputes degrees on the induced
     subgraph (two left-semi joins + one map-side-combinable count),
     re-checkpoints the survivor set so lineage stays flat, and
     ships only the survivor count to the driver; it exits at the
@@ -1245,70 +1250,8 @@ def q_graph_kcore_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the certification graph is small because the ORACLE must unroll
     the peel, not because the kernel is.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    cust = load_table(spark, sf_dir, "customer")
-    supp = load_table(spark, sf_dir, "supplier")
-    nat = load_table(spark, sf_dir, "nation")
-    e0 = (
-        orders.join(li, li.l_orderkey == orders.o_orderkey)
-        .join(cust, cust.c_custkey == orders.o_custkey)
-        .join(
-            F.broadcast(nat.select(
-                F.col("n_nationkey").alias("ck"),
-                F.col("n_name").alias("cn"),
-            )),
-            F.col("ck") == cust.c_nationkey,
-        )
-        .join(F.broadcast(supp.select("s_suppkey", "s_nationkey")),
-              F.col("s_suppkey") == li.l_suppkey)
-        .join(
-            F.broadcast(nat.select(
-                F.col("n_nationkey").alias("sk"),
-                F.col("n_name").alias("sn"),
-            )),
-            F.col("sk") == F.col("s_nationkey"),
-        )
-        .filter(F.col("cn") != F.col("sn"))
-        .groupBy("cn", "sn")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    tot = e0.agg(F.count(F.lit(1)).alias("n"), F.sum("cnt").alias("s"))
-    strong = (
-        e0.crossJoin(F.broadcast(tot))
-        .filter(F.col("cnt") * 4 * F.col("n") >= 5 * F.col("s"))
-        .select("cn", "sn")
-    )
-    und = (
-        strong.select(F.col("cn").alias("a"), F.col("sn").alias("b"))
-        .union(strong.select(F.col("sn").alias("a"), F.col("cn").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = und.select(F.col("a").alias("node")).distinct().localCheckpoint()
-    n_prev = nodes.count()
-    for _ in range(KCORE_CERT_ROUNDS):
-        alive = und.join(nodes, und.a == nodes.node, "left_semi").join(
-            nodes.select(F.col("node").alias("bn")),
-            F.col("b") == F.col("bn"),
-            "left_semi",
-        )
-        survivors = (
-            alive.groupBy("a")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") >= 2)
-            .select(F.col("a").alias("node"))
-            .localCheckpoint()
-        )
-        n_now = survivors.count()
-        nodes = survivors
-        if n_now == n_prev or n_now == 0:
-            break
-        n_prev = n_now
-    core = und.join(nodes, und.a == nodes.node, "left_semi").join(
-        nodes.select(F.col("node").alias("bn")),
-        F.col("b") == F.col("bn"),
-        "left_semi",
+    core = _peel(
+        _nation_trade_graph(spark, sf_dir, 5), "a", "b", KCORE_CERT_ROUNDS
     )
     return core.groupBy(F.col("a").alias("n_name")).agg(
         F.count(F.lit(1)).alias("core_degree")

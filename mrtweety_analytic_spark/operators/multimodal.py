@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
+from .dedup import _hamming_pairs
 
 
 @register(
@@ -472,10 +473,11 @@ def q_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end except the env-blocked bytes→pixels step
     (raw_decode_stub). Near-dups are pairs with Hamming distance
     ≤ 3, found WITHOUT an all-pairs scan: the Manku banding trick
-    from q_dedup_simhash_pairs — 4 disjoint 16-bit bands; any pair
-    within Hamming 3 must agree exactly on ≥ 1 band (pigeonhole), so
-    candidates come from 4 equi-joins on (band, value) and only they
-    pay the popcount verify.
+    of q_dedup_simhash_pairs (the same dedup._hamming_pairs kernel) —
+    4 disjoint 16-bit bands; any pair within Hamming 3 must agree
+    exactly on ≥ 1 band (pigeonhole), so candidates come from one
+    equi-self-join on (band, value) and only they pay the popcount
+    verify.
 
     Scale: the hash is one Arrow-batched pass over the payloads
     (payload bytes never shuffle — only the 8-byte hash + id move);
@@ -513,47 +515,7 @@ def q_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = payload_df.mapInPandas(
         phash_batches, schema="doc_id long, phash long"
     )
-    bands = hashed.select(
-        "doc_id",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(F.col("phash"), 16 * i)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("val"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "phash", "b.band", "b.val")
-    left = bands.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("phash").alias("ph_a"),
-        "band",
-        "val",
-    )
-    right = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("phash").alias("ph_b"),
-        "band",
-        "val",
-    )
-    cand = (
-        left.join(right, ["band", "val"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "ph_a", "ph_b")
-        .distinct()
-    )
-    hamming = F.bit_count(
-        F.col("ph_a").bitwiseXOR(F.col("ph_b"))
-    ).alias("hamming")
-    return cand.select("doc_a", "doc_b", hamming).where(
-        F.col("hamming") <= 3
-    )
+    return _hamming_pairs(hashed, "phash", 4, 16, 3)
 
 
 @register(

@@ -1661,7 +1661,8 @@ def q_sim_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = min_label_propagate(
         pairs.select(
             F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-        )
+        ),
+        20,
     )
     return labels.select(
         F.col("doc").alias("vec_id"), F.col("label").alias("cluster_id")
@@ -1921,6 +1922,7 @@ def q_sim_cluster_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs0.select(
             F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
         ),
+        20,
         pairs_materialized=True,
     ).select(
         F.col("doc").alias("vec_id"), F.col("label").alias("cluster_id")
@@ -2128,7 +2130,7 @@ def q_sim_sparse_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape dense kNN can't give you at corpus scale: candidate pairs
     come only from co-occurring terms, so the join cost is
     sum(df(t)^2) over kept terms — bounded by the stop-term cap
-    (df > {0}-doc posting lists dropped, the same
+    (df > _SPARSE_DF_CAP-doc posting lists dropped, the same
     inverted-index governor as q_dedup_ngram_jaccard) — never the
     n^2 of brute force. Everything downstream of the explode is
     integer arithmetic (tf counts), so the dot products are EXACT
@@ -2142,7 +2144,7 @@ def q_sim_sparse_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop-term table is tiny and broadcast; the top-20 cut is
     TakeOrderedAndProject. Cosine over the PRUNED vocabulary is the
     documented semantic (stop terms carry no discriminative mass).
-    """.format(_SPARSE_DF_CAP)
+    """
     docs = load_table(spark, sf_dir, "documents")
     arr = F.split("text", " ")
     pairs = F.arrays_zip(
@@ -2320,7 +2322,7 @@ def q_sim_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval at nprobe = 1, 2, 4, 8 — measured, oracle-hashed, in
     one pass. This is the artifact an operator actually reads when
     setting the recall/cost knob: candidate cost grows linearly in
-    nprobe while recall saturates, and the nprobe = K = {0} endpoint
+    nprobe while recall saturates, and the nprobe = K = KM_K endpoint
     probes every cell, so its recall is exactly 1.0 by construction
     — a self-certifying sanity anchor for the whole measurement
     (q_sim_ivf_kmeans_recall gives the single operating point; this
@@ -2333,7 +2335,7 @@ def q_sim_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus is scanned once, candidates form per (cell) via the
     same equi-join, and each point's top-k is a window over its own
     candidate set. No step re-trains or re-scans per point.
-    """.format(KM_K)
+    """
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )

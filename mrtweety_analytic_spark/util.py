@@ -45,13 +45,15 @@ class LastHandle:
     py4j errors on release are swallowed: a handle left over from a
     stopped SparkSession raises Py4JJavaError (a Java
     NullPointerException), which must not break the operator's first
-    call in the next session. Any other error propagates.
+    call in the next session. Any other error propagates. At exit,
+    a process that already shut its JVM gateway down has nothing
+    left to release, so the handle just forgets its generations.
     """
 
     def __init__(self, keep: int = 1):
         self._keep = max(1, keep)
         self._gens: list[tuple[DataFrame, ...]] = []
-        atexit.register(self.clear)
+        atexit.register(self._exit)
 
     def persist(self, *dfs: DataFrame) -> None:
         """Release what falls out of `keep`, then persist `dfs` in
@@ -67,6 +69,14 @@ class LastHandle:
 
     def clear(self) -> None:
         self._trim(0)
+
+    def _exit(self) -> None:
+        from pyspark import SparkContext
+
+        if SparkContext._gateway is None:
+            self._gens.clear()
+        else:
+            self.clear()
 
     def _trim(self, n: int) -> None:
         while len(self._gens) > n:

@@ -1,0 +1,143 @@
+"""Shared kernels of the near-duplicate and graph-fixpoint family:
+both fixpoint loops fail loudly at their round bound, every query that
+claims a kernel runs it, and the registry keeps its docstrings."""
+
+from __future__ import annotations
+
+import ast
+import inspect
+import os
+import subprocess
+import sys
+import textwrap
+
+import pytest
+
+from mrtweety_analytic_spark.operators import dedup, graph
+from mrtweety_analytic_spark.queries import QUERIES
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _path_pairs(spark, n: int):
+    """(doc_a, doc_b) edges of the path 1 - 2 - ... - n."""
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(1, n)], "doc_a long, doc_b long"
+    )
+
+
+def test_label_propagation_raises_when_its_bound_runs_out(spark):
+    # A 6-node path has diameter 5: label 1 reaches node 6 in round 5
+    # and round 6 is the quiet round that proves convergence.
+    pairs = _path_pairs(spark, 6)
+    with pytest.raises(RuntimeError, match="still changing after 5 rounds"):
+        dedup.min_label_propagate(pairs, 5)
+    labels = dedup.min_label_propagate(pairs, 6).collect()
+    assert sorted((r.doc, r.label) for r in labels) == [
+        (i, 1) for i in range(1, 7)
+    ]
+
+
+def test_peel_raises_when_its_bound_runs_out(spark):
+    # Each round peels the two ends of a path: 6 -> 4 -> 2 -> 0 nodes.
+    edges = _path_pairs(spark, 6)
+    both = edges.unionByName(
+        edges.selectExpr("doc_b AS doc_a", "doc_a AS doc_b")
+    ).toDF("src", "dst")
+    with pytest.raises(RuntimeError, match="still peeling after 2 rounds"):
+        graph._peel(both, "src", "dst", 2)
+    assert graph._peel(both, "src", "dst", 3).count() == 0
+
+
+@pytest.mark.parametrize(
+    "module, kernel, names",
+    [
+        (
+            dedup,
+            "min_label_propagate",
+            ["q_dedup_clusters", "q_sim_semantic_clusters",
+             "q_graph_components_cert"],
+        ),
+        (graph, "_peel", ["q_graph_kcore", "q_graph_kcore_cert"]),
+    ],
+    ids=["min_label_propagate", "peel"],
+)
+def test_queries_run_the_shared_kernel(
+    spark, sf_dir, monkeypatch, module, kernel, names
+):
+    real = getattr(module, kernel)
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, kernel, spy)
+    for name in names:
+        calls.clear()
+        QUERIES[name](spark, sf_dir)
+        assert len(calls) == 1, name
+
+
+def _string_expression(node: ast.expr) -> bool:
+    """A string literal, an f-string, or a method call / operator on one
+    (`\"\"\"...\"\"\".format(x)`) — none but the plain literal sets __doc__."""
+    if isinstance(node, ast.Constant):
+        return isinstance(node.value, str)
+    if isinstance(node, ast.JoinedStr):
+        return True
+    if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+        return _string_expression(node.func.value)
+    if isinstance(node, ast.BinOp):
+        return _string_expression(node.left)
+    return False
+
+
+def test_registered_docstrings_are_docstrings():
+    lost = []
+    for name, fn in sorted(QUERIES.items()):
+        fn = inspect.unwrap(fn)
+        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
+        first = tree.body[0].body[0]
+        if (
+            isinstance(first, ast.Expr)
+            and _string_expression(first.value)
+            and fn.__doc__ is None
+        ):
+            lost.append(name)
+    assert lost == []
+
+
+_EXIT_AFTER_GATEWAY_SHUTDOWN = """
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark import SparkContext
+from mrtweety_analytic_spark.session import get_spark
+from mrtweety_analytic_spark.util import LastHandle
+
+spark = get_spark("exit-release")
+handle = LastHandle()
+df = spark.range(10)
+handle.persist(df)
+df.count()
+# stop the session, then the gateway and its JVM
+spark.stop()
+gateway = SparkContext._gateway
+proc = gateway.proc
+gateway.shutdown()
+proc.stdin.close()
+proc.wait(timeout=60)
+SparkContext._gateway = None
+SparkContext._jvm = None
+"""
+
+
+def test_exit_after_gateway_shutdown_is_quiet():
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEM="1g")
+    run = subprocess.run(
+        [sys.executable, "-c",
+         _EXIT_AFTER_GATEWAY_SHUTDOWN.format(repo=REPO)],
+        capture_output=True, text=True, timeout=300, env=env,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert "Traceback" not in run.stderr, run.stderr[-2000:]

@@ -63,7 +63,8 @@ def cohesion(spark, sf_dir, new: bool):
             pairs0.select(
                 F.col("vec_a").alias("doc_a"),
                 F.col("vec_b").alias("doc_b"),
-            )
+            ),
+            20,
         )
         direct_src = pairs0
     else:
@@ -71,7 +72,8 @@ def cohesion(spark, sf_dir, new: bool):
             q_dedup_embedding(spark, sf_dir).select(
                 F.col("vec_a").alias("doc_a"),
                 F.col("vec_b").alias("doc_b"),
-            )
+            ),
+            20,
         )
         direct_src = q_dedup_embedding(spark, sf_dir).select(
             "vec_a", "vec_b"
