@@ -565,27 +565,27 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iterative hygiene per the repo rule: the edge list is the shared
     checkpointed _edges frame; each round recomputes degrees on the
     induced subgraph (one map-side-combinable count + two broadcast
-    semi joins), re-checkpoints the survivor set so round k never
-    replays rounds 1..k-1, and ships ONLY the convergence count to
-    the driver (_peel). 20 rounds bound any graph this corpus
-    generates; a graph that needs more raises instead of returning a
-    partial core (a production run raises the bound, not the
-    per-round cost). Certified by the constructed-graph pytest
-    (cycle survives, pendant peels) — a fixpoint has no
+    semi joins — the survivor set is O(|V|) against the O(|E|) edge
+    list), re-checkpoints the survivor set so round k never replays
+    rounds 1..k-1, and takes ONE action, the survivor count that also
+    materializes the lazy checkpoint (_peel). 20 rounds bound any
+    graph this corpus generates; a graph that needs more raises
+    instead of returning a partial core (a production run raises the
+    bound, not the per-round cost). Certified by the constructed-graph
+    pytest (cycle survives, pendant peels) — a fixpoint has no
     single-query SQL twin on THIS unbounded graph, hence rows-only;
     the identical peel kernel is hash-certified end-to-end by
     q_graph_kcore_cert on the bounded nation trade graph (25-round
     unrolled MATERIALIZED-CTE oracle).
     """
     edges = _edges(spark, sf_dir)  # both directions, checkpointed
-    core = _peel(edges, "src", "dst", 20, broadcast=True)
+    core = _peel(edges, "src", "dst", 20)
     return core.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("core_degree")
     )
 
 
-def _peel(edges: DataFrame, src: str, dst: str, rounds: int,
-          broadcast: bool = False) -> DataFrame:
+def _peel(edges: DataFrame, src: str, dst: str, rounds: int) -> DataFrame:
     """The 2-core's edges: `edges` (both directions listed) restricted
     to the nodes left after repeatedly peeling nodes of degree < 2 —
     the degree-peel kernel of q_graph_kcore and q_graph_kcore_cert.
@@ -593,28 +593,31 @@ def _peel(edges: DataFrame, src: str, dst: str, rounds: int,
     Each round recomputes degrees on the induced subgraph (two
     endpoint semi-joins + one map-side-combinable count),
     re-checkpoints the survivor set so round k never replays rounds
-    1..k-1, and ships only the survivor count to the driver — last
-    round's count is this round's baseline, so one count job per
-    round. Raises if `rounds` run out while nodes are still peeling.
+    1..k-1, and ships only the survivor count to the driver. One
+    action per round: the checkpoint is lazy, so the survivor count()
+    both materializes it and tests convergence, and last round's count
+    is this round's baseline. Raises if `rounds` run out while nodes
+    are still peeling.
 
-    `broadcast=True` hints the survivor set, which is O(|V|) while the
-    edge side is O(|E|): both semi-joins then run map-side and a
-    round's only shuffle is the degree groupBy (round-14 optimization
-    pass, guide §3.1). Without it the planner picks the joins.
+    Both semi-joins broadcast the survivor set, which is O(|V|) while
+    the edge side is O(|E|): they run map-side and a round's only
+    shuffle is the degree groupBy (round-14 optimization pass, guide
+    §3.1).
     """
-
-    hint = F.broadcast if broadcast else (lambda df: df)
 
     def induced(nodes: DataFrame) -> DataFrame:
         return edges.join(
-            hint(nodes), F.col(src) == nodes.node, "left_semi"
+            F.broadcast(nodes), F.col(src) == nodes.node, "left_semi"
         ).join(
-            hint(nodes.select(F.col("node").alias("bn"))),
+            F.broadcast(nodes.select(F.col("node").alias("bn"))),
             F.col(dst) == F.col("bn"),
             "left_semi",
         )
 
-    nodes = edges.select(F.col(src).alias("node")).distinct().localCheckpoint()
+    nodes = (
+        edges.select(F.col(src).alias("node")).distinct()
+        .localCheckpoint(eager=False)
+    )
     n_prev = nodes.count()
     for _ in range(rounds):
         nodes = (
@@ -623,7 +626,7 @@ def _peel(edges: DataFrame, src: str, dst: str, rounds: int,
             .agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= 2)
             .select(F.col(src).alias("node"))
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
         n_now = nodes.count()
         if n_now == n_prev or n_now == 0:
@@ -1244,11 +1247,13 @@ def q_graph_kcore_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_graph_kcore runs: each round recomputes degrees on the induced
     subgraph (two left-semi joins + one map-side-combinable count),
     re-checkpoints the survivor set so lineage stays flat, and
-    ships only the survivor count to the driver; it exits at the
-    observed fixpoint rather than running all 25 rounds. On a
-    100 TB edge list the SAME loop runs hash-partitioned on node;
-    the certification graph is small because the ORACLE must unroll
-    the peel, not because the kernel is.
+    takes one action, the survivor count; it exits at the observed
+    fixpoint rather than running all 25 rounds. The survivor set is
+    broadcast into both semi-joins, as in q_graph_kcore: nations are
+    the nodes, so it never exceeds 25 rows, and the joins need no
+    32-way Exchange of the edge list each round. The certification
+    graph is small because the ORACLE must unroll the peel, not
+    because the kernel is.
     """
     core = _peel(
         _nation_trade_graph(spark, sf_dir, 5), "a", "b", KCORE_CERT_ROUNDS

@@ -446,14 +446,13 @@ def q_multimodal_offload(spark: SparkSession, sf_dir: str) -> DataFrame:
     store_path = _scratch("offload_store", sf_dir)
     manifest_path = _scratch("offload_manifest", sf_dir)
     # store: ONE row per unique content — the dedup is the point
-    keyed.select("digest", "payload").dropDuplicates(
-        ["digest"]
-    ).write.mode("overwrite").parquet(store_path)
-    keyed.select("doc_id", "digest").write.mode("overwrite").parquet(
-        manifest_path
-    )
-    store = spark.read.parquet(store_path)
-    manifest = spark.read.parquet(manifest_path)
+    store = keyed.select("digest", "payload").dropDuplicates(["digest"])
+    manifest = keyed.select("doc_id", "digest")
+    store.write.mode("overwrite").parquet(store_path)
+    manifest.write.mode("overwrite").parquet(manifest_path)
+    # read back with the written schemas: inferring one is a Spark job
+    store = spark.read.schema(store.schema).parquet(store_path)
+    manifest = spark.read.schema(manifest.schema).parquet(manifest_path)
     return (
         manifest.join(store, "digest")
         .select(

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import register
-from ..sources import load_table, table_path
+from ..sources import load_table, table_path, table_schema
 from ..util import app_temp_dir
 
 
@@ -272,7 +272,8 @@ def q_scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows without re-reading the lake. Certified by profiling the
     events table per source file against the relational row count.
     """
-    df = spark.read.parquet(table_path(sf_dir, "events")).select(
+    path = table_path(sf_dir, "events")
+    df = spark.read.schema(table_schema(spark, path)).parquet(path).select(
         F.col("_metadata.file_name").alias("file_name"), "event_id"
     )
     return df.groupBy("file_name").agg(

@@ -266,8 +266,10 @@ def q_maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         if f.endswith(".parquet")
     )
     n_files = max(1, math.ceil(n_bytes / (32 << 20)))
-    spark.read.parquet(frag).coalesce(n_files).write.parquet(compact)
-    return spark.read.parquet(compact)
+    # read back with the written schema: inferring it is a job per read
+    read = spark.read.schema(docs.schema)
+    read.parquet(frag).coalesce(n_files).write.parquet(compact)
+    return read.parquet(compact)
 
 
 # Where the most recent q_maintenance_compact call wrote (scratch

@@ -1,11 +1,15 @@
 """Table loaders and explicit schemas for the test corpus.
 
 Batch reads rely on the parquet footer schema (self-describing;
-Catalyst pushes filters/pruning into the scan). Streaming file reads
-require an explicit schema — declared here once (FIXTURES.md §A).
+Catalyst pushes filters/pruning into the scan), inferred once per file
+(table_schema). Streaming file reads require an explicit schema —
+declared here once (FIXTURES.md §A).
 """
 
 from __future__ import annotations
+
+import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -137,10 +141,46 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Batch-load one corpus table, tuning the session on the way."""
+# path -> ((inode, size, mtime_ns), schema Spark inferred for that file)
+_SCHEMAS: dict[str, tuple[tuple[int, int, int], T.StructType]] = {}
+
+
+def table_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema Spark infers for the parquet table at `path`, under
+    the tuned session (nanosAsLong: timestamp[ns] stays long nanos).
+
+    Inference reads the footer in a one-task Spark job, so a regular
+    file's schema is inferred once per process and reused while the
+    file keeps its identity (inode, size, mtime_ns): a file rewritten
+    in place is inferred afresh. Anything
+    else — a directory, whose identity does not change when a part
+    file does, or a path os.stat cannot see — is inferred on every
+    call, as spark.read.parquet would.
+    """
     tune(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path).schema
+    ident = (st.st_ino, st.st_size, st.st_mtime_ns)
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[0] != ident:
+        hit = _SCHEMAS[path] = (ident, spark.read.parquet(path).schema)
+    return hit[1]
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Batch-load one corpus table, tuning the session on the way.
+
+    The footer schema comes from table_schema, so a repeat load of an
+    unchanged file launches no Spark job and plans exactly as the
+    first; _normalize_timestamps then lands every timestamp encoding
+    on µs TimestampType.
+    """
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(table_schema(spark, path)).parquet(path)
     return _normalize_timestamps(df)
 
 

@@ -1009,24 +1009,14 @@ def s_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is why a streaming sketch operator can carry a full SQL
     oracle: the sketch bounds the candidate set, never the answer.
     """
-    import os as _os
-
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..sources import load_table
+    from ..sources import load_documents_stream, load_table
 
     docs_batch = load_table(spark, sf_dir, "documents")
-    footer_schema = spark.read.parquet(
-        _os.path.join(sf_dir, "documents.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(footer_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    stream = load_documents_stream(spark, sf_dir)
     toks = stream.select(
         F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
     ).select(

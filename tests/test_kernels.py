@@ -1,6 +1,7 @@
 """Shared kernels of the near-duplicate and graph-fixpoint family:
-both fixpoint loops fail loudly at their round bound, every query that
-claims a kernel runs it, and the registry keeps its docstrings."""
+both fixpoint loops fail loudly at their round bound, the peel takes
+one action per round, every query that claims a kernel runs it, and
+the registry keeps its docstrings."""
 
 from __future__ import annotations
 
@@ -47,6 +48,45 @@ def test_peel_raises_when_its_bound_runs_out(spark):
     with pytest.raises(RuntimeError, match="still peeling after 2 rounds"):
         graph._peel(both, "src", "dst", 2)
     assert graph._peel(both, "src", "dst", 3).count() == 0
+
+
+def _next_job(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _cycle_with_pendant_chain(spark, chain: int):
+    """Both directions of the 4-cycle 1-2-3-4 with the path 4-5-...
+    hanging off node 4; the peel removes one chain node per round."""
+    e = [(1, 2), (2, 3), (3, 4), (4, 1)]
+    e += [(4 + i, 5 + i) for i in range(chain)]
+    return spark.createDataFrame(
+        e + [(b, a) for a, b in e], "src long, dst long"
+    )
+
+
+def test_peel_takes_one_action_per_round(spark):
+    jobs = {}
+    for chain in (2, 3):
+        edges = _cycle_with_pendant_chain(spark, chain)
+        before = _next_job(spark)
+        core = graph._peel(edges, "src", "dst", 10)
+        jobs[chain] = _next_job(spark) - before
+        assert sorted(tuple(r) for r in core.collect()) == sorted(
+            [(1, 2), (2, 3), (3, 4), (4, 1), (2, 1), (3, 2), (4, 3), (1, 4)]
+        )
+    # one more chain node costs one more round: its two survivor-set
+    # broadcasts, the degree shuffle and the survivor count's two
+    # stages. An eager checkpoint would add a sixth job.
+    assert jobs[3] - jobs[2] == 5
+
+
+def test_kcore_cert_job_count(spark, sf_dir):
+    QUERIES["q_graph_kcore_cert"](spark, sf_dir)  # warm the table schemas
+    before = _next_job(spark)
+    QUERIES["q_graph_kcore_cert"](spark, sf_dir)
+    # 9 jobs build the trade graph's checkpoint, 3 the first survivor
+    # set and its count; at sf0.001 the peel takes 2 rounds of 5 jobs
+    assert _next_job(spark) - before == 22
 
 
 @pytest.mark.parametrize(

@@ -31,7 +31,8 @@ Digest mode (the "same plans" gate for refactors):
 writes, per batch query, two sha256 digests of its initial physical
 plan: `shape` (operator names and tree structure only) and `full`
 (the plan text with expression ids, plan ids, lambda-variable
-suffixes and temp paths stripped). With --against it lists the
+suffixes and temp paths stripped, and the distinct-aggregate rewrite's
+gid numbering masked and its lists sorted). With --against it lists the
 queries whose digests differ from BASE.json and exits 1 if any does.
 """
 
@@ -119,7 +120,40 @@ def normalize_plan(plan: str) -> str:
     """Plan text with per-process identifiers stripped."""
     for pattern, repl in _VOLATILE:
         plan = pattern.sub(repl, plan)
-    return plan
+    if not re.search(r"\bgid# = \d", plan):  # no distinct-aggregate rewrite
+        return plan
+    return "\n".join(
+        _mask_gids(line) if "gid#" in line else line
+        for line in plan.split("\n")
+    )
+
+
+def _mask_gids(line: str) -> str:
+    """A line of the distinct-aggregate rewrite (its Expand and the
+    ancestors that read `gid`) with its group numbering masked and its
+    lists sorted. The rewrite lists its columns and numbers its `gid`
+    groups in an order set by expression ids, which depend on what the
+    session built before the query; the `shape` digest still covers
+    the structure."""
+    line = re.sub(r"gid# = \d+", "gid# = ?", line)
+    if re.search(r"\bExpand \[", line):
+        line = re.sub(r"(?<=[\[ ])\d+(?=[,\]])", "?", line)  # gid values
+    stack = [["", ""]]  # per open list: its opener, then its items
+    for ch in line:
+        if ch in "([":
+            stack.append([ch, ""])
+        elif ch in ")]" and len(stack) > 1:
+            opener, *items = stack.pop()
+            items = sorted(i.strip() for i in items)
+            stack[-1][-1] += opener + ", ".join(items) + ch
+        elif ch == "," and len(stack) > 1:
+            stack[-1].append("")
+        else:
+            stack[-1][-1] += ch
+    while len(stack) > 1:  # a bracket left open, e.g. in a string literal
+        opener, *items = stack.pop()
+        stack[-1][-1] += opener + ",".join(items)
+    return stack[0][1]
 
 
 def plan_shape(plan: str) -> str:
