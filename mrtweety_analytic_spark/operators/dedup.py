@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import LastHandle, ordered_pairs
+from ..util import LastHandle, ngram_windows, ordered_pairs
 
 # Multi-consumer intermediates of the funnel/dedup composites,
 # persisted per call — without these the quality-gate tokenization
@@ -648,17 +648,8 @@ def _shingle_index(docs: DataFrame, df_cap: int = 100
     sizes — the shared candidate machinery of the jaccard and
     containment dedup tiers.
     """
-    arr = F.split("text", " ")
     n = 5
-    # Shingles via arrays_zip over n shifted slices — codegen'd array
-    # ops, measured ~3x faster than the interpreted
-    # transform(sequence(...)) HOF form at sf 0.1 (0.8 s vs 2-3 s for
-    # the distinct index; identical shingle set — same rule as
-    # similarity.dot_expr and q_text_pmi). The greatest(0, ...) guard
-    # makes documents shorter than n zip to an empty array (slice
-    # length may not be negative).
-    win_len = F.greatest(F.lit(0), F.size(arr) - (n - 1))
-    sh = F.arrays_zip(*[F.slice(arr, i + 1, win_len) for i in range(n)])
+    sh = ngram_windows(F.split("text", " "), n)
     # Shingles are xxhash64'd to int64 before the distinct/joins:
     # 8-byte shuffle keys instead of ~30-byte strings (~30% faster
     # measured; collision probability over 250k shingles ≈ 2e-9, far
@@ -1139,12 +1130,9 @@ def funnel_stages(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     dedup fdocs, near-dup-free final) — the reusable core behind
     q_corpus_funnel's stage counts and q_training_export's
     curate->rebalance->shard composite."""
-    from .textops import STOPWORDS, _is_en_predicate, _lang_hit_cols
+    from .textops import STOPWORDS, _is_en_predicate, _lang_hit_cols, tokens
 
-    t = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    ).filter(F.col("term") != "")
-    metrics = t.groupBy("doc_id").agg(
+    metrics = tokens(docs).groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         (
             F.sum(F.when(F.col("term").isin(*STOPWORDS), 1).otherwise(0))
@@ -1350,7 +1338,7 @@ def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the oracle hash: candidate generation, the s-curve cut,
     and the verified pairs all certified cross-engine.
 
-    Scale: shingling is map-side arrays_zip; the minhash aggregate
+    Scale: shingling is map-side ngram_windows; the minhash aggregate
     is partial-aggregable min over (doc, i) — O(docs × 16) state;
     banding groups O(docs × 4) signature rows; pairs form only
     inside equal buckets (never all-pairs); exact verification
@@ -1361,10 +1349,7 @@ def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     ws = F.filter(
         F.split(F.lower("text"), " "), lambda x: x != ""
     )
-    n3 = F.greatest(F.lit(0), F.size(ws) - 2)
-    zipped = F.arrays_zip(
-        F.slice(ws, 1, n3), F.slice(ws, 2, n3), F.slice(ws, 3, n3)
-    )
+    zipped = ngram_windows(ws, 3)
     # sh feeds FOUR consumers (minhash build, both verify sides,
     # sizes) and sig feeds two (both banding sides) — truncate each
     # once; without this the trigram tokenize+distinct executes 4x

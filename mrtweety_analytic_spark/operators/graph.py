@@ -602,17 +602,14 @@ def _peel(edges: DataFrame, src: str, dst: str, rounds: int) -> DataFrame:
     Both semi-joins broadcast the survivor set, which is O(|V|) while
     the edge side is O(|E|): they run map-side and a round's only
     shuffle is the degree groupBy (round-14 optimization pass, guide
-    §3.1).
+    §3.1). They broadcast the same unaliased frame, so the second
+    plans as a ReusedExchange of the first: one broadcast per round.
     """
 
     def induced(nodes: DataFrame) -> DataFrame:
         return edges.join(
-            F.broadcast(nodes), F.col(src) == nodes.node, "left_semi"
-        ).join(
-            F.broadcast(nodes.select(F.col("node").alias("bn"))),
-            F.col(dst) == F.col("bn"),
-            "left_semi",
-        )
+            F.broadcast(nodes), F.col(src) == F.col("node"), "left_semi"
+        ).join(F.broadcast(nodes), F.col(dst) == F.col("node"), "left_semi")
 
     nodes = (
         edges.select(F.col(src).alias("node")).distinct()

@@ -24,7 +24,7 @@ from pyspark.sql.window import Window as W
 
 from ..registry import register
 from ..sources import load_table
-from ..util import LastHandle
+from ..util import LastHandle, ngram_windows
 
 # Supersession holders for this module's persisted frames: repeated
 # bench/verify calls keep one generation each in the block manager.
@@ -212,27 +212,20 @@ def q_text_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal (the suffix-array signal of Lee et al. 2022, expressed as
     a bounded shingle index instead of a driver-side suffix array).
 
-    Scale: shingling is map-side arrays_zip over w shifted slices of
-    the token array (codegen'd array ops — measured ~3x faster than
-    the interpreted transform(sequence(...)) HOF form at sf 0.1,
-    same rule as similarity.dot_expr); the shuffle key is the
-    passage string and the aggregate is partial-aggregable, so hot
-    passages combine map-side before the exchange. Fan-out per doc is
-    len(tokens) − w + 1 rows of w tokens each — bounded, linear in
-    corpus size, and the raw document text never shuffles (only its
-    w-token windows do).
+    Scale: shingling is map-side util.ngram_windows over the token
+    array; the shuffle key is the passage string and the aggregate is
+    partial-aggregable, so hot passages combine map-side before the
+    exchange. Fan-out per doc is len(tokens) − w + 1 rows of w tokens
+    each — bounded, linear in corpus size, and the raw document text
+    never shuffles (only its w-token windows do).
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.split(F.lower(F.col("text")), " ").alias("t")
     )
-    win_len = F.greatest(F.lit(0), F.size("t") - (_SHINGLE_W - 1))
-    zipped = F.arrays_zip(
-        *[F.slice("t", i + 1, win_len) for i in range(_SHINGLE_W)]
-    )
     shingles = toks.select(
         "doc_id",
-        F.explode(zipped).alias("g"),
+        F.explode(ngram_windows("t", _SHINGLE_W)).alias("g"),
     ).select(
         "doc_id",
         F.concat_ws(" ", *[f"g.{i}" for i in range(_SHINGLE_W)]).alias(
@@ -993,7 +986,7 @@ def training_export_full_frames(
     CLI export consume them directly."""
     from ..registry import QUERIES
     from .dedup import VAL_MOD, funnel_stages
-    from .textops import DECON_BENCH_MOD, DECON_N, _word_ngrams
+    from .textops import DECON_BENCH_MOD, _decon_grams
 
     docs = load_table(spark, sf_dir, "documents")
     final = funnel_stages(docs)[2]
@@ -1010,8 +1003,7 @@ def training_export_full_frames(
     # funnel + cluster-split lineage above executes twice (round-13
     # optimization pass; the dominant cost of this composite).
     tnb = train.filter(F.col("doc_id") % DECON_BENCH_MOD != 0)
-    arr = F.split("text", " ")
-    gexpr = F.explode(_word_ngrams(arr, DECON_N)).alias("shingle")
+    gexpr = F.explode(_decon_grams()).alias("shingle")
     # Round-14: the old shared `grams` frame (corpus-wide
     # dropDuplicates([doc_id, shingle])) was evaluated ONCE PER
     # CONSUMER and paid a full corpus-shingle shuffle each time —
@@ -1335,14 +1327,10 @@ def _dsir_doc_logw(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrounded sums keep a float-noise-proof distance from the
     round-6 flip boundary so the rounding convention stays
     deterministic on the actual corpus."""
+    from .textops import tokens
+
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id",
-        "source",
-        "lang",
-        F.explode(F.split(F.lower("text"), " ")).alias("term"),
-    ).filter(F.col("term") != "")
-    tok = tok.select(
+    tok = tokens(docs, ["doc_id", "source", "lang"], lower=True).select(
         "doc_id",
         "source",
         "lang",

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import ordered_pairs
+from ..util import ngram_windows, ordered_pairs
 
 
 @register(
@@ -156,6 +156,19 @@ def basket_pairs_core(li: DataFrame, cap_r: int | None = None) -> DataFrame:
     )
 
 
+def _bigram_counts(docs: DataFrame) -> DataFrame:
+    """(a, b, cnt): every adjacent single-space token pair of `text`
+    with its corpus count — the one bigram aggregate of q_text_pmi and
+    q_text_llr. Windows come from util.ngram_windows, map-side; a
+    1-token doc has none, so no guard row is needed."""
+    pairs = ngram_windows(F.split("text", " "), 2)
+    return (
+        docs.select(F.explode(pairs).alias("pr"))
+        .groupBy(F.col("pr.0").alias("a"), F.col("pr.1").alias("b"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
 @register(
     "q_text_pmi",
     oracle="""
@@ -203,24 +216,9 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak.
     """
     docs = load_table(spark, sf_dir, "documents")
-    arr = F.split("text", " ")
-    # arrays_zip over two shifted slices, NOT transform(sequence(...)):
-    # higher-order functions are interpreted per element while
-    # arrays_zip/slice stay in codegen — measured 5-7x faster on the
-    # sf 0.1 corpus (0.5 s vs 3.2 s for the bigram aggregate; the
-    # same HOF rule as similarity.dot_expr). A 1-token doc yields
-    # slice length 0 -> empty zip -> explode drops it, so no guard
-    # row is needed.
-    pair_arr = F.arrays_zip(
-        F.slice(arr, 1, F.size(arr) - 1), F.slice(arr, 2, F.size(arr) - 1)
-    )
-    big = (
-        docs.select(F.explode(pair_arr).alias("pr"))
-        .groupBy(F.col("pr.0").alias("a"), F.col("pr.1").alias("b"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    big = _bigram_counts(docs)
     uni = (
-        docs.select(F.explode(arr).alias("term"))
+        docs.select(F.explode(F.split("text", " ")).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -1734,22 +1732,13 @@ def q_text_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the whole statistic derives from ONE vocab-sized table.
 
     Scale: same shape as PMI — one corpus tokenization into the
-    bigram aggregate (arrays_zip over shifted slices, codegen'd),
+    bigram aggregate (_bigram_counts, shared with q_text_pmi),
     then left/right marginals and the total are broadcast-sized
     re-aggregations of it; the LLR arithmetic is row-local. Ranking
     uses the ROUNDED llr with the bigram tiebreak (round-before-rank
     rule).
     """
-    docs = load_table(spark, sf_dir, "documents")
-    arr = F.split("text", " ")
-    pair_arr = F.arrays_zip(
-        F.slice(arr, 1, F.size(arr) - 1), F.slice(arr, 2, F.size(arr) - 1)
-    )
-    big = (
-        docs.select(F.explode(pair_arr).alias("pr"))
-        .groupBy(F.col("pr.0").alias("a"), F.col("pr.1").alias("b"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    big = _bigram_counts(load_table(spark, sf_dir, "documents"))
     la = big.groupBy("a").agg(F.sum("cnt").alias("ra"))
     rb = big.groupBy("b").agg(F.sum("cnt").alias("cb"))
     nb = big.agg(F.sum("cnt").alias("n"))

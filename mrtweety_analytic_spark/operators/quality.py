@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
+from .textops import _STOP_SQL, STOPWORDS, tokens
 
 PROFILE_COLS = ("o_orderstatus", "o_custkey", "o_totalprice", "o_orderpriority")
 
@@ -1237,10 +1238,19 @@ def q_dq_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   R2 short-words:      sum_len / n_tokens < 4.2   <=> 10*sum_len < 42*n_tokens
 #   R3 no-function-words: n_stop / n_tokens < 0.02  <=> 50*n_stop  < n_tokens
 #   R4 repetitive:       max_cnt / n_tokens > 0.2   <=> 5*max_cnt  > n_tokens
-_GOPHER_STOP_SQL = ", ".join(
-    f"'{w}'"
-    for w in ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
-)
+
+
+def _gopher_flags() -> tuple[F.Column, F.Column, F.Column, F.Column]:
+    """(f_len, f_wordlen, f_stop, f_rep): the four Gopher rule flags,
+    1 when a document fails the rule, over its per-document integers
+    n_tokens, sum_len, n_stop and max_cnt — the one rule set of
+    q_dq_gopher_rules and s_quality_gate."""
+    n = F.col("n_tokens")
+    f_len = F.when(n < 20, 1).otherwise(0)
+    f_wordlen = F.when(10 * F.col("sum_len") < 42 * n, 1).otherwise(0)
+    f_stop = F.when(50 * F.col("n_stop") < n, 1).otherwise(0)
+    f_rep = F.when(5 * F.col("max_cnt") > n, 1).otherwise(0)
+    return f_len, f_wordlen, f_stop, f_rep
 
 
 @register(
@@ -1258,7 +1268,7 @@ _GOPHER_STOP_SQL = ", ".join(
         SELECT doc_id, source,
                sum(cnt) AS n_tokens,
                sum(cnt * length(term)) AS sum_len,
-               sum(CASE WHEN term IN ({_GOPHER_STOP_SQL})
+               sum(CASE WHEN term IN ({_STOP_SQL})
                         THEN cnt ELSE 0 END) AS n_stop,
                max(cnt) AS max_cnt
         FROM tf GROUP BY 1, 2
@@ -1311,36 +1321,20 @@ def q_dq_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        docs.select(
-            "doc_id",
-            "source",
-            F.explode(F.split("text", " ")).alias("term"),
-        )
-        .filter(F.col("term") != "")
+        tokens(docs, ["doc_id", "source"])
         .groupBy("doc_id", "source", "term")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    stop = F.col("term").isin(
-        "the", "a", "an", "and", "or", "of", "to", "in", "is", "it"
-    )
+    stop = F.col("term").isin(*STOPWORDS)
     per = tf.groupBy("doc_id", "source").agg(
         F.sum("cnt").alias("n_tokens"),
         F.sum(F.col("cnt") * F.length("term")).alias("sum_len"),
         F.sum(F.when(stop, F.col("cnt")).otherwise(0)).alias("n_stop"),
         F.max("cnt").alias("max_cnt"),
     )
-    f_len = F.when(F.col("n_tokens") < 20, 1).otherwise(0)
-    f_wordlen = F.when(
-        10 * F.col("sum_len") < 42 * F.col("n_tokens"), 1
-    ).otherwise(0)
-    f_stop = F.when(50 * F.col("n_stop") < F.col("n_tokens"), 1).otherwise(0)
-    f_rep = F.when(5 * F.col("max_cnt") > F.col("n_tokens"), 1).otherwise(0)
+    names = ("f_len", "f_wordlen", "f_stop", "f_rep")
     flags = per.select(
-        "source",
-        f_len.alias("f_len"),
-        f_wordlen.alias("f_wordlen"),
-        f_stop.alias("f_stop"),
-        f_rep.alias("f_rep"),
+        "source", *[f.alias(n) for f, n in zip(_gopher_flags(), names)]
     )
     all_pass = (
         F.col("f_len") + F.col("f_wordlen") + F.col("f_stop") + F.col("f_rep")

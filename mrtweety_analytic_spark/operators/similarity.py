@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import LastHandle
+from ..util import LastHandle, ngram_windows
 
 # Cache handle for the last q_sim_knn_batch result — unpersisted on
 # the next call so repeated bench runs don't accumulate entries.
@@ -2138,18 +2138,14 @@ def q_sim_sparse_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot/sqrt(ss_a)/sqrt(ss_b) scoring, computed with the identical
     operation order in both engines and rounded to 6.
 
-    Scale: bigrams built with arrays_zip over two shifted slices
-    (codegen, not HOF); postings hash-partition on term so each
-    term's pair fan-out is generated inside one partition; the
-    stop-term table is tiny and broadcast; the top-20 cut is
-    TakeOrderedAndProject. Cosine over the PRUNED vocabulary is the
+    Scale: bigrams built with util.ngram_windows (codegen, not HOF);
+    postings hash-partition on term so each term's pair fan-out is
+    generated inside one partition; the stop-term table is tiny and
+    broadcast; the top-20 cut is TakeOrderedAndProject. Cosine over the PRUNED vocabulary is the
     documented semantic (stop terms carry no discriminative mass).
     """
     docs = load_table(spark, sf_dir, "documents")
-    arr = F.split("text", " ")
-    pairs = F.arrays_zip(
-        F.slice(arr, 1, F.size(arr) - 1), F.slice(arr, 2, F.size(arr) - 1)
-    )
+    pairs = ngram_windows(F.split("text", " "), 2)
     post = (
         docs.select("doc_id", F.explode(pairs).alias("pr"))
         .select(

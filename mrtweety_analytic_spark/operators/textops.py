@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import LastHandle
+from ..util import LastHandle, ngram_windows
 
 # Supersession holder for q_text_tfidf's persisted tf aggregate.
 _LAST_TFIDF = LastHandle()
@@ -32,19 +32,24 @@ STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
 
-def tokens(documents: DataFrame) -> DataFrame:
-    """documents -> one row per (doc_id, term); empty terms dropped.
+def tokens(
+    documents: DataFrame, keys=("doc_id",), lower: bool = False
+) -> DataFrame:
+    """documents -> one row per (*keys, term): the whitespace tokenizer,
+    `text` split on single spaces (case-folded first when `lower`),
+    empty terms dropped.
 
     ≙ reference flatMap over entities.hashtags[].text
     (SparkApplication.scala:66-85): explode drops null/empty arrays,
     matching the "tweet without entities contributes nothing" rule.
+    Operators whose oracle counts the empty terms that runs of spaces
+    leave (q_text_langid, q_text_code_detect, the heavy hitters) split
+    without this filter.
     """
-    return (
-        documents.select(
-            "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
-        )
-        .filter(F.col("term") != "")
-    )
+    text = F.lower(F.col("text")) if lower else F.col("text")
+    return documents.select(
+        *keys, F.explode(F.split(text, " ")).alias("term")
+    ).filter(F.col("term") != "")
 
 
 def trending_terms(documents: DataFrame, k: int = 5) -> DataFrame:
@@ -124,12 +129,10 @@ def q_text_trending_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's global top-5 (R8/R9). Catalyst 3.5+ rewrites the
     rn<=k filter into WindowGroupLimit (partial top-k before shuffle).
     """
-    from pyspark.sql import Window as W
-
     docs = load_table(spark, sf_dir, "documents")
     counts = (
-        docs.select("source", F.explode(F.split("text", " ")).alias("term"))
-        .filter((F.col("term") != "") & ~F.col("term").isin(*STOPWORDS))
+        tokens(docs, ["source"])
+        .filter(~F.col("term").isin(*STOPWORDS))
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -300,10 +303,7 @@ def q_text_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation, no joins (the lexicons fold into the expression).
     """
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(
-        "source", F.explode(F.split("text", " ")).alias("term")
-    ).filter(F.col("term") != "")
-    agg = t.groupBy("source").agg(
+    agg = tokens(docs, ["source"]).groupBy("source").agg(
         F.sum(F.when(F.col("term").isin(*POS_WORDS), 1).otherwise(0)).alias(
             "n_pos"
         ),
@@ -368,19 +368,14 @@ def q_text_tokencount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 word bigrams: shingling via arrays_zip over two shifted
-    slices (codegen'd JVM array ops — measured 5-7x faster than the
-    interpreted transform(sequence(...)) HOF form on the sf 0.1
-    corpus, same rule as similarity.dot_expr), count, deterministic
-    top-k. A 1-token doc yields slice length 0 -> empty zip, so no
-    guard row is needed."""
+    """Top-20 word bigrams: shingling via util.ngram_windows, count,
+    deterministic top-k. A 1-token doc has no window, so no guard row
+    is needed."""
     docs = load_table(spark, sf_dir, "documents")
-    arr = F.split("text", " ")
-    pairs = F.arrays_zip(
-        F.slice(arr, 1, F.size(arr) - 1), F.slice(arr, 2, F.size(arr) - 1)
-    )
     return (
-        docs.select(F.explode(pairs).alias("pr"))
+        docs.select(
+            F.explode(ngram_windows(F.split("text", " "), 2)).alias("pr")
+        )
         .select(F.concat_ws(" ", "pr.0", "pr.1").alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -468,9 +463,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln() between engines cannot flip the order; term is the tiebreak.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    ).filter((F.col("term") != "") & ~F.col("term").isin(*STOPWORDS))
+    toks = tokens(docs).filter(~F.col("term").isin(*STOPWORDS))
     # tf feeds four consumers with DIFFERENT column pruning, so
     # ReusedExchange can't canonicalize them together (verified on
     # the physical plan: 4 scans without this). Persisting the small
@@ -531,11 +524,7 @@ def q_text_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairing (as in q_dedup_ngram_jaccard's stop-shingle cap).
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-        .filter((F.col("term") != "") & ~F.col("term").isin(*STOPWORDS))
-        .distinct()
-    )
+    toks = tokens(docs).filter(~F.col("term").isin(*STOPWORDS)).distinct()
     a = toks.alias("a")
     b = toks.alias("b")
     pairs = (
@@ -607,10 +596,7 @@ def q_text_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     two shuffles at any corpus size.
     """
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    ).filter(F.col("term") != "")
-    metrics = t.groupBy("doc_id").agg(
+    metrics = tokens(docs).groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         (
             F.sum(F.when(F.col("term").isin(*STOPWORDS), 1).otherwise(0))
@@ -819,16 +805,12 @@ def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _word_ngrams(arr: F.Column, n: int) -> F.Column:
-    """Word n-gram array (as joined strings) via arrays_zip over n
-    shifted slices — codegen'd array ops, measured 3-7x faster than
-    the interpreted transform(sequence(...)) HOF form (same rule as
-    similarity.dot_expr). The transform here only concatenates the
-    already-zipped window struct; the per-element slice copies are
-    gone. Documents shorter than n zip to an empty array."""
-    win_len = F.greatest(F.lit(0), F.size(arr) - (n - 1))
-    zipped = F.arrays_zip(*[F.slice(arr, i + 1, win_len) for i in range(n)])
+    """Word n-gram array (as space-joined strings) of the array column
+    `arr`: util.ngram_windows, each window concatenated. Documents
+    shorter than n give an empty array."""
     return F.transform(
-        zipped, lambda g: F.concat_ws(" ", *[g[str(i)] for i in range(n)])
+        ngram_windows(arr, n),
+        lambda g: F.concat_ws(" ", *[g[str(i)] for i in range(n)]),
     )
 
 
@@ -913,6 +895,13 @@ DECON_N = 4          # shingle width: wide enough to mean real overlap,
 DECON_BENCH_MOD = 100  # doc_id % MOD == 0 plays the held-out benchmark
 
 
+def _decon_grams() -> F.Column:
+    """The word-DECON_N-gram array of `text`: the one shingle
+    expression of q_text_decontaminate, q_training_export_full's
+    contamination gate and s_decontaminate."""
+    return _word_ngrams(F.split("text", " "), DECON_N)
+
+
 @register(
     "q_text_decontaminate",
     oracle=f"""
@@ -953,8 +942,7 @@ def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact; a trainer would anti-join against these doc_ids).
     """
     docs = load_table(spark, sf_dir, "documents")
-    arr = F.split("text", " ")
-    gexpr = F.explode(_word_ngrams(arr, DECON_N)).alias("shingle")
+    gexpr = F.explode(_decon_grams()).alias("shingle")
     # Round-14: filter each side's DOCS before the explode instead of
     # sharing one corpus-wide dropDuplicates([doc_id, shingle]) frame
     # (which was re-evaluated per consumer — a full corpus-shingle
@@ -1120,6 +1108,54 @@ def q_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 HH_M = 2000  # Misra-Gries counters per partition == 1/phi
 
 
+def _hh_tokens(documents: DataFrame) -> DataFrame:
+    """(term) per case-folded single-space token, empty terms KEPT —
+    the token stream of both heavy-hitter tiers, whose oracle counts
+    the empty terms that runs of spaces leave."""
+    return documents.select(
+        F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
+    )
+
+
+def _mg_merge(counters: dict, frames, m: int) -> dict:
+    """Fold pandas frames with a `term` column into a Misra-Gries
+    summary of at most `m` counters (mergeable-summaries MG, Agarwal
+    et al., PODS'12) — the one merge rule of q_text_heavy_hitters'
+    per-partition pass and s_heavy_hitters' per-group state.
+
+    Each frame is reduced with a vectorized value_counts (its exact
+    counts ARE a zero-error MG summary), then merged into the running
+    summary: combine counts, and when over capacity subtract the
+    (m+1)-th largest from everything and drop the non-positive. The
+    undercount stays <= n/(m+1) under any frame split and order, so
+    every term with count > n/m survives, and the per-TOKEN Python
+    loop becomes a per-UNIQUE-TERM merge."""
+    for pdf in frames:
+        for t, c in pdf["term"].value_counts().items():
+            counters[t] = counters.get(t, 0) + int(c)
+        if len(counters) > m:
+            vals = sorted(counters.values(), reverse=True)
+            v = vals[m]
+            counters = {k: c - v for k, c in counters.items() if c > v}
+    return counters
+
+
+def _hh_verify(toks: DataFrame, cand: DataFrame, phi: int) -> DataFrame:
+    """(term, n_occ) for the candidates whose EXACT count in `toks`
+    exceeds n/phi: a broadcast semi-join onto the token stream, one
+    partial-aggregable groupBy over the candidate-bounded key space
+    and a 1-row total — the verify pass of both heavy-hitter tiers."""
+    total = toks.agg(F.count(F.lit(1)).alias("n"))
+    return (
+        toks.join(F.broadcast(cand), "term", "left_semi")
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("n_occ"))
+        .crossJoin(F.broadcast(total))
+        .filter(F.col("n_occ") > F.col("n") / F.lit(float(phi)))
+        .select("term", "n_occ")
+    )
+
+
 @register(
     "q_text_heavy_hitters",
     oracle=f"""
@@ -1162,48 +1198,18 @@ def q_text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     naive groupBy never happens: shuffled keys <= candidates <=
     HH_M x partitions.
     """
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
-    )
+    toks = _hh_tokens(load_table(spark, sf_dir, "documents"))
 
     def mg_candidates(batches):
-        # Mergeable-summaries MG (Agarwal et al., PODS'12): each
-        # Arrow batch is reduced with a vectorized value_counts (its
-        # exact counts ARE a zero-error MG summary), then merged into
-        # the running summary — combine counts, and when over
-        # capacity subtract the (HH_M+1)-th largest from everything
-        # and drop the non-positive. Total undercount stays
-        # <= n_p/(HH_M+1), so the superset guarantee is intact, and
-        # the per-TOKEN Python loop (the one piece that would not
-        # survive a 100x token count) becomes a per-UNIQUE-TERM merge.
-        counters: dict[str, int] = {}
-        for pdf in batches:
-            for t, c in pdf["term"].value_counts().items():
-                counters[t] = counters.get(t, 0) + int(c)
-            if len(counters) > HH_M:
-                vals = sorted(counters.values(), reverse=True)
-                v = vals[HH_M]
-                counters = {
-                    k: c - v for k, c in counters.items() if c > v
-                }
+        # one summary per partition over its Arrow batches
+        counters = _mg_merge({}, batches, HH_M)
         yield pd.DataFrame({"term": list(counters.keys())})
 
     cand = (
         toks.mapInPandas(mg_candidates, schema="term string")
         .distinct()
     )
-    total = toks.agg(F.count(F.lit(1)).alias("n"))
-    return (
-        toks.join(F.broadcast(cand), "term", "left_semi")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-        .crossJoin(F.broadcast(total))
-        .filter(F.col("n_occ") > F.col("n") / F.lit(float(HH_M)))
-        .select("term", "n_occ")
-    )
+    return _hh_verify(toks, cand, HH_M)
 
 
 @register(
@@ -1279,10 +1285,7 @@ def q_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        docs.select(
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
-        )
-        .filter(F.col("term") != "")
+        tokens(docs, [], lower=True)
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -1335,29 +1338,21 @@ def q_text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer trainer does), so the position fan-out (len(word)−1
     pairs per word) runs over vocabulary-sized data, not corpus-sized
     — the fan-out is off the tiny side, which is why sequence() is
-    acceptable here where corpus-side shingling uses arrays_zip. The
+    acceptable here where corpus-side shingling uses ngram_windows. The
     pair aggregate is again partial-aggregable; top-20 is a
     TakeOrdered, no global sort materialization.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    words = (
-        docs.select(
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("word")
-        )
-        .where(F.col("word").rlike("^[a-z]{2,}$"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("wn"))
-    )
     pairs = (
-        words.select(
-            "word",
+        _bpe_vocab(load_table(spark, sf_dir, "documents"))
+        .select(
+            "w",
             "wn",
             F.explode(
-                F.sequence(F.lit(1), F.length("word") - 1)
+                F.sequence(F.lit(1), F.length("w") - 1)
             ).alias("i"),
         )
         .select(
-            F.expr("substring(word, i, 2)").alias("pair"),
+            F.expr("substring(w, i, 2)").alias("pair"),
             "wn",
         )
         .groupBy("pair")
@@ -1367,6 +1362,36 @@ def q_text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return pairs.orderBy(F.desc("wsum"), "pair").limit(20)
+
+
+def _bpe_words(docs: DataFrame) -> DataFrame:
+    """(doc_id, w): the BPE word stream — lower-cased whitespace-run
+    tokens of two or more letters, shared by q_text_bpe_pairs,
+    q_text_bpe_train and q_text_bpe_apply."""
+    return docs.select(
+        "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
+    ).filter(F.col("w").rlike("^[a-z]{2,}$"))
+
+
+def _bpe_vocab(docs: DataFrame) -> DataFrame:
+    """(w, wn): the BPE word vocabulary with its counts — one
+    partial-aggregable groupBy that collapses the corpus to its word
+    vocabulary, the reduction every tokenizer trainer starts with."""
+    return _bpe_words(docs).groupBy("w").agg(F.count(F.lit(1)).alias("wn"))
+
+
+def _bpe_merges(docs: DataFrame) -> list:
+    """The k = 10 BPE merge table of `docs`: the top 65536 vocabulary
+    words by (count desc, word asc), collected as (word, count) pairs
+    only, through _bpe_merge_loop — the trained table that
+    q_text_bpe_train returns and q_text_bpe_apply encodes with."""
+    vocab = (
+        _bpe_vocab(docs)
+        .orderBy(F.col("wn").desc(), "w")
+        .limit(65536)
+        .collect()
+    )
+    return _bpe_merge_loop({r["w"]: r["wn"] for r in vocab}, 10)
 
 
 def _bpe_merge_loop(word_counts, k: int):
@@ -1420,21 +1445,8 @@ def q_text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-expressible; pinned by pytest against the classic
     low/lower/newest/widest worked example and a pure-Python
     reference on the real corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = (
-        docs.select(
-            F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
-        )
-        .filter(F.col("w").rlike("^[a-z]{2,}$"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wn"))
-        .orderBy(F.col("wn").desc(), "w")
-        .limit(65536)
-        .collect()
-    )
-    merges = _bpe_merge_loop({r["w"]: r["wn"] for r in words}, 10)
     return spark.createDataFrame(
-        merges,
+        _bpe_merges(load_table(spark, sf_dir, "documents")),
         "step int, left string, right string, merged string, wsum long",
     )
 
@@ -1473,18 +1485,14 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate-free but incoherent token soup that unigram
     frequency alone cannot see.
 
-    Scale: bigrams via arrays_zip over two shifted slices (the
-    engine's codegen shingling rule, map-side); the bigram LM table
+    Scale: bigrams via util.ngram_windows (map-side); the bigram LM table
     is O(distinct bigrams) and the conditional-count table O(vocab)
     — both broadcast back onto the bigram stream, so scoring is a
     map-side join and only (doc_id, partial sums) shuffle. Rounded
     at 4 (mean of libm ln values, same policy as the unigram op).
     """
     docs = load_table(spark, sf_dir, "documents")
-    arr = F.split("text", " ")
-    zipped = F.arrays_zip(
-        F.slice(arr, 1, F.size(arr) - 1), F.slice(arr, 2, F.size(arr) - 1)
-    )
+    zipped = ngram_windows(F.split("text", " "), 2)
     bg = (
         docs.select("doc_id", F.explode(zipped).alias("pr"))
         .select(
@@ -1608,10 +1616,11 @@ def q_text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream itself is never shuffled twice.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "source", F.explode(F.split("text", " ")).alias("term")
-    ).filter(F.col("term") != "")
-    sc = toks.groupBy("source", "term").agg(F.count(F.lit(1)).alias("c"))
+    sc = (
+        tokens(docs, ["source"])
+        .groupBy("source", "term")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
     stot = sc.groupBy("source").agg(F.sum("c").alias("st"))
     ct = sc.groupBy("term").agg(F.sum("c").alias("cc"))
     ctot = sc.agg(F.sum("c").alias("tt"))
@@ -2083,22 +2092,12 @@ def q_text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     density ≈ 2/(w+1)); the pair-join consumer is the same inverted-
     index equi-join as q_sim_sparse_cosine.
 
-    Scale: k-grams via arrays_zip slices (codegen); the min-window
+    Scale: k-grams via _word_ngrams (codegen); the min-window
     is a per-document O(w)-state frame; DISTINCT collapses runs of
     the same winner before the count. All integer arithmetic.
     """
     docs = load_table(spark, sf_dir, "documents")
-    arr = F.split("text", " ")
-    win_len = F.greatest(F.lit(0), F.size(arr) - (_WINNOW_K - 1))
-    zipped = F.arrays_zip(
-        *[F.slice(arr, i + 1, win_len) for i in range(_WINNOW_K)]
-    )
-    grams = F.transform(
-        zipped,
-        lambda g: F.concat_ws(
-            " ", *[g[str(i)] for i in range(_WINNOW_K)]
-        ),
-    )
+    grams = _word_ngrams(F.split("text", " "), _WINNOW_K)
     kg = (
         docs.select("doc_id", F.posexplode(grams).alias("p0", "gram"))
         .select(
@@ -2473,20 +2472,9 @@ def q_text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import pandas_udf
 
     docs = load_table(spark, sf_dir, "documents")
-    vocab_rows = (
-        docs.select(
-            F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
-        )
-        .filter(F.col("w").rlike("^[a-z]{2,}$"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wn"))
-        .orderBy(F.col("wn").desc(), "w")
-        .limit(65536)
-        .collect()
-    )
-    merges = _bpe_merge_loop({r["w"]: r["wn"] for r in vocab_rows}, 10)
     ranks = {
-        (left, right): step for step, left, right, _, _ in merges
+        (left, right): step
+        for step, left, right, _, _ in _bpe_merges(docs)
     }
 
     def _count(words: pd.Series) -> pd.Series:
@@ -2494,10 +2482,7 @@ def q_text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     count_udf = pandas_udf(_count, "long")
 
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower("text"), r"\s+")).alias("w"),
-    ).filter(F.col("w").rlike("^[a-z]{2,}$"))
+    toks = _bpe_words(docs)
     # Encode each DISTINCT word once, then broadcast the tiny
     # (word -> token count) table back onto the corpus stream.
     word_tokens = (
@@ -2626,9 +2611,6 @@ def bm25_scored(docs: DataFrame) -> DataFrame:
     plan). The aggregate is not persisted: in an interleaved A/B at
     sf 0.1, caching it made q_text_bm25 and q_sim_hybrid_rrf slower.
     """
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    ).filter(F.col("term") != "")
     aggs = [F.count(F.lit(1)).cast("double").alias("len")]
     for i, t in enumerate(BM25_QUERY):
         aggs.append(
@@ -2636,7 +2618,7 @@ def bm25_scored(docs: DataFrame) -> DataFrame:
             .cast("double")
             .alias(f"tf_{i}")
         )
-    per_doc = toks.groupBy("doc_id").agg(*aggs)
+    per_doc = tokens(docs).groupBy("doc_id").agg(*aggs)
     stats = per_doc.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg("len").alias("avgdl"),

@@ -20,6 +20,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..operators.textops import _STOP_SQL
 from ..registry import register
 from ..sources import load_events_stream
 from ..util import LastHandle
@@ -1013,36 +1014,18 @@ def s_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from ..operators.textops import _hh_tokens, _hh_verify, _mg_merge
     from ..sources import load_documents_stream, load_table
 
-    docs_batch = load_table(spark, sf_dir, "documents")
-    stream = load_documents_stream(spark, sf_dir)
-    toks = stream.select(
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
-    ).select(
+    toks = _hh_tokens(load_documents_stream(spark, sf_dir)).select(
         "term",
         F.pmod(F.xxhash64("term"), F.lit(SHH_GROUPS)).alias("g"),
     )
 
     def mg_update(key, pdf_iter, state):
-        if state.exists:
-            terms, counts = state.get
-            counters = dict(zip(terms, counts))
-        else:
-            counters = {}
-        # Mergeable-summaries MG (see q_text_heavy_hitters): exact
-        # per-batch value_counts merged into the summary; over
-        # capacity, subtract the (SHH_M+1)-th largest and drop
-        # non-positive. Order-independent bound, per-unique-term cost.
-        for pdf in pdf_iter:
-            for t, c in pdf["term"].value_counts().items():
-                counters[t] = counters.get(t, 0) + int(c)
-            if len(counters) > SHH_M:
-                vals = sorted(counters.values(), reverse=True)
-                v = vals[SHH_M]
-                counters = {
-                    k: c - v for k, c in counters.items() if c > v
-                }
+        # the group's summary carried across micro-batches
+        counters = dict(zip(*state.get)) if state.exists else {}
+        counters = _mg_merge(counters, pdf_iter, SHH_M)
         state.update(
             (list(counters.keys()), [int(v) for v in counters.values()])
         )
@@ -1056,19 +1039,8 @@ def s_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     cand = _run_to_memory(spark, cand_stream, "update").select("term").distinct()
-
-    btoks = docs_batch.select(
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
-    )
-    total = btoks.agg(F.count(F.lit(1)).alias("n"))
-    return (
-        btoks.join(F.broadcast(cand), "term", "left_semi")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-        .crossJoin(F.broadcast(total))
-        .filter(F.col("n_occ") > F.col("n") / F.lit(float(SHH_PHI)))
-        .select("term", "n_occ")
-    )
+    btoks = _hh_tokens(load_table(spark, sf_dir, "documents"))
+    return _hh_verify(btoks, cand, SHH_PHI)
 
 
 class UpsertKeyedSink:
@@ -2484,26 +2456,21 @@ def _mdr_shingled(docs: DataFrame) -> DataFrame:
     """(doc_id, source, sh) with sh the row's 3-shingle array,
     materialized ONCE as a named column so the 16 downstream minhash
     expressions reference the attribute instead of re-deriving the
-    array (codegen arrays_zip idiom over 3 shifted slices; docs with
-    <3 words carry no shingles and are dropped here, identically in
-    both hash tiers and the DuckDB oracle)."""
+    array (textops._word_ngrams over the non-empty lower-cased words;
+    docs with <3 words carry no shingles and are dropped here,
+    identically in both hash tiers and the DuckDB oracle)."""
+    from ..operators.textops import _word_ngrams
+
     ws = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
-    n3 = F.greatest(F.lit(0), F.size(ws) - 2)
-    zipped = F.arrays_zip(
-        F.slice(ws, 1, n3), F.slice(ws, 2, n3), F.slice(ws, 3, n3)
-    )
-    sh = F.transform(
-        zipped, lambda g: F.concat_ws(" ", g["0"], g["1"], g["2"])
-    )
     return docs.filter(F.size(ws) >= 3).select(
-        "doc_id", "source", sh.alias("sh")
+        "doc_id", "source", _word_ngrams(ws, 3).alias("sh")
     )
 
 
 def _mdr_band_buckets(docs: DataFrame) -> DataFrame:
     """(doc_id, source, bucket) — one row per (doc, band), computed
-    entirely PER ROW (no shuffle): 3-shingles via the codegen
-    arrays_zip idiom, each minhash an array_min over md5(i ':' s)
+    entirely PER ROW (no shuffle): 3-shingles via _mdr_shingled,
+    each minhash an array_min over md5(i ':' s)
     (min over a multiset equals min over the set, so no DISTINCT is
     needed), band signature = the band's 4 minhashes concatenated in
     i order, bucket = md5 hex-prefix of (band ':' sig) mod 2^16.
@@ -2772,18 +2739,15 @@ def s_minhash_dup_rate_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _mdr_monitor(spark, sf_dir, _mdr_band_buckets_fast)
 
 
-_QG_STOP_SQL = ", ".join(
-    f"'{w}'"
-    for w in ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
-)
-
-
 def _qg_counters(docs: DataFrame) -> DataFrame:
     """The streaming state kernel of s_quality_gate: per-row Gopher
     rule flags (codegen array algebra, no shuffle), then per-source
     additive counters — O(sources) update-mode state. Factored out so
     the checkpoint-restart pytest drives the exact shipped expression
     across a kill-and-resume."""
+    from ..operators.quality import _gopher_flags
+    from ..operators.textops import STOPWORDS
+
     ws = F.filter(F.split("text", " "), lambda x: x != "")
     max_cnt = F.expr(
         "aggregate(array_sort(filter(split(text, ' '), x -> x != '')),"
@@ -2796,9 +2760,6 @@ def _qg_counters(docs: DataFrame) -> DataFrame:
         "     IF(x = acc.prev, acc.run + 1, CAST(1 AS BIGINT))) AS best),"
         " acc -> acc.best)"
     )
-    stops = [
-        "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
-    ]
     per = docs.select(
         "source",
         F.size(ws).cast("long").alias("n_tokens"),
@@ -2806,18 +2767,11 @@ def _qg_counters(docs: DataFrame) -> DataFrame:
             "sum_len"
         ),
         F.size(
-            F.filter(ws, lambda x: x.isin(*stops))
+            F.filter(ws, lambda x: x.isin(*STOPWORDS))
         ).cast("long").alias("n_stop"),
         max_cnt.alias("max_cnt"),
     ).filter(F.col("n_tokens") > 0)
-    f_len = F.when(F.col("n_tokens") < 20, 1).otherwise(0)
-    f_wordlen = F.when(
-        10 * F.col("sum_len") < 42 * F.col("n_tokens"), 1
-    ).otherwise(0)
-    f_stop = F.when(
-        50 * F.col("n_stop") < F.col("n_tokens"), 1
-    ).otherwise(0)
-    f_rep = F.when(5 * F.col("max_cnt") > F.col("n_tokens"), 1).otherwise(0)
+    f_len, f_wordlen, f_stop, f_rep = _gopher_flags()
     all_pass = (f_len + f_wordlen + f_stop + f_rep) == 0
     return per.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2841,7 +2795,7 @@ def _qg_counters(docs: DataFrame) -> DataFrame:
         SELECT doc_id, source,
                sum(cnt) AS n_tokens,
                sum(cnt * length(term)) AS sum_len,
-               sum(CASE WHEN term IN ({_QG_STOP_SQL})
+               sum(CASE WHEN term IN ({_STOP_SQL})
                         THEN cnt ELSE 0 END) AS n_stop,
                max(cnt) AS max_cnt
         FROM tf GROUP BY 1, 2
@@ -3330,16 +3284,15 @@ def _decon_flagged(docs: DataFrame, bench_row: DataFrame) -> DataFrame:
     set — the stateless core of s_decontaminate, shared with its
     checkpoint-recovery test. bench_row is one row with a `bench`
     array column (stream-static cross join is stateless)."""
-    from ..operators.textops import DECON_BENCH_MOD, DECON_N, _word_ngrams
+    from ..operators.textops import DECON_BENCH_MOD, _decon_grams
 
-    grams = _word_ngrams(F.split("text", " "), DECON_N)
     return (
         docs.filter(F.col("doc_id") % DECON_BENCH_MOD != 0)
         .crossJoin(F.broadcast(bench_row))
         .select(
             "source",
             F.when(
-                F.arrays_overlap(grams, F.col("bench")), 1
+                F.arrays_overlap(_decon_grams(), F.col("bench")), 1
             ).otherwise(0).alias("hit"),
         )
     )
@@ -3362,8 +3315,8 @@ def s_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream) collapses to ONE row holding a distinct-shingle array;
     the stream cross-joins that broadcast row (stream-static joins
     are STATELESS — nothing enters the state store) and each arriving
-    doc computes its own 4-gram array (the shared _word_ngrams
-    codegen kernel, zero explode) and one arrays_overlap membership
+    doc computes its own 4-gram array (the shared textops._decon_grams
+    kernel, zero explode) and one arrays_overlap membership
     test, entirely row-local. State: additive (n_docs, n_hit)
     counters per source — O(sources), the s_quality_gate state class;
     monotone under update mode, so max-finalize is replay-exact and
@@ -3386,17 +3339,13 @@ def s_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics as the batch twin, whose shingle census has no row for
     them.
     """
-    from ..operators.textops import DECON_BENCH_MOD, DECON_N, _word_ngrams
+    from ..operators.textops import DECON_BENCH_MOD, _decon_grams
     from ..sources import load_documents_stream, load_table
 
     bench_row = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % DECON_BENCH_MOD == 0)
-        .select(
-            F.explode(
-                _word_ngrams(F.split("text", " "), DECON_N)
-            ).alias("shingle")
-        )
+        .select(F.explode(_decon_grams()).alias("shingle"))
         .agg(F.collect_set("shingle").alias("bench"))
     )
     flagged = _decon_flagged(

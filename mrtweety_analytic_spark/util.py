@@ -127,3 +127,21 @@ def ordered_pairs(df: DataFrame, arr: str, a: str, b: str) -> DataFrame:
             )
         ).alias(b),
     )
+
+
+def ngram_windows(arr, n: int) -> F.Column:
+    """The word n-gram windows of the array column `arr`: element i is
+    the struct (arr[i], ..., arr[i + n - 1]) with fields "0".."n-1" —
+    the one shingling kernel of the text, dedup and similarity
+    operators.
+
+    It is an arrays_zip of n shifted slices, all codegen'd array ops;
+    the interpreted transform(sequence(...)) HOF form measured 3-7x
+    slower on the sf 0.1 corpus (0.5 s vs 3.2 s for q_text_pmi's
+    bigram aggregate, 0.8 s vs 2-3 s for dedup's 5-gram index). The
+    greatest(0, ...) guard keeps the slice length non-negative, so an
+    array shorter than n zips to an empty array and a null array
+    stays null; explode drops both.
+    """
+    win_len = F.greatest(F.lit(0), F.size(arr) - (n - 1))
+    return F.arrays_zip(*[F.slice(arr, i + 1, win_len) for i in range(n)])

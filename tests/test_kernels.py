@@ -1,7 +1,8 @@
-"""Shared kernels of the near-duplicate and graph-fixpoint family:
-both fixpoint loops fail loudly at their round bound, the peel takes
-one action per round, every query that claims a kernel runs it, and
-the registry keeps its docstrings."""
+"""Shared kernels of the near-duplicate, graph-fixpoint and text
+families: both fixpoint loops fail loudly at their round bound, the
+peel takes one action per round, every query that claims a kernel runs
+it, the n-gram window matches a pure-Python reference, each text kernel
+is written once, and the registry keeps its docstrings."""
 
 from __future__ import annotations
 
@@ -13,9 +14,12 @@ import sys
 import textwrap
 
 import pytest
+from pyspark.sql import functions as F
 
 from mrtweety_analytic_spark.operators import dedup, graph
+from mrtweety_analytic_spark.operators.textops import _word_ngrams
 from mrtweety_analytic_spark.queries import QUERIES
+from mrtweety_analytic_spark.util import ngram_windows
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -74,10 +78,11 @@ def test_peel_takes_one_action_per_round(spark):
         assert sorted(tuple(r) for r in core.collect()) == sorted(
             [(1, 2), (2, 3), (3, 4), (4, 1), (2, 1), (3, 2), (4, 3), (1, 4)]
         )
-    # one more chain node costs one more round: its two survivor-set
-    # broadcasts, the degree shuffle and the survivor count's two
-    # stages. An eager checkpoint would add a sixth job.
-    assert jobs[3] - jobs[2] == 5
+    # one more chain node costs one more round: its survivor-set
+    # broadcast (the second semi-join reuses it), the degree shuffle
+    # and the survivor count's two stages. An eager checkpoint would
+    # add a fifth job.
+    assert jobs[3] - jobs[2] == 4
 
 
 def test_kcore_cert_job_count(spark, sf_dir):
@@ -85,8 +90,8 @@ def test_kcore_cert_job_count(spark, sf_dir):
     before = _next_job(spark)
     QUERIES["q_graph_kcore_cert"](spark, sf_dir)
     # 9 jobs build the trade graph's checkpoint, 3 the first survivor
-    # set and its count; at sf0.001 the peel takes 2 rounds of 5 jobs
-    assert _next_job(spark) - before == 22
+    # set and its count; at sf0.001 the peel takes 2 rounds of 4 jobs
+    assert _next_job(spark) - before == 20
 
 
 @pytest.mark.parametrize(
@@ -117,6 +122,66 @@ def test_queries_run_the_shared_kernel(
         calls.clear()
         QUERIES[name](spark, sf_dir)
         assert len(calls) == 1, name
+
+
+# empty text, one token, fewer tokens than n, runs of spaces, only
+# spaces (filters to an empty array), null text
+_TEXTS = ["", "one", "a b", "a b c d e f", "a  b   c d e", "   ", None]
+
+
+def _py_ngrams(toks, n: int):
+    if toks is None:
+        return None
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+@pytest.mark.parametrize("n", [2, 3, 4, 5])
+def test_ngram_windows_match_a_python_reference(spark, n):
+    df = spark.createDataFrame(list(enumerate(_TEXTS)), "id int, text string")
+    ws = F.split("text", " ")
+    nonempty = F.filter(ws, lambda x: x != "")
+    rows = df.select(
+        "text",
+        ngram_windows(ws, n).alias("win"),
+        _word_ngrams(ws, n).alias("grams"),
+        _word_ngrams(nonempty, n).alias("grams_nonempty"),
+    ).collect()
+    assert len(rows) == len(_TEXTS)
+    for r in rows:
+        toks = None if r.text is None else r.text.split(" ")
+        want = _py_ngrams(toks, n)
+        assert r.grams == want, r.text
+        win = None if r.win is None else [
+            " ".join(w[str(i)] for i in range(n)) for w in r.win
+        ]
+        assert win == want, r.text
+        kept = None if toks is None else [t for t in toks if t]
+        assert r.grams_nonempty == _py_ngrams(kept, n), r.text
+
+
+def _package_count(text: str) -> int:
+    n = 0
+    pkg = os.path.join(REPO, "mrtweety_analytic_spark")
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(root, name)) as f:
+                    n += f.read().count(text)
+    return n
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        "F.arrays_zip(",
+        "vals = sorted(counters.values()",
+        'rlike("^[a-z]{2,}$")',
+        '"the", "a", "an", "and", "or", "of", "to", "in", "is", "it"',
+    ],
+    ids=["ngram_window", "misra_gries_merge", "bpe_word", "stopwords"],
+)
+def test_text_kernel_is_written_once(text):
+    assert _package_count(text) == 1
 
 
 def _string_expression(node: ast.expr) -> bool:

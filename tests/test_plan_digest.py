@@ -3,8 +3,11 @@ query's plan, not the session's history."""
 
 from __future__ import annotations
 
+import json
+
+from mrtweety_analytic_spark import queries
 from mrtweety_analytic_spark.queries import QUERIES
-from tools.audit_plans import normalize_plan
+from tools.audit_plans import digest_main, normalize_plan
 
 
 def test_distinct_aggregate_digest_ignores_earlier_expressions(spark, sf_dir):
@@ -20,3 +23,30 @@ def test_distinct_aggregate_digest_ignores_earlier_expressions(spark, sf_dir):
         # analysing a frame allocates fresh expression ids
         _ = spark.range(1).selectExpr(*[f"id + {i}" for i in range(7)]).schema
     assert len(texts) == 1
+
+
+def test_digest_fails_on_a_query_that_raises(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """A query that raises while planned fails the digest run, and an
+    error recorded on both sides of --against is no match."""
+
+    def q_broken(spark, sf_dir):
+        raise ValueError("no plan")
+
+    monkeypatch.setattr(
+        queries, "QUERIES",
+        {"q_ok": lambda spark, sf_dir: spark.range(3), "q_broken": q_broken},
+    )
+    out = tmp_path / "d.json"
+    assert digest_main("unused", str(out), None) == 1
+    assert "q_broken" in capsys.readouterr().out
+    assert "error" in json.loads(out.read_text())["q_broken"]
+    base = tmp_path / "base.json"
+    base.write_text(out.read_text())
+    assert digest_main("unused", str(tmp_path / "d2.json"), str(base)) == 1
+    lines = capsys.readouterr().out.splitlines()
+    assert any(
+        line.startswith("q_broken") and "differs" in line for line in lines
+    )
+    assert not any(line.startswith("q_ok") for line in lines)

@@ -32,8 +32,10 @@ writes, per batch query, two sha256 digests of its initial physical
 plan: `shape` (operator names and tree structure only) and `full`
 (the plan text with expression ids, plan ids, lambda-variable
 suffixes and temp paths stripped, and the distinct-aggregate rewrite's
-gid numbering masked and its lists sorted). With --against it lists the
-queries whose digests differ from BASE.json and exits 1 if any does.
+gid numbering masked and its lists sorted). It exits 1, naming the
+query, if any batch query raises while it is planned. With --against it
+lists the queries whose digests differ from BASE.json, or that raised on
+either side, and exits 1 if any does.
 """
 
 from __future__ import annotations
@@ -180,6 +182,7 @@ def digest_main(sf_dir: str, out: str, against: str | None) -> int:
     spark = get_spark("plan-digest")
     spark.sparkContext.setLogLevel("ERROR")
     digests = {}
+    n_err = 0
     for name in sorted(QUERIES):
         if name.startswith("s_"):
             continue
@@ -188,6 +191,8 @@ def digest_main(sf_dir: str, out: str, against: str | None) -> int:
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # noqa: BLE001
             digests[name] = {"error": str(e)[:200]}
+            print(f"{name:40s} ERROR building plan: {e}"[:200])
+            n_err += 1
             continue
         digests[name] = {
             "shape": _sha(plan_shape(plan)),
@@ -197,23 +202,27 @@ def digest_main(sf_dir: str, out: str, against: str | None) -> int:
         json.dump(digests, f, indent=1, sort_keys=True)
         f.write("\n")
     print(f"wrote {len(digests)} batch plan digests to {out}")
+    if n_err:
+        print(f"{n_err} batch queries raised while planned")
     if against is None:
-        return 0
+        return 1 if n_err else 0
     with open(against) as f:
         base = json.load(f)
     n_diff = 0
     for name in sorted(set(base) | set(digests)):
         a, b = base.get(name), digests.get(name)
-        if a == b:
+        if a == b and "error" not in a:  # an error is never "the same"
             continue
         n_diff += 1
         if a is None or b is None:
             print(f"{name:40s} {'added' if a is None else 'removed'}")
             continue
-        kinds = [k for k in ("shape", "full", "error") if a.get(k) != b.get(k)]
+        kinds = [
+            k for k in ("shape", "full", "error") if a.get(k) != b.get(k)
+        ] or ["raised on both sides"]
         print(f"{name:40s} differs: {', '.join(kinds)}")
     print(f"{n_diff} of {len(digests)} digests differ from {against}")
-    return 1 if n_diff else 0
+    return 1 if n_diff or n_err else 0
 
 
 def main() -> int:
