@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
+from ..util import cents, cents_sum, md5_int, unit_sum
 
 
 @register(
@@ -95,25 +96,15 @@ def q_agg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-valued so their double sums are already exact.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    cents = F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("bigint")
-    d100 = F.floor(F.col("l_discount") * 100 + 0.5).cast("bigint")
+    price = cents("l_extendedprice")
+    d100 = cents("l_discount")
     n = F.count(F.lit(1))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
-        F.round(F.sum(cents).cast("double") / 100, 4).alias(
-            "sum_base_price"
-        ),
-        # product units reach ~1.1e9/row: 128-bit accumulation (≙
-        # DuckDB's HUGEINT promotion) — int64 would wrap at ~8.4e9
-        # rows/group, breached by Q1-shape groups near 10 TB
-        F.round(
-            F.sum((cents * (100 - d100)).cast("decimal(38,0)"))
-            .cast("double")
-            / 10000,
-            4,
-        ).alias("sum_disc_price"),
+        cents_sum("l_extendedprice").alias("sum_base_price"),
+        unit_sum(price * (100 - d100), 4).alias("sum_disc_price"),
         F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-        F.round(F.sum(cents).cast("double") / 100 / n, 4).alias(
+        F.round(F.sum(price).cast("double") / 100 / n, 4).alias(
             "avg_price"
         ),
         F.round(F.sum(d100).cast("double") / 100 / n, 4).alias(
@@ -224,10 +215,11 @@ def q_agg_gsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation: sum(when(...)) ≙ SQL FILTER clause."""
     li = load_table(spark, sf_dir, "lineitem")
-    cents = F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("bigint")
     return li.groupBy("l_returnflag").agg(
         F.round(
-            F.sum(F.when(F.col("l_discount") > 0.05, cents))
+            F.sum(
+                F.when(F.col("l_discount") > 0.05, cents("l_extendedprice"))
+            )
             .cast("double")
             / 100,
             4,
@@ -537,16 +529,48 @@ def q_agg_salted_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted = events.withColumn(
         "_salt", F.pmod(F.xxhash64("event_id"), F.lit(N_SALTS))
     )
-    cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
     phase1 = salted.groupBy("event_type", "_salt").agg(
         F.count(F.lit(1)).alias("pn"),
-        F.sum(cents).alias("psum"),
+        F.sum(cents("value")).alias("psum"),
         F.max("value").alias("pmax"),
     )
     return phase1.groupBy("event_type").agg(
         F.sum("pn").alias("n"),
         F.round(F.sum("psum").cast("double") / 100, 4).alias("sum_value"),
         F.round(F.max("pmax"), 6).alias("max_value"),
+    )
+
+
+def _cms_probe(
+    toks: DataFrame, probes: DataFrame, cell, depth: int
+) -> DataFrame:
+    """Build the Count-Min sketch (Cormode & Muthukrishnan 2005) of
+    toks' `term` column and probe it with the terms of `probes`: the
+    probes' columns plus cms_est, the MIN over the `depth` rows of the
+    term's cell counts. `cell(term, d)` maps a term and a depth row
+    (Columns) to a cell in [0, width). A cell counts every term that
+    hashes into it, the probed one included, so an estimate never
+    undercounts.
+
+    The depth fan-out is one map-side explode of `depth` constants;
+    the sketch aggregate collapses each partition to at most
+    depth x width cells before the shuffle (mergeable by cell-wise
+    sum: fixed-size state at any volume), and the probe join
+    broadcasts probes x depth rows against it."""
+    depths = F.array(*[F.lit(d) for d in range(depth)])
+    sketch = (
+        toks.select("term", F.explode(depths).alias("d"))
+        .groupBy("d", cell(F.col("term"), F.col("d")).alias("cell"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    keys = probes.columns
+    probed = probes.select(*keys, F.explode(depths).alias("d")).select(
+        *keys, "d", cell(F.col("term"), F.col("d")).alias("cell")
+    )
+    return (
+        sketch.join(F.broadcast(probed), ["d", "cell"])
+        .groupBy(*keys)
+        .agg(F.min("n").alias("cms_est"))
     )
 
 
@@ -569,9 +593,10 @@ def q_agg_countmin_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the sketch aggregate is partial-aggregable into a FIXED
     256-cell table regardless of volume (the whole point: a mergeable
     sub-linear summary — per-partition sketches combine by cell-wise
-    sum), and the probe join broadcasts 20 rows. The exact side here
-    exists only to measure the sketch; production keeps the sketch
-    and drops the exact pass.
+    sum), built and probed by `_cms_probe`, the kernel of
+    q_agg_cms_md5: one depth explode, one join broadcasting 20 x 4
+    probe rows. The exact side here exists only to measure the
+    sketch; production keeps the sketch and drops the exact pass.
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
@@ -584,28 +609,16 @@ def q_agg_countmin_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
     )
 
-    def cell(term: F.Column, d: int) -> F.Column:
+    def cell(term: F.Column, d: F.Column) -> F.Column:
         return F.pmod(
-            F.xxhash64(F.concat(F.lit(f"d{d}:"), term)), F.lit(CMS_WIDTH)
+            F.xxhash64(
+                F.concat(F.lit("d"), d.cast("string"), F.lit(":"), term)
+            ),
+            F.lit(CMS_WIDTH),
         )
 
-    sketch = None
-    for d in range(CMS_DEPTH):
-        part = toks.groupBy(cell(F.col("term"), d).alias("cell")).agg(
-            F.count(F.lit(1)).alias("n")
-        ).select(F.lit(d).alias("d"), "cell", "n")
-        sketch = part if sketch is None else sketch.unionByName(part)
-
-    probes = exact
-    for d in range(CMS_DEPTH):
-        probes = probes.withColumn(f"c{d}", cell(F.col("term"), d))
-    est = probes
-    for d in range(CMS_DEPTH):
-        sk_d = sketch.where(F.col("d") == d).select(
-            F.col("cell").alias(f"c{d}"), F.col("n").alias(f"n{d}")
-        )
-        est = est.join(F.broadcast(sk_d), f"c{d}")
-    est_col = F.least(*[F.col(f"n{d}") for d in range(CMS_DEPTH)])
+    est = _cms_probe(toks, exact, cell, CMS_DEPTH)
+    est_col = F.col("cms_est")
     rel = (est_col - F.col("cnt")) / F.col("cnt")
     return est.agg(
         F.count(F.lit(1)).alias("n_probes"),
@@ -1021,6 +1034,52 @@ def q_agg_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hll_registers(frame: DataFrame, keys: list[str]) -> DataFrame:
+    """The md5 HyperLogLog registers of frame's user_id per `keys`:
+    bucket = the first 8 hash bits (m = 256), rho = the leading zeros
+    of the next 32 bits + 1, computed portably as 33 - length(bin(w))
+    (both engines' bin() drops leading zeros), register = max rho per
+    (keys, bucket). Registers merge by element-wise max — associative
+    and commutative — so shard, partition and micro-batch registers
+    combine losslessly."""
+    uid = F.col("user_id").cast("string")
+    h = frame.select(
+        *keys,
+        md5_int(uid, 1, 2).cast("bigint").alias("bucket"),
+        md5_int(uid, 3, 8).cast("bigint").alias("w"),
+    )
+    return h.groupBy(*keys, "bucket").agg(
+        F.max(
+            F.when(F.col("w") == 0, 33).otherwise(
+                33 - F.length(F.bin("w"))
+            )
+        ).alias("rho")
+    )
+
+
+def _hll_sums(regs: DataFrame) -> DataFrame:
+    """(used, ps): the registers in use and sum 2^-rho over them. The
+    sum is EXACT in double arithmetic (≤ 256 terms on a 2^-33 grid
+    span 41 mantissa bits), so no aggregation order can perturb it."""
+    return regs.agg(
+        F.count(F.lit(1)).alias("used"),
+        F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("ps"),
+    )
+
+
+def _hll_estimate(used: F.Column, ps: F.Column) -> F.Column:
+    """alpha_256 * m^2 / (ps + one unit per empty register), with the
+    small-range correction (Flajolet 2007 §4): a raw estimate <= 2.5m
+    with registers still empty switches to linear counting m*ln(m/V)
+    over the V empty registers — without it a 15-distinct input reads
+    as ~190."""
+    raw = F.lit(0.7182725932495458) * 256 * 256 / (ps + (256 - used))
+    return F.when(
+        (raw <= 2.5 * 256) & (used < 256),
+        256 * F.log(F.lit(256.0) / (256 - used)),
+    ).otherwise(raw)
+
+
 @register(
     "q_agg_hll_md5",
     oracle="""
@@ -1094,37 +1153,10 @@ def q_agg_hll_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact count alongside is the certificate, affordable at bench SF
     and dropped at 100 TB.
     """
-    hexid = F.md5(F.col("user_id").cast("string"))
-    w = F.conv(F.substring(hexid, 3, 8), 16, 10).cast("bigint")
-    h = load_table(spark, sf_dir, "events").select(
-        F.conv(F.substring(hexid, 1, 2), 16, 10)
-        .cast("bigint")
-        .alias("bucket"),
-        w.alias("w"),
-        "user_id",
-    )
-    regs = h.groupBy("bucket").agg(
-        F.max(
-            F.when(F.col("w") == 0, 33).otherwise(
-                33 - F.length(F.bin("w"))
-            )
-        ).alias("rho")
-    )
-    s = regs.agg(
-        F.count(F.lit(1)).alias("used"),
-        F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("present_sum"),
-    )
-    ex = h.agg(F.countDistinct("user_id").alias("exact_distinct"))
-    raw = (
-        F.lit(0.7182725932495458)
-        * 256
-        * 256
-        / (F.col("present_sum") + (256 - F.col("used")))
-    )
-    est = F.when(
-        (raw <= 2.5 * 256) & (F.col("used") < 256),
-        256 * F.log(F.lit(256.0) / (256 - F.col("used"))),
-    ).otherwise(raw)
+    events = load_table(spark, sf_dir, "events")
+    s = _hll_sums(_hll_registers(events, []))
+    ex = events.agg(F.countDistinct("user_id").alias("exact_distinct"))
+    est = _hll_estimate(F.col("used"), F.col("ps"))
     return (
         s.crossJoin(F.broadcast(ex))
         .select(
@@ -1222,50 +1254,22 @@ def q_agg_cms_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def cell(term: F.Column, d: F.Column) -> F.Column:
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(d.cast("string"), F.lit(":"), term)
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            md5_int(F.concat(d.cast("string"), F.lit(":"), term), 1, 8)
+            .cast("bigint")
             % CMSX_WIDTH
         )
 
-    depths = F.array(*[F.lit(d) for d in range(CMSX_DEPTH)])
-    sketch = (
-        toks.select("term", F.explode(depths).alias("d"))
-        .groupBy("d", cell(F.col("term"), F.col("d")).alias("cell"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
     exact = (
         toks.groupBy("term")
         .agg(F.count(F.lit(1)).alias("exact_cnt"))
         .orderBy(F.desc("exact_cnt"), "term")
         .limit(20)
     )
-    probes = exact.select(
-        "term", "exact_cnt", F.explode(depths).alias("d")
-    ).select(
+    return _cms_probe(toks, exact, cell, CMSX_DEPTH).select(
         "term",
         "exact_cnt",
-        "d",
-        cell(F.col("term"), F.col("d")).alias("cell"),
-    )
-    return (
-        sketch.join(F.broadcast(probes), ["d", "cell"])
-        .groupBy("term", "exact_cnt")
-        .agg(F.min("n").alias("cms_est"))
-        .select(
-            "term",
-            "exact_cnt",
-            "cms_est",
-            (F.col("cms_est") - F.col("exact_cnt")).alias("overestimate"),
-        )
+        "cms_est",
+        (F.col("cms_est") - F.col("exact_cnt")).alias("overestimate"),
     )
 
 
@@ -1336,26 +1340,12 @@ def q_agg_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     256-row sides. Nothing here grows with data volume except the
     first scan.
     """
-    hexid = F.md5(F.col("user_id").cast("string"))
-    h = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.conv(F.substring(hexid, 1, 2), 16, 10)
-        .cast("bigint")
-        .alias("bucket"),
-        F.conv(F.substring(hexid, 3, 8), 16, 10)
-        .cast("bigint")
-        .alias("w"),
-    )
-    rho = F.max(
-        F.when(F.col("w") == 0, 33).otherwise(
-            33 - F.length(F.bin("w"))
-        )
-    ).alias("rho")
-    shard_regs = h.groupBy("event_type", "bucket").agg(rho)
+    events = load_table(spark, sf_dir, "events")
+    shard_regs = _hll_registers(events, ["event_type"])
     merged = shard_regs.groupBy("bucket").agg(
         F.max("rho").alias("rho")
     )
-    globl = h.groupBy("bucket").agg(rho)
+    globl = _hll_registers(events, [])
     cmp = (
         globl.withColumnRenamed("rho", "g_rho")
         .join(
@@ -1372,23 +1362,9 @@ def q_agg_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_register_diffs"),
         )
     )
-    est = merged.agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("ps"),
-        F.count(F.lit(1)).alias("used"),
-    )
-    shards = h.agg(
-        F.countDistinct("event_type").alias("n_shards")
-    )
-    raw = (
-        F.lit(0.7182725932495458)
-        * 256
-        * 256
-        / (F.col("ps") + (256 - F.col("used")))
-    )
-    e = F.when(
-        (raw <= 2.5 * 256) & (F.col("used") < 256),
-        256 * F.log(F.lit(256.0) / (256 - F.col("used"))),
-    ).otherwise(raw)
+    est = _hll_sums(merged)
+    shards = events.agg(F.countDistinct("event_type").alias("n_shards"))
+    e = _hll_estimate(F.col("used"), F.col("ps"))
     return (
         cmp.crossJoin(F.broadcast(est))
         .crossJoin(F.broadcast(shards))
@@ -1490,51 +1466,19 @@ def q_agg_hll_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
-    hexid = F.md5(F.col("user_id").cast("string"))
-    h = ev.select(
-        "user_id",
-        "event_type",
-        F.conv(F.substring(hexid, 1, 2), 16, 10)
-        .cast("bigint")
-        .alias("bucket"),
-        F.conv(F.substring(hexid, 3, 8), 16, 10)
-        .cast("bigint")
-        .alias("w"),
-    )
-    rho_expr = F.max(
-        F.when(F.col("w") == 0, 33).otherwise(
-            33 - F.length(F.bin("w"))
-        )
-    ).alias("rho")
-    regs = h.groupBy("event_type", "bucket").agg(rho_expr)
+    regs = _hll_registers(ev, ["event_type"])
     union_regs = regs.groupBy("bucket").agg(F.max("rho").alias("rho"))
 
-    def est(df: DataFrame) -> F.Column:
-        return df.agg(
-            F.count(F.lit(1)).alias("used"),
-            F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("ps"),
+    def est(df: DataFrame, name: str) -> DataFrame:
+        return _hll_sums(df).select(
+            _hll_estimate(F.col("used"), F.col("ps")).alias(name)
         )
 
-    def raw_to_e(used: F.Column, ps: F.Column) -> F.Column:
-        raw = (
-            F.lit(0.7182725932495458) * 256 * 256 / (ps + (256 - used))
-        )
-        return F.when(
-            (raw <= 2.5 * 256) & (used < 256),
-            256 * F.log(F.lit(256.0) / (256 - used)),
-        ).otherwise(raw)
-
-    ea = est(regs.filter(F.col("event_type") == "click")).select(
-        raw_to_e(F.col("used"), F.col("ps")).alias("ea")
-    )
-    eb = est(regs.filter(F.col("event_type") == "purchase")).select(
-        raw_to_e(F.col("used"), F.col("ps")).alias("eb")
-    )
-    eu = est(union_regs).select(
-        raw_to_e(F.col("used"), F.col("ps")).alias("eu")
-    )
+    ea = est(regs.filter(F.col("event_type") == "click"), "ea")
+    eb = est(regs.filter(F.col("event_type") == "purchase"), "eb")
+    eu = est(union_regs, "eu")
     ex = (
-        h.groupBy("user_id")
+        ev.groupBy("user_id")
         .agg(F.countDistinct("event_type").alias("nt"))
         .filter(F.col("nt") == 2)
         .agg(F.count(F.lit(1)).alias("exact_intersect"))
@@ -1749,6 +1693,92 @@ HQ_WIDTH = HQ_DOMAIN / HQ_BUCKETS  # 32.0 exactly
 HQ_QS = [("p50", 0.5), ("p95", 0.95), ("p99", 0.99)]
 
 
+def _hist_bucket(x: F.Column, buckets: int, width: float) -> F.Column:
+    """The equi-width histogram bucket of x: floor(x / width), capped
+    at the last of `buckets` buckets. A dyadic width is an exact
+    double, so the bucket ids agree bit for bit across engines."""
+    return F.least(F.lit(buckets - 1), F.floor(x / F.lit(width)))
+
+
+def _hist_quantiles(
+    counts: DataFrame, keys: list[str], qs: list, width: float
+) -> DataFrame:
+    """Per `keys` group of the histogram counts (keys, b, c), the
+    estimate est_<k> of each quantile (k, q) in `qs`: a CDF walk to
+    the first bucket whose running count reaches t = ceil(q * total),
+    then linear interpolation inside it — closed-form integer/double
+    arithmetic, no data-dependent iteration. The pick is a
+    broadcast-argmin, min(struct(b, c, cum, t)) over the buckets that
+    reach t: first qualifying bucket, no second shuffle, no join
+    back."""
+    wb = W.partitionBy(*keys).orderBy("b")
+    cum = counts.select(
+        *keys,
+        "b",
+        "c",
+        F.sum("c").over(wb).alias("cum"),
+        F.sum("c").over(W.partitionBy(*keys)).alias("total"),
+    )
+    aggs = []
+    for k, q in qs:
+        t = F.ceil(F.lit(q) * F.col("total"))
+        aggs.append(
+            F.min(
+                F.when(
+                    F.col("cum") >= t,
+                    F.struct(
+                        F.col("b"), F.col("c"), F.col("cum"), t.alias("t")
+                    ),
+                )
+            ).alias(f"pick_{k}")
+        )
+    picked = cum.groupBy(*keys).agg(*aggs)
+    est_cols = []
+    for k, _q in qs:
+        p = F.col(f"pick_{k}")
+        est_cols.append(
+            F.round(
+                F.lit(width)
+                * (
+                    p["b"]
+                    + (p["t"] - (p["cum"] - p["c"]))
+                    / p["c"].cast("double")
+                ),
+                4,
+            ).alias(f"est_{k}")
+        )
+    return picked.select(*keys, *est_cols)
+
+
+def _cdf_distance(
+    counts: DataFrame, order: str
+) -> tuple[DataFrame, DataFrame]:
+    """The two-sample Kolmogorov-Smirnov distance between the arms a
+    and b of counts (order, ca, cb): n = (na, nb), the arm sizes, and
+    d = (ks), max |F_a - F_b| over the `order` grid, rounded to 6.
+    Each CDF value is a ratio of exact integer counts, so D is
+    bit-identical across engines. The running sums walk the collapsed
+    grid (one row per distinct order value), not the fact table."""
+    n = counts.agg(F.sum("ca").alias("na"), F.sum("cb").alias("nb"))
+    w = W.orderBy(order).rowsBetween(W.unboundedPreceding, 0)
+    cum = counts.select(
+        F.sum("ca").over(w).alias("cum_a"),
+        F.sum("cb").over(w).alias("cum_b"),
+    )
+    d = cum.crossJoin(F.broadcast(n)).agg(
+        F.round(
+            F.max(
+                F.abs(
+                    F.col("cum_a").cast("double") / F.col("na")
+                    - F.col("cum_b").cast("double") / F.col("nb")
+                )
+            ),
+            6,
+        ).alias("ks")
+    )
+    return n, d
+
+
 @register(
     "q_agg_histogram_quantile",
     oracle=f"""
@@ -1833,52 +1863,9 @@ def q_agg_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice").cast("double").alias("x"),
     )
     h = v.groupBy(
-        "flag",
-        F.least(
-            F.lit(HQ_BUCKETS - 1),
-            F.floor(F.col("x") / F.lit(HQ_WIDTH)),
-        ).alias("b"),
+        "flag", _hist_bucket(F.col("x"), HQ_BUCKETS, HQ_WIDTH).alias("b")
     ).agg(F.count(F.lit(1)).alias("c"))
-    wb = W.partitionBy("flag").orderBy("b")
-    cum = h.select(
-        "flag",
-        "b",
-        "c",
-        F.sum("c").over(wb).alias("cum"),
-        F.sum("c").over(W.partitionBy("flag")).alias("total"),
-    )
-    # Broadcast-argmin per quantile: min(struct(b, c, cum)) over the
-    # buckets that reach the target rank — first qualifying bucket,
-    # no second shuffle, no join back.
-    aggs = []
-    for k, q in HQ_QS:
-        t = F.ceil(F.lit(q) * F.col("total"))
-        aggs.append(
-            F.min(
-                F.when(
-                    F.col("cum") >= t,
-                    F.struct(
-                        F.col("b"), F.col("c"), F.col("cum"), t.alias("t")
-                    ),
-                )
-            ).alias(f"pick_{k}")
-        )
-    picked = cum.groupBy("flag").agg(*aggs)
-    est_cols = []
-    for k, _q in HQ_QS:
-        p = F.col(f"pick_{k}")
-        est_cols.append(
-            F.round(
-                F.lit(HQ_WIDTH)
-                * (
-                    p["b"]
-                    + (p["t"] - (p["cum"] - p["c"]))
-                    / p["c"].cast("double")
-                ),
-                4,
-            ).alias(f"est_{k}")
-        )
-    est = picked.select("flag", *est_cols)
+    est = _hist_quantiles(h, ["flag"], HQ_QS, HQ_WIDTH)
     exact = v.groupBy("flag").agg(
         F.count(F.lit(1)).alias("n"),
         *[

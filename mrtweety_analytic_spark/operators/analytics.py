@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import LastHandle
+from ..util import LastHandle, cents, cents_sum, md5_int, unit_sum
 
 # Supersession holder for q_date_spine's persisted daily rollup.
 _LAST_SPINE = LastHandle()
@@ -475,22 +475,8 @@ def q_tpch_q5like(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(
-            F.round(
-                # ~1.1e9 units/row: 128-bit accumulation (≙ DuckDB
-                # HUGEINT) — int64 wraps at ~8.4e9 rows/group
-                F.sum(
-                    (
-                        F.floor(F.col("l_extendedprice") * 100 + 0.5)
-                        .cast("bigint")
-                        * (
-                            100
-                            - F.floor(F.col("l_discount") * 100 + 0.5)
-                            .cast("bigint")
-                        )
-                    ).cast("decimal(38,0)")
-                ).cast("double")
-                / 10000,
-                4,
+            unit_sum(
+                cents("l_extendedprice") * (100 - cents("l_discount")), 4
             ).alias("revenue")
         )
     )
@@ -866,22 +852,8 @@ def q_tpch_q7like(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("l_shipdate").alias("l_year"),
         )
         .agg(
-            F.round(
-                # ~1.1e9 units/row: 128-bit accumulation (≙ DuckDB
-                # HUGEINT) — int64 wraps at ~8.4e9 rows/group
-                F.sum(
-                    (
-                        F.floor(F.col("l_extendedprice") * 100 + 0.5)
-                        .cast("bigint")
-                        * (
-                            100
-                            - F.floor(F.col("l_discount") * 100 + 0.5)
-                            .cast("bigint")
-                        )
-                    ).cast("decimal(38,0)")
-                ).cast("double")
-                / 10000,
-                4,
+            unit_sum(
+                cents("l_extendedprice") * (100 - cents("l_discount")), 4
             ).alias("revenue")
         )
     )
@@ -958,22 +930,8 @@ def q_tpch_q19like(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .filter(cond)
         .agg(
-            F.round(
-                # ~1.1e9 units/row: 128-bit accumulation (≙ DuckDB
-                # HUGEINT) — int64 wraps at ~8.4e9 rows/group
-                F.sum(
-                    (
-                        F.floor(F.col("l_extendedprice") * 100 + 0.5)
-                        .cast("bigint")
-                        * (
-                            100
-                            - F.floor(F.col("l_discount") * 100 + 0.5)
-                            .cast("bigint")
-                        )
-                    ).cast("decimal(38,0)")
-                ).cast("double")
-                / 10000,
-                4,
+            unit_sum(
+                cents("l_extendedprice") * (100 - cents("l_discount")), 4
             ).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
@@ -1024,13 +982,7 @@ def q_tpch_q22like(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.round(
-                F.sum(
-                    F.floor(F.col("c_acctbal") * 100 + 0.5).cast("bigint")
-                ).cast("double")
-                / 100,
-                4,
-            ).alias("totacctbal"),
+            cents_sum("c_acctbal").alias("totacctbal"),
         )
     )
 
@@ -1305,13 +1257,7 @@ def q_events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),
-            F.round(
-                F.sum(
-                    F.floor(F.col("value") * 100 + 0.5).cast("bigint")
-                ).cast("double")
-                / 100,
-                4,
-            ).alias("revenue"),
+            cents_sum("value").alias("revenue"),
         )
     )
 
@@ -2382,20 +2328,14 @@ def q_agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sequence(F.lit(0), F.lit(_BOOT_B - 1))
     ).alias("b")
     u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.col("event_id").cast("string"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                12,
+        md5_int(
+            F.concat_ws(
+                ":",
+                F.col("event_id").cast("string"),
+                F.col("b").cast("string"),
             ),
-            16,
-            10,
+            1,
+            12,
         ).cast("bigint")
         / F.lit(281474976710656.0)
     )

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import app_temp_dir
+from ..util import app_temp_dir, cents_sum
 
 N_BUCKETS = 8
 
@@ -80,14 +80,7 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bl = spark.table("b_lineitem").hint("merge")
     bo = spark.table("b_orders")
     joined = bl.join(bo, bl.l_orderkey == bo.o_orderkey, "inner")
-    # Money sums accumulate as EXACT integer cents (floor(x*100+0.5),
-    # the explicit-floor rule): at sf0.1 the double-sum merge-order
-    # error (~1e-3 at a 6e9-magnitude total) crosses the 1e-4
-    # rounding grid and the engines diverge — caught live by the
-    # round-7 sf0.1 differential. Integer cents are exact at any
-    # scale up to 2^63 cents (~9e16 dollars).
-    cents = F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("bigint")
     return joined.groupBy("o_orderstatus").agg(
-        F.round(F.sum(cents).cast("double") / 100, 2).alias("sum_price"),
+        cents_sum("l_extendedprice", 2).alias("sum_price"),
         F.count(F.lit(1)).alias("n"),
     )

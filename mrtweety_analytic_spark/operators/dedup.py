@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import LastHandle, ngram_windows, ordered_pairs
+from ..util import LastHandle, md5_int, ngram_windows, ordered_pairs
 
 # Multi-consumer intermediates of the funnel/dedup composites,
 # persisted per call — without these the quality-gate tokenization
@@ -1727,11 +1727,7 @@ def q_sample_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs, 20, pairs_materialized=True
     ).select(F.col("doc").alias("doc_id"), F.col("label").alias("cluster_id"))
     fold = (
-        F.conv(
-            F.substring(F.md5(F.col("cluster_id").cast("string")), 1, 12),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(F.col("cluster_id").cast("string"), 1, 12).cast("bigint")
         % KF_K
     )
     # folded feeds three consumers (both sides of the leakage audit
@@ -1805,9 +1801,7 @@ def _simhash_md5_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
     ).select(
         "doc_id",
-        F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10)
-        .cast("bigint")
-        .alias("v"),
+        md5_int("tok", 1, 15).cast("bigint").alias("v"),
     )
     return _simhash(toks, SIMHASH_MD5_BITS)
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
+from ..util import md5_int
 
 # Case-insensitive NOT-IN blacklist ≙ reference WORD_BLACKLIST
 # semantics (SparkApplication.scala:29,77), applied to event types.
@@ -283,13 +284,8 @@ def q_sample_ht_total(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("tot") / F.col("n") * 20),
         ).alias("p"),
         (
-            F.conv(
-                F.substring(
-                    F.md5(F.col("o_orderkey").cast("string")), 1, 12
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            md5_int(F.col("o_orderkey").cast("string"), 1, 12)
+            .cast("bigint")
             / F.lit(281474976710656.0)
         ).alias("u"),
     )

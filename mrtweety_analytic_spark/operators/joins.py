@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
+from ..util import cents_sum
 
 
 def salted_join(
@@ -90,13 +91,7 @@ def q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r_name")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            F.round(
-                F.sum(
-                    F.floor(F.col("c_acctbal") * 100 + 0.5).cast("bigint")
-                ).cast("double")
-                / 100,
-                4,
-            ).alias("sum_acctbal"),
+            cents_sum("c_acctbal").alias("sum_acctbal"),
         )
     )
 
@@ -333,13 +328,7 @@ def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = salted_join(customer, nation, "c_nationkey", "n_nationkey")
     return joined.groupBy("n_name").agg(
         F.count(F.lit(1)).alias("n_customers"),
-        F.round(
-                F.sum(
-                    F.floor(F.col("c_acctbal") * 100 + 0.5).cast("bigint")
-                ).cast("double")
-                / 100,
-                4,
-            ).alias("total_bal"),
+        cents_sum("c_acctbal").alias("total_bal"),
     )
 
 
@@ -451,17 +440,7 @@ def q_join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_orderpriority")
             .agg(
                 F.count(F.lit(1)).alias("n"),
-                # exact integer cents — see q_join_bucketed: the
-                # double sum's merge-order error crosses the rounding
-                # grid at sf0.1 magnitudes
-                F.round(
-                    F.sum(
-                        F.floor(F.col("l_extendedprice") * 100 + 0.5)
-                        .cast("bigint")
-                    ).cast("double")
-                    / 100,
-                    2,
-                ).alias("sum_price"),
+                cents_sum("l_extendedprice", 2).alias("sum_price"),
             )
         )
         # The bloom injection itself is an optimizer rule gated on the
@@ -800,13 +779,7 @@ def q_join_skew_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(
-                    F.floor(F.col("value") * 100 + 0.5).cast("bigint")
-                ).cast("double")
-                / 100,
-                4,
-            ).alias("total_value"),
+            cents_sum("value").alias("total_value"),
         )
     )
 

@@ -24,7 +24,7 @@ from pyspark.sql.window import Window as W
 
 from ..registry import register
 from ..sources import load_table
-from ..util import LastHandle, ngram_windows
+from ..util import LastHandle, md5_int, ngram_windows
 
 # Supersession holders for this module's persisted frames: repeated
 # bench/verify calls keep one generation each in the block manager.
@@ -1334,10 +1334,7 @@ def _dsir_doc_logw(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "lang",
-        (
-            F.conv(F.substring(F.md5("term"), 1, 4), 16, 10).cast("int")
-            % DSIR_BUCKETS
-        ).alias("f"),
+        (md5_int("term", 1, 4).cast("int") % DSIR_BUCKETS).alias("f"),
     )
     _LAST_DSIR_TOK.persist(tok)
     raw = tok.groupBy("f").agg(F.count(F.lit(1)).alias("c_raw"))

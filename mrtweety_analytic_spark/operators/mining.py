@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import ngram_windows, ordered_pairs
+from ..util import cents, ngram_windows, ordered_pairs
 
 
 @register(
@@ -3550,18 +3550,16 @@ def q_events_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("mid")
     )
-    cents = F.floor(F.col("value").cast("double") * 100 + 0.5).cast(
-        "bigint"
-    )
+    value = cents(F.col("value").cast("double"))
     us = F.unix_micros("ts")
     per_user = (
         ev.crossJoin(F.broadcast(span))
         .groupBy("user_id")
         .agg(
-            F.sum(F.when(us <= F.col("mid"), cents).otherwise(0)).alias(
+            F.sum(F.when(us <= F.col("mid"), value).otherwise(0)).alias(
                 "x_c"
             ),
-            F.sum(F.when(us > F.col("mid"), cents).otherwise(0)).alias(
+            F.sum(F.when(us > F.col("mid"), value).otherwise(0)).alias(
                 "y_c"
             ),
         )

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
+from ..util import cents_sum
 
 
 # Spark's schema_of_variant infers a DECIMAL(p,s) per numeric literal
@@ -299,14 +300,7 @@ def q_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("l_discount") > 0.05, 1)).alias(
             "n_discounted"
         ),
-        F.round(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + 0.5)
-                .cast("bigint")
-            ).cast("double")
-            / 100,
-            4,
-        ).alias("total_price"),
+        cents_sum("l_extendedprice").alias("total_price"),
     )
     observed.write.format("noop").mode("overwrite").save()
     got = obs.get

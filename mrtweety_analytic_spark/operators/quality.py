@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
+from ..util import md5_int
+from .aggregates import _cdf_distance
 from .textops import _STOP_SQL, STOPWORDS, tokens
 
 PROFILE_COLS = ("o_orderstatus", "o_custkey", "o_totalprice", "o_orderpriority")
@@ -950,17 +952,15 @@ def q_dq_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot overflow.
     """
     o = load_table(spark, sf_dir, "orders")
-    hexstr = F.md5(
-        F.concat_ws(
-            "|",
-            F.col("o_orderkey").cast("string"),
-            F.col("o_custkey").cast("string"),
-            F.col("o_orderstatus"),
-            F.col("o_orderpriority"),
-        )
+    row = F.concat_ws(
+        "|",
+        F.col("o_orderkey").cast("string"),
+        F.col("o_custkey").cast("string"),
+        F.col("o_orderstatus"),
+        F.col("o_orderpriority"),
     )
-    h = F.conv(F.substring(hexstr, 1, 12), 16, 10).cast("bigint")
-    h32 = F.conv(F.substring(hexstr, 1, 8), 16, 10).cast("bigint")
+    h = md5_int(row, 1, 12).cast("bigint")
+    h32 = md5_int(row, 1, 8).cast("bigint")
     return o.select(h.alias("h"), h32.alias("h32")).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("h32").alias("digest_sum"),
@@ -1046,28 +1046,7 @@ def q_dq_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("event_type") == KS_A, 1).otherwise(0)).alias("ca"),
         F.sum(F.when(F.col("event_type") == KS_B, 1).otherwise(0)).alias("cb"),
     )
-    n = g.agg(
-        F.sum("ca").alias("na"), F.sum("cb").alias("nb")
-    )
-    w = W.orderBy("x").rowsBetween(W.unboundedPreceding, 0)
-    cum = g.select(
-        F.sum("ca").over(w).alias("cum_a"),
-        F.sum("cb").over(w).alias("cum_b"),
-    )
-    d = (
-        cum.crossJoin(F.broadcast(n))
-        .agg(
-            F.round(
-                F.max(
-                    F.abs(
-                        F.col("cum_a").cast("double") / F.col("na")
-                        - F.col("cum_b").cast("double") / F.col("nb")
-                    )
-                ),
-                6,
-            ).alias("ks")
-        )
-    )
+    n, d = _cdf_distance(g, "x")
     lam = d.crossJoin(F.broadcast(n)).select(
         "na",
         "nb",

@@ -16,7 +16,7 @@ from pyspark.sql import types as T
 
 from ..registry import register
 from ..sources import load_table, table_path, table_schema
-from ..util import app_temp_dir
+from ..util import app_temp_dir, cents_sum, md5_int
 
 
 @register(
@@ -152,13 +152,7 @@ def q_scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("event_type").cast("string").alias("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(
-                F.sum(
-                    F.floor(F.col("value") * 100 + 0.5).cast("bigint")
-                ).cast("double")
-                / 100,
-                4,
-            ).alias("total"),
+            cents_sum("value").alias("total"),
         )
     )
 
@@ -323,13 +317,7 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("event_type").cast("string").alias("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(
-                F.sum(
-                    F.floor(F.col("value") * 100 + 0.5).cast("bigint")
-                ).cast("double")
-                / 100,
-                4,
-            ).alias("total"),
+            cents_sum("value").alias("total"),
         )
     )
 
@@ -581,20 +569,8 @@ def q_scan_bloom_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def pos(j: F.Column, v: F.Column) -> F.Column:
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            j.cast("string"),
-                            F.lit(":"),
-                            v.cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
+            md5_int(
+                F.concat(j.cast("string"), F.lit(":"), v.cast("string")), 1, 8
             ).cast("bigint")
             % BLOOM_M
         )

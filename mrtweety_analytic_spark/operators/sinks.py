@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
+from ..util import cents_sum
 
 
 # Scratch dirs handed out per (name, sf_dir), newest last — two
@@ -129,13 +130,7 @@ def q_sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     agg = orders.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint")
-            ).cast("double")
-            / 100,
-            4,
-        ).alias("total"),
+        cents_sum("o_totalprice").alias("total"),
     )
     out = _scratch("sink_csv", sf_dir)
     agg.write.mode("overwrite").option("header", True).csv(out)
@@ -163,13 +158,7 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(
-            F.sum(
-                F.floor(F.col("value") * 100 + 0.5).cast("bigint")
-            ).cast("double")
-            / 100,
-            4,
-        ).alias("sum_value"),
+        cents_sum("value").alias("sum_value"),
     )
     out = _scratch("sink_orc", sf_dir)
     agg.write.mode("overwrite").orc(out)

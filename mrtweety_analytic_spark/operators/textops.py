@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import LastHandle, ngram_windows
+from ..util import LastHandle, md5_int, ngram_windows
 
 # Supersession holder for q_text_tfidf's persisted tf aggregate.
 _LAST_TFIDF = LastHandle()
@@ -2103,10 +2103,7 @@ def q_text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             (F.col("p0") + 1).alias("pos"),
-            (
-                F.conv(F.substring(F.md5("gram"), 1, 10), 16, 10)
-                .cast("bigint")
-            ).alias("h"),
+            md5_int("gram", 1, 10).cast("bigint").alias("h"),
         )
     )
     wo = W.partitionBy("doc_id").orderBy("pos")

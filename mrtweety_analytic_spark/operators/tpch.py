@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import LastHandle
+from ..util import LastHandle, cents, cents_sum, unit_sum
 
 # Supersession holder for the derived tables q_tpch_q11like and
 # q_tpch_q15like persist for their two consumers each.
@@ -191,10 +191,7 @@ def q_tpch_q6like(spark: SparkSession, sf_dir: str) -> DataFrame:
             # exact integer 1e-4-dollar units — see q_agg_multi
             F.round(
                 F.sum(
-                    F.floor(F.col("l_extendedprice") * 100 + 0.5)
-                    .cast("bigint")
-                    * F.floor(F.col("l_discount") * 100 + 0.5)
-                    .cast("bigint")
+                    cents("l_extendedprice") * cents("l_discount")
                 ).cast("double")
                 / 10000,
                 4,
@@ -341,12 +338,9 @@ def q_tpch_q9like(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
     orders = load_table(spark, sf_dir, "orders")
-    cents = F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("bigint")
-    d100 = F.floor(F.col("l_discount") * 100 + 0.5).cast("bigint")
-    rcents = F.floor(F.col("p_retailprice") * 100 + 0.5).cast("bigint")
-    profit_u4 = cents * (100 - d100) - 80 * rcents * F.col(
-        "l_quantity"
-    ).cast("bigint")
+    profit_u4 = cents("l_extendedprice") * (
+        100 - cents("l_discount")
+    ) - 80 * cents("p_retailprice") * F.col("l_quantity").cast("bigint")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
@@ -356,15 +350,7 @@ def q_tpch_q9like(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").alias("o_year"),
         )
-        .agg(
-            # ~1.1e9 units/row magnitude: 128-bit accumulation (≙
-            # DuckDB HUGEINT) — int64 wraps at ~8.4e9 rows/group
-            F.round(
-                F.sum(profit_u4.cast("decimal(38,0)")).cast("double")
-                / 10000,
-                4,
-            ).alias("profit")
-        )
+        .agg(unit_sum(profit_u4, 4).alias("profit"))
     )
 
 
@@ -597,15 +583,7 @@ def q_tpch_q17like(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(avg_qty), li.l_partkey == F.col("ap"))
         .filter(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
         .agg(
-            # exact integer cents — see q_agg_multi
-            F.round(
-                F.sum(
-                    F.floor(F.col("l_extendedprice") * 100 + 0.5)
-                    .cast("bigint")
-                ).cast("double")
-                / 100,
-                4,
-            ).alias("small_qty_revenue"),
+            cents_sum("l_extendedprice").alias("small_qty_revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -791,31 +769,22 @@ def q_tpch_q1like(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Exact integer units (cents / percent points) — see q_agg_multi:
     # double money sums over 100k+ rows drift past the rounding grid.
-    cents = F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("bigint")
-    d100 = F.floor(F.col("l_discount") * 100 + 0.5).cast("bigint")
-    t100 = F.floor(F.col("l_tax") * 100 + 0.5).cast("bigint")
-    # int64 per-row product (fits: <=1.2e11), 128-bit accumulation.
-    disc_units = (cents * (100 - d100)).cast("decimal(38,0)")
-    charge_units = (cents * (100 - d100) * (100 + t100)).cast(
-        "decimal(38,0)"
-    )
+    price = cents("l_extendedprice")
+    d100 = cents("l_discount")
+    # int64 per-row products (fit: <=1.2e11), 128-bit accumulation
+    disc_units = price * (100 - d100)
     n = F.count(F.lit(1))
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
-            F.round(F.sum(cents).cast("double") / 100, 4).alias(
-                "sum_base_price"
+            cents_sum("l_extendedprice").alias("sum_base_price"),
+            unit_sum(disc_units, 4).alias("sum_disc_price"),
+            unit_sum(disc_units * (100 + cents("l_tax")), 6).alias(
+                "sum_charge"
             ),
-            F.round(
-                F.sum(disc_units).cast("double") / 10000, 4
-            ).alias("sum_disc_price"),
-            F.round(
-                F.sum(charge_units).cast("double") / 1000000,
-                6,
-            ).alias("sum_charge"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.sum(cents).cast("double") / 100 / n, 4).alias(
+            F.round(F.sum(price).cast("double") / 100 / n, 4).alias(
                 "avg_price"
             ),
             F.round(F.sum(d100).cast("double") / 100 / n, 4).alias(

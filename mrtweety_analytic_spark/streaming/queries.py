@@ -20,10 +20,20 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..operators.aggregates import (
+    HQ_QS,
+    _cdf_distance,
+    _hist_bucket,
+    _hist_quantiles,
+    _hll_estimate,
+    _hll_registers,
+    _hll_sums,
+)
+from ..operators.quality import KS_A, KS_B
 from ..operators.textops import _STOP_SQL
 from ..registry import register
 from ..sources import load_events_stream
-from ..util import LastHandle
+from ..util import LastHandle, md5_int
 
 
 def _drift_oracle() -> str:
@@ -2002,42 +2012,14 @@ def s_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-replay reduction s_stateful_count documents.
     """
     ev = load_events_stream(spark, sf_dir)
-    hexid = F.md5(F.col("user_id").cast("string"))
-    h = ev.select(
-        F.conv(F.substring(hexid, 1, 2), 16, 10)
-        .cast("bigint")
-        .alias("bucket"),
-        F.conv(F.substring(hexid, 3, 8), 16, 10)
-        .cast("bigint")
-        .alias("w"),
-    )
-    regs_stream = h.groupBy("bucket").agg(
-        F.max(
-            F.when(F.col("w") == 0, 33).otherwise(
-                33 - F.length(F.bin("w"))
-            )
-        ).alias("rho")
-    )
-    out = _run_to_memory(spark, regs_stream, "update")
+    out = _run_to_memory(spark, _hll_registers(ev, []), "update")
     regs = out.groupBy("bucket").agg(F.max("rho").alias("rho"))
-    s = regs.agg(
-        F.count(F.lit(1)).alias("used"),
-        F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("ps"),
-    )
-    raw = (
-        F.lit(0.7182725932495458)
-        * 256
-        * 256
-        / (F.col("ps") + (256 - F.col("used")))
-    )
-    est = F.when(
-        (raw <= 2.5 * 256) & (F.col("used") < 256),
-        256 * F.log(F.lit(256.0) / (256 - F.col("used"))),
-    ).otherwise(raw)
-    return s.select(
+    return _hll_sums(regs).select(
         F.lit(256).alias("m"),
         F.col("used").alias("n_registers_used"),
-        F.round(est, 4).alias("hll_estimate"),
+        F.round(_hll_estimate(F.col("used"), F.col("ps")), 4).alias(
+            "hll_estimate"
+        ),
     )
 
 
@@ -2046,7 +2028,13 @@ def s_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_agg_histogram_quantile (operators/aggregates.py) for the design.
 SQS_BUCKETS = 4096
 SQS_WIDTH = 512.0 / SQS_BUCKETS  # 0.125 exactly
-SQS_QS = [("p50", 0.5), ("p95", 0.95), ("p99", 0.99)]
+
+
+def _sqs_bucket() -> F.Column:
+    """The stream sketches' bucket of an event's value on this grid."""
+    return _hist_bucket(
+        F.col("value").cast("double"), SQS_BUCKETS, SQS_WIDTH
+    )
 
 
 @register(
@@ -2065,7 +2053,7 @@ SQS_QS = [("p50", 0.5), ("p95", 0.95), ("p99", 0.99)]
                sum(c) OVER () AS total
         FROM h
     ),
-    qs AS (SELECT * FROM (VALUES {", ".join(f"('{k}', CAST({q} AS DOUBLE))" for k, q in SQS_QS)})
+    qs AS (SELECT * FROM (VALUES {", ".join(f"('{k}', CAST({q} AS DOUBLE))" for k, q in HQ_QS)})
            AS t(qk, q)),
     pick AS (
         SELECT qs.qk, min(cum.b) AS pb
@@ -2084,7 +2072,7 @@ SQS_QS = [("p50", 0.5), ("p95", 0.95), ("p99", 0.99)]
     )
     SELECT (SELECT count(*) FROM events) AS n,
            (SELECT count(*) FROM h) AS n_buckets_used,
-           {", ".join(f"max(CASE WHEN qk = '{k}' THEN e END) AS est_{k}" for k, _ in SQS_QS)}
+           {", ".join(f"max(CASE WHEN qk = '{k}' THEN e END) AS est_{k}" for k, _ in HQ_QS)}
     FROM est
     """,
 )
@@ -2107,59 +2095,18 @@ def s_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lambda architecture this sketch implements.
     """
     ev = load_events_stream(spark, sf_dir)
-    h = ev.groupBy(
-        F.least(
-            F.lit(SQS_BUCKETS - 1),
-            F.floor(F.col("value").cast("double") / F.lit(SQS_WIDTH)),
-        ).alias("b")
-    ).agg(F.count(F.lit(1)).alias("c"))
+    h = ev.groupBy(_sqs_bucket().alias("b")).agg(
+        F.count(F.lit(1)).alias("c")
+    )
     out = _run_to_memory(spark, h, "update")
     buckets = out.groupBy("b").agg(F.max("c").alias("c"))
-    cum = buckets.select(
-        "b",
-        "c",
-        F.sum("c").over(W.orderBy("b").rowsBetween(W.unboundedPreceding, 0)).alias("cum"),
-        F.sum("c").over(W.partitionBy()).alias("total"),
-    )
-    aggs = []
-    for k, q in SQS_QS:
-        t = F.ceil(F.lit(q) * F.col("total"))
-        aggs.append(
-            F.min(
-                F.when(
-                    F.col("cum") >= t,
-                    F.struct(
-                        F.col("b"), F.col("c"), F.col("cum"), t.alias("t")
-                    ),
-                )
-            ).alias(f"pick_{k}")
-        )
-    picked = cum.agg(
-        F.max("total").alias("n"),
-        F.count(F.lit(1)).alias("n_buckets_used"),
-        *aggs,
-    )
-    est_cols = []
-    for k, _q in SQS_QS:
-        p = F.col(f"pick_{k}")
-        est_cols.append(
-            F.round(
-                F.lit(SQS_WIDTH)
-                * (
-                    p["b"]
-                    + (p["t"] - (p["cum"] - p["c"]))
-                    / p["c"].cast("double")
-                ),
-                4,
-            ).alias(f"est_{k}")
-        )
-    return picked.select("n", "n_buckets_used", *est_cols)
+    return buckets.agg(
+        F.sum("c").alias("n"), F.count(F.lit(1)).alias("n_buckets_used")
+    ).crossJoin(_hist_quantiles(buckets, [], HQ_QS, SQS_WIDTH))
 
 
 # Streaming binned-KS drift monitor: same dyadic bucket grid as
-# s_quantile_sketch; the two arms mirror q_dq_ks_test's batch pair.
-SKS_A = "click"
-SKS_B = "purchase"
+# s_quantile_sketch; the two arms are q_dq_ks_test's batch pair.
 
 
 @register(
@@ -2169,11 +2116,11 @@ SKS_B = "purchase"
         SELECT LEAST({SQS_BUCKETS - 1},
                      CAST(floor(CAST(value AS DOUBLE) / {SQS_WIDTH!r})
                           AS BIGINT)) AS b,
-               sum(CASE WHEN event_type = '{SKS_A}' THEN 1 ELSE 0 END)
+               sum(CASE WHEN event_type = '{KS_A}' THEN 1 ELSE 0 END)
                    AS ca,
-               sum(CASE WHEN event_type = '{SKS_B}' THEN 1 ELSE 0 END)
+               sum(CASE WHEN event_type = '{KS_B}' THEN 1 ELSE 0 END)
                    AS cb
-        FROM events WHERE event_type IN ('{SKS_A}', '{SKS_B}')
+        FROM events WHERE event_type IN ('{KS_A}', '{KS_B}')
         GROUP BY 1
     ),
     n AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM h),
@@ -2210,14 +2157,10 @@ def s_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume; the CDF walk runs batch-side over the tiny state table.
     """
     ev = load_events_stream(spark, sf_dir).filter(
-        F.col("event_type").isin(SKS_A, SKS_B)
+        F.col("event_type").isin(KS_A, KS_B)
     )
     h = ev.groupBy(
-        F.least(
-            F.lit(SQS_BUCKETS - 1),
-            F.floor(F.col("value").cast("double") / F.lit(SQS_WIDTH)),
-        ).alias("b"),
-        F.col("event_type").alias("arm"),
+        _sqs_bucket().alias("b"), F.col("event_type").alias("arm")
     ).agg(F.count(F.lit(1)).alias("c"))
     out = _run_to_memory(spark, h, "update")
     counts = (
@@ -2225,39 +2168,22 @@ def s_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("c").alias("c"))
         .groupBy("b")
         .agg(
-            F.sum(F.when(F.col("arm") == SKS_A, F.col("c")).otherwise(0)).alias("ca"),
-            F.sum(F.when(F.col("arm") == SKS_B, F.col("c")).otherwise(0)).alias("cb"),
+            F.sum(F.when(F.col("arm") == KS_A, F.col("c")).otherwise(0)).alias("ca"),
+            F.sum(F.when(F.col("arm") == KS_B, F.col("c")).otherwise(0)).alias("cb"),
         )
     )
-    n = counts.agg(
-        F.sum("ca").alias("na"),
-        F.sum("cb").alias("nb"),
-        F.count(F.lit(1)).alias("n_buckets_used"),
-    )
-    w = W.orderBy("b").rowsBetween(W.unboundedPreceding, 0)
-    cum = counts.select(
-        F.sum("ca").over(w).alias("cum_a"),
-        F.sum("cb").over(w).alias("cum_b"),
-    )
+    n, d = _cdf_distance(counts, "b")
+    used = counts.agg(F.count(F.lit(1)).alias("n_buckets_used"))
+    # an empty stream has no CDF to compare: no row, as in the oracle
     return (
-        cum.crossJoin(F.broadcast(n))
-        .groupBy("na", "nb", "n_buckets_used")
-        .agg(
-            F.round(
-                F.max(
-                    F.abs(
-                        F.col("cum_a").cast("double") / F.col("na")
-                        - F.col("cum_b").cast("double") / F.col("nb")
-                    )
-                ),
-                6,
-            ).alias("ks_binned")
-        )
+        n.crossJoin(used)
+        .crossJoin(d)
+        .where(F.col("n_buckets_used") > 0)
         .select(
             F.col("na").alias("n_a"),
             F.col("nb").alias("n_b"),
             "n_buckets_used",
-            "ks_binned",
+            F.col("ks").alias("ks_binned"),
         )
     )
 
@@ -2315,18 +2241,28 @@ def s_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     firsts = out.groupBy("user_id", "event_type").agg(
         F.min("first_ts").alias("first_ts")
     )
+    return _novelty_curve(firsts, "keys")
+
+
+def _novelty_curve(firsts: DataFrame, unit: str) -> DataFrame:
+    """The daily novelty curve of the first-seen times `first_ts`, one
+    per key (s_novelty_decay) or per bucket (s_novelty_bucketed): per
+    day, n_new_<unit> first appearances, cum_<unit> of them so far,
+    and novelty_rate = new / cumulative. The cumulative sum is a
+    window over the days-sized frame, not a data-scale sort."""
+    new, cum_name = f"n_new_{unit}", f"cum_{unit}"
     d = firsts.groupBy(
         F.date_trunc("day", "first_ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n_new_keys"))
+    ).agg(F.count(F.lit(1)).alias(new))
     w = W.orderBy("day").rowsBetween(W.unboundedPreceding, W.currentRow)
-    cum = F.sum("n_new_keys").over(w)
+    cum = F.sum(new).over(w)
     return d.select(
         "day",
-        "n_new_keys",
-        cum.cast("long").alias("cum_keys"),
-        F.round(
-            F.col("n_new_keys").cast("double") / cum.cast("double"), 6
-        ).alias("novelty_rate"),
+        new,
+        cum.cast("long").alias(cum_name),
+        F.round(F.col(new).cast("double") / cum.cast("double"), 6).alias(
+            "novelty_rate"
+        ),
     )
 
 
@@ -2346,20 +2282,12 @@ def _novelty_firsts(ev: DataFrame) -> DataFrame:
     entries. Factored out so the checkpoint-restart pytest drives the
     exact shipped expression across a kill-and-resume."""
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.col("user_id").cast("string"),
-                        F.col("event_type"),
-                    )
-                ),
-                1,
-                4,
+        md5_int(
+            F.concat_ws(
+                ":", F.col("user_id").cast("string"), F.col("event_type")
             ),
-            16,
-            10,
+            1,
+            4,
         ).cast("int")
         % NOVELTY_BUCKETS
     )
@@ -2423,20 +2351,7 @@ def s_novelty_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     firsts = out.groupBy("bucket").agg(
         F.min("first_ts").alias("first_ts")
     )
-    d = firsts.groupBy(
-        F.date_trunc("day", "first_ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n_new_buckets"))
-    w = W.orderBy("day").rowsBetween(W.unboundedPreceding, W.currentRow)
-    cum = F.sum("n_new_buckets").over(w)
-    return d.select(
-        "day",
-        "n_new_buckets",
-        cum.cast("long").alias("cum_buckets"),
-        F.round(
-            F.col("n_new_buckets").cast("double") / cum.cast("double"),
-            6,
-        ).alias("novelty_rate"),
-    )
+    return _novelty_curve(firsts, "buckets")
 
 
 # Streaming near-dup-rate monitor: minhash band buckets as bounded
@@ -2511,20 +2426,14 @@ def _mdr_band_buckets(docs: DataFrame) -> DataFrame:
             "doc_id",
             "source",
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.col("bd.band").cast("string"),
-                                F.lit(":"),
-                                F.col("bd.sg"),
-                            )
-                        ),
-                        1,
-                        4,
+                md5_int(
+                    F.concat(
+                        F.col("bd.band").cast("string"),
+                        F.lit(":"),
+                        F.col("bd.sg"),
                     ),
-                    16,
-                    10,
+                    1,
+                    4,
                 ).cast("int")
                 % MDR_BUCKETS
             ).alias("bucket"),
@@ -2899,10 +2808,7 @@ def _sdu_buckets(docs: DataFrame) -> DataFrame:
         "doc_id",
         "source",
         (
-            F.conv(
-                F.substring(F.md5(_synth_canonical_url()), 1, 4), 16, 10
-            ).cast("int")
-            % SDU_BUCKETS
+            md5_int(_synth_canonical_url(), 1, 4).cast("int") % SDU_BUCKETS
         ).alias("bucket"),
     )
 

@@ -8,7 +8,7 @@ import shutil
 import tempfile
 
 from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -145,3 +145,41 @@ def ngram_windows(arr, n: int) -> F.Column:
     """
     win_len = F.greatest(F.lit(0), F.size(arr) - (n - 1))
     return F.arrays_zip(*[F.slice(arr, i + 1, win_len) for i in range(n)])
+
+
+def cents(col) -> Column:
+    """Integer cents of the money column `col` (a name or a Column):
+    floor(col * 100 + 0.5) cast to bigint. Every DuckDB oracle spells
+    the same floor before its integer cast, so both engines sum the
+    same integers — exact under any merge order up to 2^63 cents,
+    where a double money sum carries merge-order error past the 1e-4
+    rounding grid at sf 0.1 (PLANS.md "money-sum hardening")."""
+    col = F.col(col) if isinstance(col, str) else col
+    return F.floor(col * 100 + 0.5).cast("bigint")
+
+
+def cents_sum(col, digits: int = 4) -> Column:
+    """round(sum(cents(col)) / 100, digits): a money sum accumulated
+    as exact int64 cents and divided once."""
+    return F.round(F.sum(cents(col)).cast("double") / 100, digits)
+
+
+def unit_sum(units: Column, places: int) -> Column:
+    """round(sum(units) / 10^places, places) for integer money units
+    on a 10^-places grid (cents x percent factors). The sum runs in
+    decimal(38,0) — exact 128-bit, partial-aggregable, the match of
+    DuckDB's HUGEINT promotion — since a unit product reaches ~1.1e9
+    per row and an int64 sum would wrap silently at ~8.4e9 rows per
+    group."""
+    return F.round(
+        F.sum(units.cast("decimal(38,0)")).cast("double") / 10**places,
+        places,
+    )
+
+
+def md5_int(expr, start: int, digits: int) -> Column:
+    """The hex digits [start, start + digits) of md5(expr) as a
+    decimal string (callers cast it) — the cross-engine hash: DuckDB
+    reads the same slice as CAST(('0x' || substr(md5(...), start,
+    digits)) AS BIGINT), bit for bit."""
+    return F.conv(F.substring(F.md5(expr), start, digits), 16, 10)

@@ -1,17 +1,21 @@
-"""Shared kernels of the near-duplicate, graph-fixpoint and text
-families: both fixpoint loops fail loudly at their round bound, the
-peel takes one action per round, every query that claims a kernel runs
-it, the n-gram window matches a pure-Python reference, each text kernel
-is written once, and the registry keeps its docstrings."""
+"""Shared kernels of the near-duplicate, graph-fixpoint, text and
+exactness families: both fixpoint loops fail loudly at their round
+bound, the peel takes one action per round, every query that claims a
+kernel runs it, the n-gram window matches a pure-Python reference,
+each text and exactness kernel is written once, and the registry keeps
+its docstrings."""
 
 from __future__ import annotations
 
 import ast
 import inspect
+import io
 import os
+import re
 import subprocess
 import sys
 import textwrap
+import tokenize
 
 import pytest
 from pyspark.sql import functions as F
@@ -182,6 +186,58 @@ def _package_count(text: str) -> int:
 )
 def test_text_kernel_is_written_once(text):
     assert _package_count(text) == 1
+
+
+def _code_only(source: str) -> str:
+    """`source` with its comments and triple-quoted strings (docstrings,
+    SQL oracles) blanked out, line breaks kept."""
+    starts = [0]
+    for line in source.splitlines(keepends=True):
+        starts.append(starts[-1] + len(line))
+    chars = list(source)
+    for tok in tokenize.generate_tokens(io.StringIO(source).readline):
+        quoted = tok.string.lstrip("rbfuRBFU")[:3] in ('"""', "'''")
+        if tok.type == tokenize.COMMENT or (
+            tok.type == tokenize.STRING and quoted
+        ):
+            a = starts[tok.start[0] - 1] + tok.start[1]
+            b = starts[tok.end[0] - 1] + tok.end[1]
+            for i in range(a, b):
+                if chars[i] != "\n":
+                    chars[i] = " "
+    return "".join(chars)
+
+
+def _expression_count(pattern: str) -> int:
+    """Matches of the regex `pattern` in the package's Python code,
+    outside comments, docstrings and SQL strings."""
+    n = 0
+    pkg = os.path.join(REPO, "mrtweety_analytic_spark")
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(root, name)) as f:
+                    n += len(re.findall(pattern, _code_only(f.read())))
+    return n
+
+
+@pytest.mark.parametrize(
+    "pattern",
+    [
+        r"F\.floor\(.*\* 100 \+ 0\.5",
+        re.escape("F.conv("),
+        re.escape("0.7182725932495458"),
+        re.escape("33 - F.length(F.bin("),
+        re.escape('F.ceil(F.lit(q) * F.col("total"))'),
+        re.escape('F.col("cum_a").cast("double") / F.col("na")'),
+    ],
+    ids=[
+        "cents", "md5_int", "hll_alpha", "hll_register",
+        "cdf_quantile_pick", "cdf_distance",
+    ],
+)
+def test_exactness_kernel_is_written_once(pattern):
+    assert _expression_count(pattern) == 1
 
 
 def _string_expression(node: ast.expr) -> bool:

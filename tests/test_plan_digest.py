@@ -50,3 +50,47 @@ def test_digest_fails_on_a_query_that_raises(
         line.startswith("q_broken") and "differs" in line for line in lines
     )
     assert not any(line.startswith("q_ok") for line in lines)
+
+
+def test_digest_reports_schema_and_oracle_changes(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """--against names the kind of each difference: a query whose
+    result columns change differs in `schema`, one whose oracle SQL
+    changes differs in `oracle`, and a stream twin is compared by its
+    oracle alone."""
+    monkeypatch.setattr(
+        queries, "QUERIES",
+        {
+            "q_cols": lambda spark, sf_dir: spark.range(3),
+            "q_sql": lambda spark, sf_dir: spark.range(3),
+            "s_twin": None,
+        },
+    )
+    monkeypatch.setattr(
+        queries, "ORACLES", {"q_sql": "SELECT 1", "s_twin": "SELECT 2"}
+    )
+    base = tmp_path / "base.json"
+    assert digest_main("unused", str(base), None) == 0
+    assert set(json.loads(base.read_text())["s_twin"]) == {"oracle"}
+    monkeypatch.setattr(
+        queries, "QUERIES",
+        {
+            "q_cols": lambda spark, sf_dir: spark.range(3).toDF("n"),
+            "q_sql": lambda spark, sf_dir: spark.range(3),
+            "s_twin": None,
+        },
+    )
+    monkeypatch.setattr(
+        queries, "ORACLES", {"q_sql": "SELECT 10", "s_twin": "SELECT 2"}
+    )
+    capsys.readouterr()
+    assert digest_main("unused", str(tmp_path / "d.json"), str(base)) == 1
+    diffs = {
+        line.split()[0]: line.split("differs: ")[1]
+        for line in capsys.readouterr().out.splitlines()
+        if "differs: " in line
+    }
+    assert "schema" in diffs["q_cols"].split(", ")
+    assert diffs["q_sql"] == "oracle"
+    assert "s_twin" not in diffs

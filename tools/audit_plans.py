@@ -32,10 +32,14 @@ writes, per batch query, two sha256 digests of its initial physical
 plan: `shape` (operator names and tree structure only) and `full`
 (the plan text with expression ids, plan ids, lambda-variable
 suffixes and temp paths stripped, and the distinct-aggregate rewrite's
-gid numbering masked and its lists sorted). It exits 1, naming the
-query, if any batch query raises while it is planned. With --against it
-lists the queries whose digests differ from BASE.json, or that raised on
-either side, and exits 1 if any does.
+gid numbering masked and its lists sorted), and a `schema` digest of
+its result columns (names, types, nullability). Every registered name,
+stream or batch, also gets an `oracle` digest of its DuckDB oracle SQL
+(null for a rows-only query). It exits 1, naming the query, if any
+batch query raises while it is planned. With --against it lists the
+queries whose digests differ from BASE.json by kind (shape, full,
+schema, oracle), or that raised on either side, and exits 1 if any
+does.
 """
 
 from __future__ import annotations
@@ -173,10 +177,21 @@ def _sha(text: str) -> str:
     return hashlib.sha256(text.encode()).hexdigest()
 
 
+def schema_text(df) -> str:
+    """The result columns' names, types (nested nullability included)
+    and nullability, one JSON line."""
+    import json
+
+    return json.dumps(
+        [[f.name, f.dataType.jsonValue(), f.nullable] for f in df.schema],
+        sort_keys=True,
+    )
+
+
 def digest_main(sf_dir: str, out: str, against: str | None) -> int:
     import json
 
-    from mrtweety_analytic_spark.queries import QUERIES
+    from mrtweety_analytic_spark.queries import ORACLES, QUERIES
     from mrtweety_analytic_spark.session import get_spark
 
     spark = get_spark("plan-digest")
@@ -184,24 +199,27 @@ def digest_main(sf_dir: str, out: str, against: str | None) -> int:
     digests = {}
     n_err = 0
     for name in sorted(QUERIES):
+        oracle = ORACLES.get(name)
+        digests[name] = {"oracle": oracle and _sha(oracle)}
         if name.startswith("s_"):
             continue
         try:
             df = QUERIES[name](spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # noqa: BLE001
-            digests[name] = {"error": str(e)[:200]}
+            digests[name]["error"] = str(e)[:200]
             print(f"{name:40s} ERROR building plan: {e}"[:200])
             n_err += 1
             continue
-        digests[name] = {
-            "shape": _sha(plan_shape(plan)),
-            "full": _sha(normalize_plan(plan)),
-        }
+        digests[name].update(
+            shape=_sha(plan_shape(plan)),
+            full=_sha(normalize_plan(plan)),
+            schema=_sha(schema_text(df)),
+        )
     with open(out, "w") as f:
         json.dump(digests, f, indent=1, sort_keys=True)
         f.write("\n")
-    print(f"wrote {len(digests)} batch plan digests to {out}")
+    print(f"wrote the digests of {len(digests)} queries to {out}")
     if n_err:
         print(f"{n_err} batch queries raised while planned")
     if against is None:
@@ -218,7 +236,9 @@ def digest_main(sf_dir: str, out: str, against: str | None) -> int:
             print(f"{name:40s} {'added' if a is None else 'removed'}")
             continue
         kinds = [
-            k for k in ("shape", "full", "error") if a.get(k) != b.get(k)
+            k
+            for k in ("shape", "full", "schema", "oracle", "error")
+            if a.get(k) != b.get(k)
         ] or ["raised on both sides"]
         print(f"{name:40s} differs: {', '.join(kinds)}")
     print(f"{n_diff} of {len(digests)} digests differ from {against}")
