@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import LastHandle, cents, cents_sum, md5_int, unit_sum
+from ..util import LastHandle, cents, cents_sum, md5_unit, unit_sum
 
 # Supersession holder for q_date_spine's persisted daily rollup.
 _LAST_SPINE = LastHandle()
@@ -2327,17 +2327,10 @@ def q_agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = F.explode(
         F.sequence(F.lit(0), F.lit(_BOOT_B - 1))
     ).alias("b")
-    u = (
-        md5_int(
-            F.concat_ws(
-                ":",
-                F.col("event_id").cast("string"),
-                F.col("b").cast("string"),
-            ),
-            1,
-            12,
-        ).cast("bigint")
-        / F.lit(281474976710656.0)
+    u = md5_unit(
+        F.concat_ws(
+            ":", F.col("event_id").cast("string"), F.col("b").cast("string")
+        )
     )
     p = [F.lit(float(x)) for x in _POIS]
     w = (

@@ -54,6 +54,23 @@ def normalized_text(col: F.Column) -> F.Column:
     )
 
 
+def normalized_doc_text() -> F.Column:
+    """The documents' text under normalized_text: the content the
+    normalized exact tier fingerprints and q_multimodal_dedup encodes
+    as its canonical payload."""
+    return normalized_text(F.col("text"))
+
+
+def _norm_groups(docs: DataFrame, *aggs: F.Column) -> DataFrame:
+    """(fp, doc_id = min doc_id, *aggs) per normalized-text fingerprint
+    fp = md5(normalized_doc_text()): the keepers of the normalized
+    exact tier (q_dedup_normkey reports them, _exact_survivors keeps
+    them)."""
+    return docs.groupBy(F.md5(normalized_doc_text()).alias("fp")).agg(
+        F.min("doc_id").alias("doc_id"), *aggs
+    )
+
+
 @register(
     "q_dedup_exact",
     oracle="""
@@ -91,13 +108,8 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_normkey(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup dedup by normalized-content key (the cheap fuzzy tier)."""
     docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.groupBy(F.md5(normalized_text(F.col("text"))).alias("fp"))
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-        .select("doc_id", "n_copies")
+    return _norm_groups(docs, F.count(F.lit(1)).alias("n_copies")).select(
+        "doc_id", "n_copies"
     )
 
 
@@ -743,29 +755,36 @@ def _overlap_verify(common: DataFrame, sizes: DataFrame, denom: F.Column,
     )
 
 
+def _exact_survivors(docs: DataFrame) -> DataFrame:
+    """The exact tier: the rows of `docs` whose doc_id is the min of
+    its normalized-text fingerprint group."""
+    kept = _norm_groups(docs).select("doc_id")
+    return docs.join(kept, "doc_id", "left_semi")
+
+
+def _near_survivors(kd: DataFrame, threshold: float = 0.2) -> DataFrame:
+    """The near tier: `kd` without the larger doc_id (doc_b) of every
+    word-5-gram Jaccard >= threshold pair."""
+    dropped = (
+        _jaccard_pairs(kd, threshold)
+        .select(F.col("doc_b").alias("doc_id"))
+        .distinct()
+    )
+    return kd.join(dropped, "doc_id", "left_anti")
+
+
 def dedup_corpus(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(exact_survivors, final_survivors) of the two-tier dedup:
     exact tier keeps the min doc_id per normalized-text fingerprint;
     near tier drops the larger doc_id of every Jaccard >= 0.2 pair.
     The reusable core of q_dedup_pipeline and the CLI `dedup` command.
     """
-    exact_kept = (
-        docs.groupBy(F.md5(normalized_text(F.col("text"))).alias("fp"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
     # kd feeds the jaccard pair join, the anti-join AND the callers'
     # per-source counts — persist so the exact tier runs once per
     # call, not once per consumer (round-13 optimization pass).
-    kd = docs.join(exact_kept, "doc_id", "left_semi")
+    kd = _exact_survivors(docs)
     _LAST_DEDUP_CORPUS.persist(kd)
-    near_dropped = (
-        _jaccard_pairs(kd)
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-    )
-    final = kd.join(near_dropped, "doc_id", "left_anti")
-    return kd, final
+    return kd, _near_survivors(kd)
 
 
 @register(
@@ -1130,16 +1149,8 @@ def funnel_stages(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     dedup fdocs, near-dup-free final) — the reusable core behind
     q_corpus_funnel's stage counts and q_training_export's
     curate->rebalance->shard composite."""
-    from .textops import STOPWORDS, _is_en_predicate, _lang_hit_cols, tokens
+    from .textops import _quality_gate
 
-    metrics = tokens(docs).groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        (
-            F.sum(F.when(F.col("term").isin(*STOPWORDS), 1).otherwise(0))
-            / F.count(F.lit(1))
-        ).alias("stop_ratio"),
-        *_lang_hit_cols(),
-    )
     # q feeds the exact-dedup groupBy AND the survivor semi-join;
     # fdocs feeds the jaccard pair join AND the anti-join (and the
     # callers' stage counts) — persist both so the tokenize+metrics
@@ -1148,29 +1159,10 @@ def funnel_stages(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     # at 100 TB the flip-point rule of _shingle_index applies, but
     # here the re-derived work is the full quality-gate aggregation,
     # not a map-side tokenization — persist is the right side).
-    q = (
-        docs.join(metrics, "doc_id")
-        .filter(
-            _is_en_predicate()
-            & (F.col("stop_ratio") <= 0.5)
-            & F.col("n_tokens").between(10, 500)
-        )
-        .select(*docs.columns)
-    )
-    exact_kept = (
-        q.groupBy(F.md5(normalized_text(F.col("text"))).alias("fp"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    fdocs = q.join(exact_kept, "doc_id", "left_semi")
+    q = _quality_gate(docs).select(*docs.columns)
+    fdocs = _exact_survivors(q)
     _LAST_FUNNEL.persist(q, fdocs)
-    near_dropped = (
-        _jaccard_pairs(fdocs)
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-    )
-    final = fdocs.join(near_dropped, "doc_id", "left_anti")
-    return q, fdocs, final
+    return q, fdocs, _near_survivors(fdocs)
 
 
 @register(

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..util import md5_int
+from ..util import md5_unit
 
 # Case-insensitive NOT-IN blacklist ≙ reference WORD_BLACKLIST
 # semantics (SparkApplication.scala:29,77), applied to event types.
@@ -283,11 +283,7 @@ def q_sample_ht_total(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_totalprice")
             / (F.col("tot") / F.col("n") * 20),
         ).alias("p"),
-        (
-            md5_int(F.col("o_orderkey").cast("string"), 1, 12)
-            .cast("bigint")
-            / F.lit(281474976710656.0)
-        ).alias("u"),
+        md5_unit(F.col("o_orderkey").cast("string")).alias("u"),
     )
     samp = s.filter(F.col("u") < F.col("p")).agg(
         F.count(F.lit(1)).alias("n_sampled"),

@@ -24,7 +24,7 @@ from pyspark.sql.window import Window as W
 
 from ..registry import register
 from ..sources import load_table
-from ..util import LastHandle, md5_int, ngram_windows
+from ..util import LastHandle, md5_int, md5_unit, ngram_windows
 
 # Supersession holders for this module's persisted frames: repeated
 # bench/verify calls keep one generation each in the block manager.
@@ -479,8 +479,13 @@ def q_text_passage_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # '0x'-prefixed cast produce the SAME value (parity pytest-pinned),
 # which is what makes hash-gated sampling reproducible ACROSS ENGINES
 # — the property df.sample()/TABLESAMPLE can never give.
-_HASH48 = "conv(substring(md5(cast(doc_id AS string)), 1, 12), 16, 10)"
 _HASH48_SQL = "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT"
+
+
+def _hash48() -> F.Column:
+    """The Spark side of _HASH48_SQL: doc_id's 48-bit md5 address."""
+    return md5_int(F.col("doc_id").cast("string"), 1, 12).cast("bigint")
+
 
 N_SHARDS = 8
 
@@ -513,8 +518,7 @@ def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     training data.
     """
     docs = load_table(spark, sf_dir, "documents")
-    h = F.expr(_HASH48).cast("bigint")
-    with_h = docs.select("doc_id", h.alias("h"))
+    with_h = docs.select("doc_id", _hash48().alias("h"))
     w = W.partitionBy("shard").orderBy("h", "doc_id")
     return (
         with_h.withColumn("shard", F.pmod(F.col("h"), F.lit(N_SHARDS)))
@@ -581,31 +585,21 @@ def q_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixes and quality-tier mixes — the mix key is just a column.
     """
     docs = load_table(spark, sf_dir, "documents")
-    avail = docs.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("double").alias("n_avail")
-    )
-    return _mix_report(spark, docs, avail)
+    return _mix_report(spark, docs, _lang_avail(docs))
 
 
-def _mix_report(spark: SparkSession, docs: DataFrame, avail: DataFrame) -> DataFrame:
-    """The rebalance arithmetic downstream of the availability census
-    (k = min(avail/target) binding constraint, per-lang keep rate,
-    md5-gate kept census over `docs`) — shared by q_mix_rebalance
-    (avail aggregated in-plan) and s_mix_rebalance (avail replayed
-    from streaming counters), so the live monitor's rates equal the
-    batch plan's by construction."""
+def _mix_rates(spark: SparkSession, avail: DataFrame) -> DataFrame:
+    """(lang, n_avail, rate) from the availability census `avail`
+    (lang, n_avail): k = min(avail/target) is the binding constraint
+    and each MIX_TARGETS language keeps rate = min(1, k·target/avail)
+    of its documents."""
     targets = spark.createDataFrame(
         list(MIX_TARGETS.items()), "lang string, target double"
     )
-    k = (
-        avail.join(targets, "lang")
-        .agg(F.min(F.col("n_avail") / F.col("target")).alias("k"))
+    k = avail.join(targets, "lang").agg(
+        F.min(F.col("n_avail") / F.col("target")).alias("k")
     )
-    # rates feeds two consumers (the keep filter and the final report
-    # join); persist the language-sized frame so the avail/k subtree
-    # — two scans of documents otherwise — computes once (the
-    # engine's persist-multi-consumer-aggregates rule).
-    rates = (
+    return (
         avail.join(targets, "lang")
         .crossJoin(F.broadcast(k))
         .select(
@@ -616,11 +610,30 @@ def _mix_report(spark: SparkSession, docs: DataFrame, avail: DataFrame) -> DataF
             ).alias("rate"),
         )
     )
+
+
+def _mix_kept(docs: DataFrame, rates: DataFrame) -> DataFrame:
+    """The rows of `docs` under their language's keep rate by the
+    48-bit md5 gate on doc_id (a `rate` column is added)."""
+    return docs.join(F.broadcast(rates.select("lang", "rate")), "lang").where(
+        md5_unit(F.col("doc_id").cast("string")) < F.col("rate")
+    )
+
+
+def _mix_report(spark: SparkSession, docs: DataFrame, avail: DataFrame) -> DataFrame:
+    """The rebalance arithmetic downstream of the availability census
+    (_mix_rates, then the md5-gate kept census over `docs`) — shared
+    by q_mix_rebalance (avail aggregated in-plan) and s_mix_rebalance
+    (avail replayed from streaming counters), so the live monitor's
+    rates equal the batch plan's by construction."""
+    # rates feeds two consumers (the keep filter and the final report
+    # join); persist the language-sized frame so the avail/k subtree
+    # — two scans of documents otherwise — computes once (the
+    # engine's persist-multi-consumer-aggregates rule).
+    rates = _mix_rates(spark, avail)
     _LAST_RATES.persist(rates)
-    u = F.expr(_HASH48).cast("bigint") / F.lit(281474976710656.0)
     kept = (
-        docs.join(F.broadcast(rates.select("lang", "rate")), "lang")
-        .where(u < F.col("rate"))
+        _mix_kept(docs, rates)
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_kept"))
     )
@@ -632,6 +645,27 @@ def _mix_report(spark: SparkSession, docs: DataFrame, avail: DataFrame) -> DataF
             F.round("rate", 6).alias("rate"),
             F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
         )
+    )
+
+
+def _lang_avail(docs: DataFrame) -> DataFrame:
+    """(lang, n_avail): the availability census of `docs`."""
+    return docs.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("double").alias("n_avail")
+    )
+
+
+def _shard() -> F.Column:
+    """The training shard of doc_id (q_shard_assign's shard)."""
+    return F.pmod(_hash48(), F.lit(N_SHARDS))
+
+
+def _rebalanced_shards(spark: SparkSession, survivors: DataFrame) -> DataFrame:
+    """`survivors` mix-rebalanced over their own availability census
+    and shard-addressed: all columns plus `shard`."""
+    rates = _mix_rates(spark, _lang_avail(survivors))
+    return (
+        _mix_kept(survivors, rates).drop("rate").withColumn("shard", _shard())
     )
 
 
@@ -806,33 +840,7 @@ def training_export_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs once, not twice (the engine's multi-consumer rule).
     final = funnel_stages(docs)[2]
     _LAST_EXPORT.persist(final)
-    targets = spark.createDataFrame(
-        list(MIX_TARGETS.items()), "lang string, target double"
-    )
-    avail = final.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("double").alias("n_avail")
-    )
-    k = avail.join(targets, "lang").agg(
-        F.min(F.col("n_avail") / F.col("target")).alias("k")
-    )
-    rates = (
-        avail.join(targets, "lang")
-        .crossJoin(F.broadcast(k))
-        .select(
-            "lang",
-            F.least(
-                F.lit(1.0), F.col("k") * F.col("target") / F.col("n_avail")
-            ).alias("rate"),
-        )
-    )
-    u = F.expr(_HASH48).cast("bigint") / F.lit(281474976710656.0)
-    shard = F.pmod(F.expr(_HASH48).cast("bigint"), F.lit(N_SHARDS))
-    return (
-        final.join(F.broadcast(rates), "lang")
-        .where(u < F.col("rate"))
-        .drop("rate")
-        .withColumn("shard", shard)
-    )
+    return _rebalanced_shards(spark, final)
 
 
 _LAST_EXPORT_FULL = LastHandle()
@@ -1020,7 +1028,6 @@ def training_export_full_frames(
         .select(gexpr)
         .distinct()
     )
-    shard = F.pmod(F.expr(_HASH48).cast("bigint"), F.lit(N_SHARDS))
     # Restrict the shingle stream to train docs BEFORE the benchmark
     # join (semi-join on the doc_id key), then broadcast the tiny
     # benchmark side — the corpus-side shingles never shuffle.
@@ -1031,7 +1038,7 @@ def training_export_full_frames(
         .join(F.broadcast(bench), "shingle")
         .select("doc_id")
         .distinct()
-        .withColumn("shard", shard)
+        .withColumn("shard", _shard())
     )
     # clean feeds two consumers (availability agg + keep join);
     # contaminated feeds two (anti-join + manifest union) — persist
@@ -1039,33 +1046,7 @@ def training_export_full_frames(
     # multi-consumer rule).
     clean = tnb.join(contaminated, "doc_id", "left_anti")
     _LAST_EXPORT_FULL.persist(tnb, contaminated, clean)
-    targets = spark.createDataFrame(
-        list(MIX_TARGETS.items()), "lang string, target double"
-    )
-    avail = clean.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("double").alias("n_avail")
-    )
-    k = avail.join(targets, "lang").agg(
-        F.min(F.col("n_avail") / F.col("target")).alias("k")
-    )
-    rates = (
-        avail.join(targets, "lang")
-        .crossJoin(F.broadcast(k))
-        .select(
-            "lang",
-            F.least(
-                F.lit(1.0), F.col("k") * F.col("target") / F.col("n_avail")
-            ).alias("rate"),
-        )
-    )
-    u = F.expr(_HASH48).cast("bigint") / F.lit(281474976710656.0)
-    kept = (
-        clean.join(F.broadcast(rates), "lang")
-        .where(u < F.col("rate"))
-        .drop("rate")
-        .withColumn("shard", shard)
-    )
-    return kept, contaminated
+    return _rebalanced_shards(spark, clean), contaminated
 
 
 @register(

@@ -245,10 +245,10 @@ def q_multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes never shuffle, which is what makes this viable on a 100 TB
     media lake.
     """
-    from .dedup import normalized_text
+    from .dedup import normalized_doc_text
 
     docs = load_table(spark, sf_dir, "documents")
-    payload = F.encode(normalized_text(F.col("text")), "UTF-8")
+    payload = F.encode(normalized_doc_text(), "UTF-8")
     return (
         docs.select("doc_id", F.md5(payload).alias("content_md5"))
         .groupBy("content_md5")

@@ -549,6 +549,27 @@ def _prep_hits_sql() -> str:
     )
 
 
+def _quality_gate(docs: DataFrame) -> DataFrame:
+    """The curation quality gate: `docs` joined with its per-doc
+    token metrics (n_tokens, stop_ratio, h_<lang>), kept when the
+    language-ID says en, stop_ratio <= 0.5 and the doc has 10..500
+    tokens. q_text_prep_pipeline and dedup.funnel_stages each project
+    their own columns from it."""
+    metrics = tokens(docs).groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_tokens"),
+        (
+            F.sum(F.when(F.col("term").isin(*STOPWORDS), 1).otherwise(0))
+            / F.count(F.lit(1))
+        ).alias("stop_ratio"),
+        *_lang_hit_cols(),
+    )
+    return docs.join(metrics, "doc_id").filter(
+        _is_en_predicate()
+        & (F.col("stop_ratio") <= 0.5)
+        & F.col("n_tokens").between(10, 500)
+    )
+
+
 @register(
     "q_text_prep_pipeline",
     oracle=f"""
@@ -596,27 +617,10 @@ def q_text_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     two shuffles at any corpus size.
     """
     docs = load_table(spark, sf_dir, "documents")
-    metrics = tokens(docs).groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        (
-            F.sum(F.when(F.col("term").isin(*STOPWORDS), 1).otherwise(0))
-            / F.count(F.lit(1))
-        ).alias("stop_ratio"),
-        *_lang_hit_cols(),
-    )
-    is_en = _is_en_predicate()
-    kept = (
-        docs.join(metrics, "doc_id")
-        .filter(
-            is_en
-            & (F.col("stop_ratio") <= 0.5)
-            & F.col("n_tokens").between(10, 500)
-        )
-        .select(
-            "source",
-            "n_tokens",
-            _bpe_est().cast("long").alias("bpe"),
-        )
+    kept = _quality_gate(docs).select(
+        "source",
+        "n_tokens",
+        _bpe_est().cast("long").alias("bpe"),
     )
     raw = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_raw"))
     rep = kept.groupBy("source").agg(
@@ -630,6 +634,20 @@ def q_text_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
         F.coalesce("avg_tokens", F.lit(0.0)).alias("avg_tokens"),
         F.coalesce("total_bpe", F.lit(0)).alias("total_bpe"),
+    )
+
+
+_EMAIL = r"[a-z0-9._]+@[a-z0-9.]+"
+
+
+def _redact(col: F.Column) -> F.Column:
+    """`col` with email and phone-number matches replaced by
+    placeholder tokens: the PII scrub of q_text_redact and the
+    pipeline runner's `redact` stage."""
+    return F.regexp_replace(
+        F.regexp_replace(col, _EMAIL, "<EMAIL>"),
+        r"\b\d{3}[- ]\d{4}\b",
+        "<PHONE>",
     )
 
 
@@ -653,18 +671,11 @@ def q_text_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     full redacted text, not a sample.
     """
     docs = load_table(spark, sf_dir, "documents")
-    redacted = F.regexp_replace(
-        F.regexp_replace(
-            F.col("text"), r"[a-z0-9._]+@[a-z0-9.]+", "<EMAIL>"
-        ),
-        r"\b\d{3}[- ]\d{4}\b",
-        "<PHONE>",
-    )
     return docs.select(
         "doc_id",
-        F.md5(redacted).alias("redacted_md5"),
+        F.md5(_redact(F.col("text"))).alias("redacted_md5"),
         F.size(
-            F.regexp_extract_all("text", F.lit(r"[a-z0-9._]+@[a-z0-9.]+"), 0)
+            F.regexp_extract_all("text", F.lit(_EMAIL), 0)
         ).alias("n_emails"),
     )
 

@@ -22,12 +22,13 @@ CLI: python -m mrtweety_analytic_spark pipeline --spec spec.json
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.dedup import normalized_text, _jaccard_pairs
+from .operators import textops
+from .operators.dedup import _exact_survivors, _near_survivors
 from .sources import load_table
 
 StageFn = Callable[[DataFrame, dict], DataFrame]
@@ -52,33 +53,15 @@ def _min_tokens(df: DataFrame, p: dict) -> DataFrame:
 
 
 def _redact(df: DataFrame, p: dict) -> DataFrame:
-    # same patterns as q_text_redact (oracle-certified there)
-    redacted = F.regexp_replace(
-        F.regexp_replace(
-            F.col("text"), r"[a-z0-9._]+@[a-z0-9.]+", "<EMAIL>"
-        ),
-        r"\b\d{3}[- ]\d{4}\b",
-        "<PHONE>",
-    )
-    return df.withColumn("text", redacted)
+    return df.withColumn("text", textops._redact(F.col("text")))
 
 
 def _dedup_exact(df: DataFrame, p: dict) -> DataFrame:
-    kept = (
-        df.groupBy(F.md5(normalized_text(F.col("text"))).alias("fp"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    return df.join(kept, "doc_id", "left_semi")
+    return _exact_survivors(df)
 
 
 def _dedup_near(df: DataFrame, p: dict) -> DataFrame:
-    dropped = (
-        _jaccard_pairs(df, threshold=float(p.get("threshold", 0.2)))
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-    )
-    return df.join(dropped, "doc_id", "left_anti")
+    return _near_survivors(df, float(p.get("threshold", 0.2)))
 
 
 def _sample_mod(df: DataFrame, p: dict) -> DataFrame:
@@ -121,22 +104,34 @@ STAGES: dict[str, StageFn] = {
 }
 
 
-def compile_pipeline(
+def _steps(
     spark: SparkSession, sf_dir: str, spec: list[dict]
-) -> DataFrame:
-    """Fold the spec's stages over the documents table — one lazy
-    plan, validated up front so a typo fails before any job runs."""
+) -> Iterator[tuple[str, DataFrame]]:
+    """("input", documents), then (stage, frame) after each step of
+    the spec. The whole spec is validated before the documents table
+    is loaded, so a typo in stage N fails before any job runs — in
+    the audit mode too, where it would otherwise cost N-1 counted
+    stages first (ADVICE r05 item 5)."""
     unknown = [s.get("stage") for s in spec if s.get("stage") not in STAGES]
     if unknown:
         raise ValueError(
             f"unknown pipeline stage(s) {unknown}; known: {sorted(STAGES)}"
         )
     df = load_table(spark, sf_dir, "documents")
+    yield "input", df
     for step in spec:
         df = STAGES[step["stage"]](
             df, {**step, "_spark": spark, "_sf_dir": sf_dir}
         )
-    return df
+        yield step["stage"], df
+
+
+def compile_pipeline(
+    spark: SparkSession, sf_dir: str, spec: list[dict]
+) -> DataFrame:
+    """Fold the spec's stages over the documents table — one lazy
+    plan, validated up front so a typo fails before any job runs."""
+    return list(_steps(spark, sf_dir, spec))[-1][1]
 
 
 def run_pipeline_with_report(
@@ -145,19 +140,7 @@ def run_pipeline_with_report(
     """Like compile_pipeline, but also counts survivors after each
     stage (one job per stage — the audit mode; production runs the
     single-plan compile_pipeline and counts nothing)."""
-    # Validate the WHOLE spec before running any job (same up-front
-    # check as compile_pipeline) — a typo in stage N must not cost
-    # N-1 counted stages first (ADVICE r05 item 5).
-    unknown = [s.get("stage") for s in spec if s.get("stage") not in STAGES]
-    if unknown:
-        raise ValueError(
-            f"unknown pipeline stage(s) {unknown}; known: {sorted(STAGES)}"
-        )
-    df = load_table(spark, sf_dir, "documents")
-    report: list[tuple[str, int]] = [("input", df.count())]
-    for step in spec:
-        df = STAGES[step["stage"]](
-            df, {**step, "_spark": spark, "_sf_dir": sf_dir}
-        )
-        report.append((step["stage"], df.count()))
+    report: list[tuple[str, int]] = []
+    for name, df in _steps(spark, sf_dir, spec):
+        report.append((name, df.count()))
     return df, report

@@ -16,9 +16,15 @@ def _release(df: DataFrame) -> None:
     # localCheckpoint blocks are NOT in the CacheManager, so
     # DataFrame.unpersist() is a no-op on them; the persisted RDD
     # hangs off the LogicalRDD leaf and must be released there.
+    # SparkContext.unpersistRDD (private[spark] in Scala, public to
+    # py4j) frees the same blocks as RDD.unpersist without its
+    # "lineage has been truncated" warning, which a superseded
+    # generation (never read again) would log on every release.
     plan = df._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(
+            plan.rdd().id(), False
+        )
     else:
         df.unpersist()
 
@@ -183,3 +189,10 @@ def md5_int(expr, start: int, digits: int) -> Column:
     reads the same slice as CAST(('0x' || substr(md5(...), start,
     digits)) AS BIGINT), bit for bit."""
     return F.conv(F.substring(F.md5(expr), start, digits), 16, 10)
+
+
+def md5_unit(expr) -> Column:
+    """md5_int(expr, 1, 12) as a bigint / 2^48: the cross-engine
+    uniform in [0, 1) of the hash-gated samplers. DuckDB divides the
+    same 48-bit integer by 281474976710656.0."""
+    return md5_int(expr, 1, 12).cast("bigint") / F.lit(281474976710656.0)

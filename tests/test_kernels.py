@@ -181,8 +181,14 @@ def _package_count(text: str) -> int:
         "vals = sorted(counters.values()",
         'rlike("^[a-z]{2,}$")',
         '"the", "a", "an", "and", "or", "of", "to", "in", "is", "it"',
+        'normalized_text(F.col("text"))',
+        '(F.col("stop_ratio") <= 0.5)',
+        '"<EMAIL>"',
     ],
-    ids=["ngram_window", "misra_gries_merge", "bpe_word", "stopwords"],
+    ids=[
+        "ngram_window", "misra_gries_merge", "bpe_word", "stopwords",
+        "normalized_text", "quality_gate", "redact",
+    ],
 )
 def test_text_kernel_is_written_once(text):
     assert _package_count(text) == 1
@@ -230,14 +236,24 @@ def _expression_count(pattern: str) -> int:
         re.escape("33 - F.length(F.bin("),
         re.escape('F.ceil(F.lit(q) * F.col("total"))'),
         re.escape('F.col("cum_a").cast("double") / F.col("na")'),
+        re.escape('F.col("doc_b").alias("doc_id")'),
+        re.escape('F.col("k") * F.col("target") / F.col("n_avail")'),
+        re.escape("list(MIX_TARGETS.items())"),
+        re.escape("F.lit(281474976710656.0)"),
     ],
     ids=[
         "cents", "md5_int", "hll_alpha", "hll_register",
-        "cdf_quantile_pick", "cdf_distance",
+        "cdf_quantile_pick", "cdf_distance", "near_tier", "mix_rate",
+        "mix_targets", "md5_unit",
     ],
 )
 def test_exactness_kernel_is_written_once(pattern):
     assert _expression_count(pattern) == 1
+
+
+def test_md5_hash_has_no_sql_string_copy():
+    # the 48-bit doc_id hash goes through util.md5_int, not F.expr
+    assert _expression_count(re.escape("F.expr(_HASH48)")) == 0
 
 
 def _string_expression(node: ast.expr) -> bool:
@@ -302,3 +318,32 @@ def test_exit_after_gateway_shutdown_is_quiet():
     )
     assert run.returncode == 0, run.stderr[-2000:]
     assert "Traceback" not in run.stderr, run.stderr[-2000:]
+
+
+_SUPERSEDE_CHECKPOINT = """
+import sys
+sys.path.insert(0, {repo!r})
+from mrtweety_analytic_spark.session import get_spark
+from mrtweety_analytic_spark.util import LastHandle
+
+spark = get_spark("checkpoint-release")
+storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+handle = LastHandle()
+for _ in range(2):
+    handle.replace(spark.range(10).localCheckpoint())
+print("held", len(storage()))
+handle.clear()
+print("after", len(storage()))
+"""
+
+
+def test_superseded_checkpoint_release_is_quiet():
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEM="1g")
+    run = subprocess.run(
+        [sys.executable, "-c", _SUPERSEDE_CHECKPOINT.format(repo=REPO)],
+        capture_output=True, text=True, timeout=300, env=env,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    # the second generation's blocks are held, then freed
+    assert "held 1" in run.stdout and "after 0" in run.stdout, run.stdout
+    assert "was locally checkpointed" not in run.stderr, run.stderr[-2000:]

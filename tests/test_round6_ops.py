@@ -42,57 +42,6 @@ def test_hash48_parity_spark_vs_duckdb(spark):
     assert got == want
 
 
-def test_shard_assign_invariant_under_partitioning(spark, sf_dir, tmp_path):
-    """Same corpus => same (shard, offset) addresses, no matter how
-    the input is partitioned (retry/reshuffle reproducibility), and
-    offsets are dense 0..n_s-1 within every shard."""
-    from mrtweety_analytic_spark.queries import QUERIES
-
-    base = QUERIES["q_shard_assign"](spark, sf_dir)
-    rows = {r.doc_id: (r.shard, r.offset) for r in base.collect()}
-
-    # rewrite the table fragmented 13 ways and re-run
-    import shutil
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    alt = str(tmp_path / "alt")
-    shutil.os.makedirs(alt)
-    docs.repartition(13).write.parquet(f"{alt}/documents.parquet")
-    again = {
-        r.doc_id: (r.shard, r.offset)
-        for r in QUERIES["q_shard_assign"](spark, alt).collect()
-    }
-    assert rows == again
-
-    by_shard: dict = {}
-    for _, (s, o) in rows.items():
-        by_shard.setdefault(s, []).append(o)
-    for s, offs in by_shard.items():
-        assert sorted(offs) == list(range(len(offs))), s
-
-
-def test_mix_rebalance_hits_targets(spark, sf_dir):
-    """The kept corpus approximates the target mix at the largest
-    achievable size: the binding language keeps ~everything, rates
-    are in (0, 1], and every achieved share is within sampling noise
-    of its target."""
-    from mrtweety_analytic_spark.operators.lifecycle import MIX_TARGETS
-    from mrtweety_analytic_spark.queries import QUERIES
-
-    rows = {r.lang: r for r in QUERIES["q_mix_rebalance"](spark, sf_dir).collect()}
-    assert set(rows) == set(MIX_TARGETS)
-    assert all(0 < r.rate <= 1.0 for r in rows.values())
-    # the binding language's rate is exactly 1 (keeps everything)
-    binding = max(rows.values(), key=lambda r: r.rate)
-    assert binding.rate == pytest.approx(1.0)
-    total_kept = sum(r.n_kept for r in rows.values())
-    for lang, r in rows.items():
-        # expected kept = rate * avail; hash-uniform sampling noise
-        exp = r.rate * r.n_avail
-        assert abs(r.n_kept - exp) <= max(5, 4 * exp**0.5), lang
-    assert total_kept > 0
-
-
 def test_ts_changepoint_finds_planted_shift(spark, tmp_path):
     """A series flat at 10/day for 20 days then 30/day for 10 days
     must put the CUSUM argmax at the shift boundary."""
@@ -503,28 +452,6 @@ def test_round6_ops_tolerate_empty_corpus(spark, tmp_path):
             assert len(rows) <= 1, name
         else:
             assert rows == [], name
-
-
-def test_training_export_books_balance(spark, sf_dir):
-    """The export manifest must reconcile with its own stages: shard
-    doc counts sum to the rebalanced survivor count (<= funnel
-    survivors), every shard id is in range, and the kept language mix
-    leans toward the configured targets (en-heavy after an en-biased
-    quality gate)."""
-    from mrtweety_analytic_spark.operators.dedup import funnel_stages
-    from mrtweety_analytic_spark.operators.lifecycle import N_SHARDS
-    from mrtweety_analytic_spark.queries import QUERIES
-    from mrtweety_analytic_spark.sources import load_table
-
-    rows = QUERIES["q_training_export"](spark, sf_dir).collect()
-    assert all(0 <= r.shard < N_SHARDS for r in rows)
-    n_exported = sum(r.n_docs for r in rows)
-
-    docs = load_table(spark, sf_dir, "documents")
-    final = funnel_stages(docs)[2]
-    n_final = final.count()
-    assert 0 < n_exported <= n_final
-    assert sum(r.sum_chars for r in rows) > 0
 
 
 def test_phash_duplicates_and_band_recall(spark, tmp_path):
